@@ -10,7 +10,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -43,7 +43,7 @@ final class DuckDbSqlExecutor(
     session: SparkSession,
     val dbPath: String,
     override val splitCount: Int = 1,
-    val statsRowCap: Long = 1000000L,
+    override val statsRowCap: Long = 1000000L,
     // Boundary-fetch format switch: results up to this many rows stream
     // as line-JSON (zero file overhead for the common small fragment);
     // rows PAST it spill engine-side to a parquet file the task reads
@@ -59,15 +59,6 @@ final class DuckDbSqlExecutor(
 
   override def computeContext: Option[String] = Some(s"duckdb:$dbPath")
   override def dialect: SqlDialect = graft.federation.sql.DuckDbDialect
-
-  /** Every query SQL shipped to the engine, oldest first (driver-side
-    * probes and task-side fetches both record here in local mode) — lets
-    * tests assert the exact wire SQL, as the mock executor does. */
-  val executedSql = new scala.collection.mutable.ArrayBuffer[String]
-
-  /** Driver-side DML/DDL statement log, same contract as the JDBC
-    * executor's `dmlLog`. */
-  val dmlLog = new scala.collection.mutable.ArrayBuffer[String]
 
   override def execute(sql: String, schema: StructType): RDD[InternalRow] =
     executeWith(sql, schema, threads = 0)
@@ -181,8 +172,8 @@ final class DuckDbSqlExecutor(
   // without a cache each gate invocation pays one subprocess DESCRIBE
   // round-trip PER TABLE (~100 ms each; the r9 bench sweep showed every
   // fed_duckdb_* gate inflate ~150 ms when a 7th table joined the
-  // harness). Schemas and the table list are stable between DDL, so
-  // [[createTable]] is the only invalidation point.
+  // harness). Schemas and the listings are stable between DDL, so
+  // [[forget]] (DDL, REFRESH) is the only invalidation point.
   private val schemaCache =
     scala.collection.concurrent.TrieMap.empty[String, StructType]
   @volatile private var tableNamesCache: Option[Seq[String]] = None
@@ -234,152 +225,71 @@ final class DuckDbSqlExecutor(
     schemaCache.getOrElseUpdate(ref.toString,
       DuckDbProcess.describe(dbPath, s"SELECT * FROM ${ref.sql(dialect)}"))
 
-  // Option-valued cache: `Some(None)` pins the at-cap "not small" outcome
-  // (probe once per executor lifetime); transient failures are not cached.
-  private val statsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Statistics]]
-
-  override def statistics(ref: RemoteTableRef): Option[Statistics] =
-    probeCached(ref.toString, ref.sql(dialect), tableSchema(ref))
-
-  override def fragmentStatistics(sql: String,
-      schema: StructType): Option[Statistics] =
-    probeCached(sql, s"($sql) frag_src", schema)
-
-  private def probeCached(key: String, fromSql: String,
-      schema: => StructType): Option[Statistics] =
-    statsCache.get(key).getOrElse {
-      try {
-        val result = probe(fromSql, schema)
-        statsCache.put(key, result)
-        result
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
-
-  /** Bounded COUNT + string-bytes probe, identical in shape to the JDBC
-    * executor's: relations at the cap report no stats (they are not
-    * broadcast candidates, and planning must never pay a full scan). */
-  private def probe(fromSql: String,
-      schema: StructType): Option[Statistics] = {
-    val strCols = schema.fields.filter(_.dataType == StringType)
-    val sums = strCols.map(f =>
-      s"SUM(LENGTH(${dialect.quoteIfNeeded(f.name)}))")
-    val capped = s"(SELECT * FROM $fromSql LIMIT $statsRowCap) stats_probe"
-    val items = (Seq("COUNT(*)") ++ sums).mkString(", ")
-    val rows = runQuery(s"SELECT $items FROM $capped")
-    val row = rows.head
-    val n = row.get(0).asLong()
-    if (n >= statsRowCap) None
-    else {
-      val strBytes = strCols.indices
-        .map(i => if (row.get(i + 1).isNull) 0L else row.get(i + 1).asLong())
-        .sum
-      val fixed = schema.fields.filterNot(_.dataType == StringType)
-        .map(_.dataType.defaultSize).sum
-      val size = BigInt(n) * fixed + BigInt(strBytes) +
-        BigInt(n) * strCols.length * 8
-      Some(Statistics(sizeInBytes = size.max(1), rowCount = Some(BigInt(n))))
-    }
-  }
-
-  private val colStatsCache =
-    scala.collection.concurrent.TrieMap.empty[String,
-      Map[String, org.apache.spark.sql.catalyst.plans.logical.ColumnStat]]
+  override protected def queryRow(sql: String,
+      schema: StructType): InternalRow =
+    DuckDbProcess.convertRow(runQuery(sql).head, schema.fields)
 
   /** Per-column CBO probes — ONE engine-side aggregate for every column
     * (DuckDB has no single-DISTINCT restriction), over the same bounded
     * sample as the row probe. Same type policy as the JDBC executor:
-    * numeric/temporal min+max, strings ndv+lengths only. */
-  override def columnStatistics(ref: RemoteTableRef): Map[String,
-      org.apache.spark.sql.catalyst.plans.logical.ColumnStat] =
-    colStatsCache.getOrElseUpdate(ref.toString, {
-      import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
-      try {
-        statistics(ref).flatMap(_.rowCount) match {
-          case None =>
-            // at the row cap the TOTALS are unknown, but per-column ndv
-            // over the bounded sample still RANKS columns by cardinality
-            // — which is all the split-key chooser needs (a 3-value key
-            // vs a dense one keeps its order under any sampling). One
-            // engine aggregate, cached for the executor lifetime.
-            val schema = tableSchema(ref)
-            val eligible = schema.fields.filter(f => f.dataType match {
-              case ByteType | ShortType | IntegerType | LongType => true
-              case _ => false
-            })
-            if (eligible.isEmpty) Map.empty
-            else {
-              val items = eligible.map(f =>
-                s"COUNT(DISTINCT ${dialect.quoteIfNeeded(f.name)})")
-              val sql = s"SELECT ${items.mkString(", ")} FROM " +
-                s"(SELECT * FROM ${ref.sql(dialect)} LIMIT $statsRowCap) cs"
-              val row = runQuery(sql).head
-              eligible.zipWithIndex.map { case (f, i) =>
-                f.name -> org.apache.spark.sql.catalyst.plans.logical
-                  .ColumnStat(distinctCount = Some(BigInt(row.get(i).asLong())))
-              }.toMap
-            }
-          case Some(rows) =>
-            val schema = tableSchema(ref)
-            val eligible = schema.fields.filter(f => f.dataType match {
-              case StringType | ByteType | ShortType | IntegerType |
-                   LongType | FloatType | DoubleType | DateType |
-                   TimestampNTZType | _: DecimalType => true
-              case _ => false
-            })
-            // no early `return` here: a non-local return would unwind
-            // through getOrElseUpdate and skip caching the empty result
-            if (eligible.isEmpty) Map.empty
-            else {
-            val items = eligible.flatMap { f =>
-              val q = dialect.quoteIfNeeded(f.name)
-              f.dataType match {
-                case StringType => Seq(s"COUNT(DISTINCT $q)", s"COUNT($q)",
-                  s"MAX(LENGTH($q))", s"SUM(LENGTH($q))")
-                case _ => Seq(s"COUNT(DISTINCT $q)", s"COUNT($q)",
-                  s"MIN($q)", s"MAX($q)")
-              }
-            }
-            val sql = s"SELECT ${items.mkString(", ")} FROM " +
-              s"(SELECT * FROM ${ref.sql(dialect)} LIMIT $statsRowCap) cs"
-            val row = runQuery(sql).head
-            eligible.zipWithIndex.map { case (f, i) =>
-              val b = i * 4
-              val ndv = row.get(b).asLong()
-              val nonNull = row.get(b + 1).asLong()
-              val stat = f.dataType match {
-                case StringType =>
-                  ColumnStat(
-                    distinctCount = Some(BigInt(ndv)),
-                    nullCount = Some(rows - nonNull),
-                    avgLen = if (nonNull > 0)
-                      Some(row.get(b + 3).asLong() / nonNull) else None,
-                    maxLen = Some(row.get(b + 2).asLong()))
-                case dt =>
-                  val fields = Array(
-                    StructField("mn", dt), StructField("mx", dt))
-                  val mapper = com.fasterxml.jackson.databind.node
-                    .JsonNodeFactory.instance.arrayNode()
-                  mapper.add(row.get(b + 2)); mapper.add(row.get(b + 3))
-                  val mm = DuckDbProcess.convertRow(mapper, fields)
-                  ColumnStat(
-                    distinctCount = Some(BigInt(ndv)),
-                    min = Option(mm.get(0, dt)),
-                    max = Option(mm.get(1, dt)),
-                    nullCount = Some(rows - nonNull),
-                    avgLen = Some(dt.defaultSize.toLong),
-                    maxLen = Some(dt.defaultSize.toLong))
-              }
-              f.name -> stat
-            }.toMap
-            }
-        }
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
+    * numeric/temporal min+max, strings ndv+lengths only. At the row cap
+    * only integral columns report, and only their sample ndv — a 3-value
+    * key vs a dense one keeps its order under any sampling, which is all
+    * the split-key chooser needs. */
+  override protected def probeColumnStatistics(ref: RemoteTableRef,
+      rows: Option[BigInt]): Map[String, ColumnStat] = {
+    val schema = tableSchema(ref)
+    val eligible = schema.fields.filter(f => (rows, f.dataType) match {
+      case (_, ByteType | ShortType | IntegerType | LongType) => true
+      case (Some(_), StringType | FloatType | DoubleType | DateType |
+           TimestampNTZType | _: DecimalType) => true
+      case _ => false
     })
-
-  private val boundsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int),
-      Option[Seq[Long]]]
+    // one typed slot per aggregate: ndv, non-null count, then either
+    // max/sum of lengths (strings) or min/max in the column's own type
+    val items = eligible.toSeq.flatMap { f =>
+      val q = dialect.quoteIfNeeded(f.name)
+      if (rows.isEmpty) Seq((s"COUNT(DISTINCT $q)", LongType))
+      else f.dataType match {
+        case StringType => Seq(s"COUNT(DISTINCT $q)", s"COUNT($q)",
+          s"MAX(LENGTH($q))", s"SUM(LENGTH($q))").map((_, LongType))
+        case dt => Seq((s"COUNT(DISTINCT $q)", LongType),
+          (s"COUNT($q)", LongType), (s"MIN($q)", dt), (s"MAX($q)", dt))
+      }
+    }
+    if (items.isEmpty) Map.empty
+    else {
+      val row = queryRow(s"SELECT ${items.map(_._1).mkString(", ")} FROM " +
+        s"(SELECT * FROM ${ref.sql(dialect)} LIMIT $statsRowCap) cs",
+        StructType(items.zipWithIndex.map { case ((_, dt), i) =>
+          StructField(s"c$i", dt) }))
+      val width = if (rows.isEmpty) 1 else 4
+      eligible.zipWithIndex.map { case (f, i) =>
+        val b = i * width
+        val ndv = Some(BigInt(row.getLong(b)))
+        f.name -> (rows match {
+          case None => ColumnStat(distinctCount = ndv)
+          case Some(n) =>
+            val nonNull = row.getLong(b + 1)
+            f.dataType match {
+              case StringType => ColumnStat(
+                distinctCount = ndv,
+                nullCount = Some(n - nonNull),
+                avgLen = if (nonNull > 0)
+                  Some(row.getLong(b + 3) / nonNull) else None,
+                maxLen = Some(row.getLong(b + 2)))
+              case dt => ColumnStat(
+                distinctCount = ndv,
+                min = Option(row.get(b + 2, dt)),
+                max = Option(row.get(b + 3, dt)),
+                nullCount = Some(n - nonNull),
+                avgLen = Some(dt.defaultSize.toLong),
+                maxLen = Some(dt.defaultSize.toLong))
+            }
+        })
+      }.toMap
+    }
+  }
 
   /** Quantile boundaries for range splits — ONE engine-side
     * `quantile_disc` aggregate over a bounded sample (DuckDB computes
@@ -402,39 +312,37 @@ final class DuckDbSqlExecutor(
     * planning probe cached per fragment). Still LIMIT-capped so the
     * aggregate input stays bounded. A wrong boundary only unbalances
     * cursors, never rows. Too-small samples fall back tier-by-tier. */
-  override def splitBoundaries(fromSql: String, col: String,
-      n: Int): Option[Seq[Long]] =
-    boundsCache.getOrElseUpdate((fromSql, col, n), {
-      try {
-        val qs = (1 until n)
-          .map(i => s"CAST(quantile_disc(sk, ${i.toDouble / n}) AS BIGINT)")
-          .mkString(", ")
-        def probe(src: String): (Long, Seq[Long]) = {
-          val row = runQuery(
-            s"SELECT $qs, COUNT(*) FROM (SELECT $col AS sk FROM $src " +
-              s"WHERE $col IS NOT NULL LIMIT $statsRowCap) bnd_sample").head
-          ((row.get(n - 1).asLong()),
-            (0 until n - 1).filterNot(row.get(_).isNull)
-              .map(row.get(_).asLong()).distinct.sorted)
-        }
-        val (prefixCnt, prefixBounds) = probe(s"($fromSql) bnd_src")
-        val (cnt, bounds) =
-          if (prefixCnt < statsRowCap) (prefixCnt, prefixBounds)
-          else {
-            val (sCnt, sBounds) = probe(
-              s"(SELECT * FROM ($fromSql) raw_src " +
-                "USING SAMPLE reservoir(200000 ROWS) REPEATABLE (42)) " +
-                "bnd_src")
-            // a failed/short draw keeps the prefix answer rather than
-            // refusing splits outright
-            if (sCnt >= n.toLong * 8) (sCnt, sBounds)
-            else (prefixCnt, prefixBounds)
-          }
-        if (cnt < n.toLong * 8) None
-        else if (bounds.isEmpty) None
-        else Some(bounds)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    })
+  override protected def probeSplitBoundaries(fromSql: String, col: String,
+      n: Int): Option[Seq[Long]] = {
+    val qs = (1 until n)
+      .map(i => s"CAST(quantile_disc(sk, ${i.toDouble / n}) AS BIGINT)")
+      .mkString(", ")
+    def probe(src: String): (Long, Seq[Long]) = {
+      val row = queryRow(
+        s"SELECT $qs, COUNT(*) FROM (SELECT $col AS sk FROM $src " +
+          s"WHERE $col IS NOT NULL LIMIT $statsRowCap) bnd_sample",
+        SqlExecutor.longs(n))
+      (row.getLong(n - 1),
+        (0 until n - 1).filterNot(row.isNullAt)
+          .map(row.getLong).distinct.sorted)
+    }
+    val (prefixCnt, prefixBounds) = probe(s"($fromSql) bnd_src")
+    val (cnt, bounds) =
+      if (prefixCnt < statsRowCap) (prefixCnt, prefixBounds)
+      else {
+        val (sCnt, sBounds) = probe(
+          s"(SELECT * FROM ($fromSql) raw_src " +
+            "USING SAMPLE reservoir(200000 ROWS) REPEATABLE (42)) " +
+            "bnd_src")
+        // a failed/short draw keeps the prefix answer rather than
+        // refusing splits outright
+        if (sCnt >= n.toLong * 8) (sCnt, sBounds)
+        else (prefixCnt, prefixBounds)
+      }
+    if (cnt < n.toLong * 8) None
+    else if (bounds.isEmpty) None
+    else Some(bounds)
+  }
 
   /** Driver-side one-shot read query (planning probes, tests). */
   def runQuery(sql: String): Vector[JsonNode] = {
@@ -457,13 +365,14 @@ final class DuckDbSqlExecutor(
     * `INSERT INTO t SELECT … FROM read_parquet(…)` bulk-ingests it —
     * DuckDB is a single-writer engine, so a per-task INSERT fan-in like
     * the JDBC path's is impossible by design, and parquet staging is the
-    * engine's own recommended bulk path. */
-  override def insertInto(ref: RemoteTableRef,
-      df: org.apache.spark.sql.DataFrame): Unit = {
-    val schema = tableSchema(ref)
-    require(df.schema.length == schema.length,
-      s"insertInto $ref: ${df.schema.length} columns for " +
-        s"${schema.length}-column table")
+    * engine's own recommended bulk path. With an epoch, the fence row
+    * rides the SAME engine transaction as the bulk ingest (`BEGIN …
+    * COMMIT` through one connection of the request loop; a failure
+    * mid-list surfaces as the request error and the open transaction
+    * rolls back on the per-request connection close). */
+  override protected def ingest(ref: RemoteTableRef,
+      df: org.apache.spark.sql.DataFrame, epoch: Option[Long]): Unit = {
+    val schema = targetSchema(ref, df)
     val stage = java.nio.file.Files
       .createTempDirectory(stagingRoot, "ingest_").toString
     // positional alignment: rename to the target's column names so the
@@ -473,60 +382,16 @@ final class DuckDbSqlExecutor(
       renamed.write.mode("overwrite").parquet(stage)
       val cols = schema.fieldNames
         .map(dialect.quoteIfNeeded).mkString(", ")
-      runWrite(Seq(
-        s"INSERT INTO ${ref.sql(dialect)} ($cols) " +
-          s"SELECT $cols FROM read_parquet('$stage/*.parquet')"))
+      val insert = s"INSERT INTO ${ref.sql(dialect)} ($cols) " +
+        s"SELECT $cols FROM read_parquet('$stage/*.parquet')"
+      runWrite(epoch match {
+        case None => Seq(insert)
+        case Some(id) => Seq("BEGIN", insert,
+          s"INSERT INTO ${epochTableRef(ref).sql(dialect)} VALUES ($id)",
+          "COMMIT")
+      })
     } finally deleteRecursively(new java.io.File(stage))
   }
-
-  /** Epoch-fenced variant for streaming `foreachBatch` sinks — the
-    * DuckDB parallel of [[graft.federation.jdbc.JdbcSqlExecutor
-    * .insertIntoEpoch]]: re-delivery of microbatch `epochId` (routine on
-    * recovery) is a no-op, and the fence row rides the SAME engine
-    * transaction as the bulk ingest (`BEGIN … COMMIT` through one
-    * connection of the request loop; a failure mid-list surfaces as the
-    * request error and the open transaction rolls back on the
-    * per-request connection close) — committed epochs imply committed
-    * rows and vice versa. Returns false when already committed. The
-    * epochs table must exist ([[ensureEpochTable]]). */
-  def insertIntoEpoch(ref: RemoteTableRef,
-      df: org.apache.spark.sql.DataFrame, epochId: Long): Boolean = {
-    val fence = epochTableRef(ref)
-    val seen = runQuery(
-      s"SELECT COUNT(*) FROM ${fence.sql(dialect)} " +
-        s"WHERE ${dialect.quoteIfNeeded("batch_id")} = $epochId")
-      .head.get(0).asLong() > 0
-    if (seen) false
-    else {
-      val schema = tableSchema(ref)
-      require(df.schema.length == schema.length,
-        s"insertIntoEpoch $ref: ${df.schema.length} columns for " +
-          s"${schema.length}-column table")
-      val stage = java.nio.file.Files
-        .createTempDirectory(stagingRoot, "epoch_").toString
-      try {
-        val renamed = df.toDF(schema.fieldNames.toIndexedSeq: _*)
-        renamed.write.mode("overwrite").parquet(stage)
-        val cols = schema.fieldNames
-          .map(dialect.quoteIfNeeded).mkString(", ")
-        runWrite(Seq(
-          "BEGIN",
-          s"INSERT INTO ${ref.sql(dialect)} ($cols) " +
-            s"SELECT $cols FROM read_parquet('$stage/*.parquet')",
-          s"INSERT INTO ${fence.sql(dialect)} VALUES ($epochId)",
-          "COMMIT"))
-      } finally deleteRecursively(new java.io.File(stage))
-      true
-    }
-  }
-
-  private def epochTableRef(ref: RemoteTableRef): RemoteTableRef =
-    RemoteTableRef.parse(ref.parts.last + "__epochs")
-
-  /** Create (or reset) the epoch-fence table for `ref`. */
-  def ensureEpochTable(ref: RemoteTableRef): Unit =
-    createTable(epochTableRef(ref), StructType(Seq(
-      StructField("batch_id", LongType))))
 
   private def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
@@ -584,11 +449,7 @@ final class DuckDbSqlExecutor(
     runWrite(Seq(
       s"DROP TABLE IF EXISTS ${ref.sql(dialect)}",
       s"CREATE TABLE ${ref.sql(dialect)} ($cols)"))
-    // DDL invalidates the catalog caches (new/replaced table schema)
-    schemaCache.remove(ref.toString)
-    statsCache.remove(ref.toString)
-    colStatsCache.remove(ref.toString)
-    tableNamesCache = None
+    forget(ref)
   }
 
   override def vacuumStaging(olderThanMillis: Long,
@@ -604,32 +465,26 @@ final class DuckDbSqlExecutor(
 
   override def dropTable(ref: RemoteTableRef): Unit = {
     runWrite(Seq(s"DROP TABLE IF EXISTS ${ref.sql(dialect)}"))
-    schemaCache.remove(ref.toString)
-    statsCache.remove(ref.toString)
-    colStatsCache.remove(ref.toString)
-    tableNamesCache = None
+    forget(ref)
   }
 
-  override def invalidateCaches(): Unit = {
-    schemaCache.clear()
-    statsCache.clear()
-    colStatsCache.clear()
-    tableNamesCache = None
-    schemaTableNamesCache.clear()
-    schemaNamesCache = None
-  }
-
-  /** Per-table REFRESH: only this ref's probes re-read; sibling tables'
-    * caches stay warm (the r12 catalog nuked every executor's caches). The
-    * LISTINGS drop too — the refresh may be about the table appearing or
-    * disappearing remotely. */
-  override def invalidateTable(ref: RemoteTableRef): Unit = {
+  /** Beyond the stat probes, DDL and REFRESH drop this ref's schema and
+    * the LISTINGS — the table may have appeared or disappeared remotely;
+    * sibling tables' caches stay warm. */
+  override protected def forget(ref: RemoteTableRef): Unit = {
+    super.forget(ref)
     schemaCache.remove(ref.toString)
-    statsCache.remove(ref.toString)
-    colStatsCache.remove(ref.toString)
     tableNamesCache = None
     if (ref.parts.size > 1) schemaTableNamesCache.remove(ref.parts.head)
     ()
+  }
+
+  override def invalidateCaches(): Unit = {
+    super.invalidateCaches()
+    schemaCache.clear()
+    tableNamesCache = None
+    schemaTableNamesCache.clear()
+    schemaNamesCache = None
   }
 
   /** Driver-side DDL batch that (re)defines `ref` through arbitrary
@@ -638,11 +493,7 @@ final class DuckDbSqlExecutor(
     * cache invalidation. */
   def runDdl(ref: RemoteTableRef, sqls: Seq[String]): Unit = {
     runWrite(sqls)
-    schemaCache.remove(ref.toString)
-    statsCache.remove(ref.toString)
-    colStatsCache.remove(ref.toString)
-    tableNamesCache = None
-    ()
+    forget(ref)
   }
 }
 

@@ -6,7 +6,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
@@ -31,9 +31,7 @@ final class JdbcSqlExecutor(
     override val dialect: SqlDialect,
     override val splitCount: Int = 1,
     connectionProps: Map[String, String] = Map.empty,
-    /** Rows a stats probe is willing to scan remotely before declaring the
-      * relation "not small" (unknown stats → Spark will not broadcast). */
-    val statsRowCap: Long = 1000000L)
+    override val statsRowCap: Long = 1000000L)
   extends SqlExecutor {
 
   // URL identifies the database instance — the mandatory compute context
@@ -45,11 +43,6 @@ final class JdbcSqlExecutor(
     connectionProps.foreach { case (k, v) => p.setProperty(k, v) }
     DriverManager.getConnection(url, p)
   }
-
-  /** Every query SQL shipped (recorded driver-side at RDD construction —
-    * the fetch itself happens in tasks); lets tests assert the exact wire
-    * SQL, e.g. the chunked bind-join VALUES form. */
-  val executedSql = new scala.collection.mutable.ArrayBuffer[String]
 
   override def execute(sql: String, schema: StructType): RDD[InternalRow] = {
     executedSql.synchronized { executedSql += sql }
@@ -131,26 +124,6 @@ final class JdbcSqlExecutor(
     } finally conn.close()
   }
 
-  // Option-valued: `Some(None)` caches the at-cap "not small" outcome, so
-  // a big table/fragment (the common production case) is probed once per
-  // executor lifetime instead of on every plan. Transient SQLExceptions
-  // are never cached, so a flaky remote doesn't disable broadcasts forever.
-  private val statsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Statistics]]
-
-  override def invalidateCaches(): Unit = {
-    statsCache.clear()
-    colStatsCache.clear()
-  }
-
-  /** Per-table REFRESH: drop just this ref's stat probes (schemas are not
-    * cached here — [[tableSchema]] is a zero-row metadata read). */
-  override def invalidateTable(ref: RemoteTableRef): Unit = {
-    statsCache.remove(ref.toString)
-    colStatsCache.remove(ref.toString)
-    ()
-  }
-
   /** Named-schema listing through JDBC metadata — backs
     * `SHOW TABLES IN <catalog>.<schema>`. The schema argument of
     * `getTables` is a PATTERN ('_'/'%' are wildcards — MY_SCHEMA would
@@ -186,30 +159,15 @@ final class JdbcSqlExecutor(
     } finally conn.close()
   }
 
-  /** Bounded statistics probe — the reference's executor `statistics` hook
-    * (src/sql/executor.rs:61-63); without it Spark assumes every remote
-    * table is huge and never broadcasts a federated fragment.
-    *
-    * One capped remote aggregate: row count and total string bytes over at
-    * most [[statsRowCap]] rows, so (a) planning never stalls on a
-    * full-table COUNT(*) of a 10B-row remote, and (b) string columns are
-    * measured, not guessed — Catalyst's 20-byte default would classify a
-    * wide-text table as broadcastable and pull gigabytes through the
-    * driver. Relations at the cap report no stats (only relations small
-    * enough to be broadcast candidates need them). */
-  override def statistics(ref: RemoteTableRef): Option[Statistics] =
-    probeCached(ref.toString, ref.sql(dialect), tableSchema(ref))
-
-  /** Same bounded probe over a generated fragment SQL — the reference's
-    * statistics hook takes the plan (src/sql/executor.rs:61-63), so a
-    * filtered fragment can report fragment-level, not whole-table, size. */
-  override def fragmentStatistics(sql: String,
-      schema: StructType): Option[Statistics] =
-    probeCached(sql, s"($sql) frag_src", schema)
-
-  private val colStatsCache =
-    scala.collection.concurrent.TrieMap.empty[String,
-      Map[String, org.apache.spark.sql.catalyst.plans.logical.ColumnStat]]
+  override protected def queryRow(sql: String,
+      schema: StructType): InternalRow = {
+    val conn = connect()
+    try {
+      val rs = conn.createStatement().executeQuery(sql)
+      if (!rs.next()) throw new NoSuchElementException(s"no row from: $sql")
+      JdbcSqlExecutor.convertRow(rs, schema.fields)
+    } finally conn.close()
+  }
 
   /** Bounded per-column probes for CBO: one query per column (Derby
     * permits a single DISTINCT aggregate per query — probed), each over
@@ -218,97 +176,61 @@ final class JdbcSqlExecutor(
     * through the same schema-directed conversion as scan rows, so the
     * values land in Catalyst's internal representation); strings report
     * ndv + nulls + length stats (no cross-engine collation in min/max).
-    * Only relations under the row cap probe at all — CBO on a
-    * billion-row remote must not trigger column scans. */
-  override def columnStatistics(ref: RemoteTableRef): Map[String,
-      org.apache.spark.sql.catalyst.plans.logical.ColumnStat] =
-    colStatsCache.getOrElseUpdate(ref.toString, {
-      try {
-        statistics(ref).flatMap(_.rowCount) match {
-          case None =>
-            // at-cap: totals unknown, but sample ndv still RANKS columns
-            // by cardinality for the split-key chooser (one bounded
-            // DISTINCT query per integral column — Derby permits a single
-            // DISTINCT aggregate per query, probed — cached for the
-            // executor lifetime)
-            val schema = tableSchema(ref)
-            val sample = s"(SELECT * FROM ${ref.sql(dialect)}" +
-              s"${dialect.limitClause(Some(statsRowCap), None)}) cs_sample"
-            val integral = schema.fields.filter(f => f.dataType match {
-              case ByteType | ShortType | IntegerType | LongType => true
-              case _ => false
-            })
-            if (integral.isEmpty) Map.empty
-            else {
-              val conn = connect()
-              try {
-                integral.map { f =>
-                  val rs = conn.createStatement().executeQuery(
-                    s"SELECT COUNT(DISTINCT " +
-                      s"${dialect.quoteIfNeeded(f.name)}) FROM $sample")
-                  rs.next()
-                  f.name -> org.apache.spark.sql.catalyst.plans.logical
-                    .ColumnStat(distinctCount = Some(BigInt(rs.getLong(1))))
-                }.toMap
-              } finally conn.close()
-            }
-          case Some(rows) =>
-            val schema = tableSchema(ref)
-            val sample = s"(SELECT * FROM ${ref.sql(dialect)}" +
-              s"${dialect.limitClause(Some(statsRowCap), None)}) cs_sample"
-            val conn = connect()
-            try {
-              schema.fields.flatMap { f =>
-                colStat(conn, sample, f, rows).map(f.name -> _)
-              }.toMap
-            } finally conn.close()
-        }
-      } catch { case scala.util.control.NonFatal(_) => Map.empty }
-    })
+    * At the row cap only integral columns report, and only their sample
+    * ndv. */
+  override protected def probeColumnStatistics(ref: RemoteTableRef,
+      rows: Option[BigInt]): Map[String, ColumnStat] = {
+    val schema = tableSchema(ref)
+    val sample = s"(SELECT * FROM ${ref.sql(dialect)}" +
+      s"${dialect.limitClause(Some(statsRowCap), None)}) cs_sample"
+    rows match {
+      case None =>
+        schema.fields.filter(f => f.dataType match {
+          case ByteType | ShortType | IntegerType | LongType => true
+          case _ => false
+        }).map { f =>
+          val ndv = queryRow(s"SELECT COUNT(DISTINCT " +
+            s"${dialect.quoteIfNeeded(f.name)}) FROM $sample",
+            SqlExecutor.longs(1)).getLong(0)
+          f.name -> ColumnStat(distinctCount = Some(BigInt(ndv)))
+        }.toMap
+      case Some(n) =>
+        schema.fields.flatMap(f => colStat(sample, f, n).map(f.name -> _))
+          .toMap
+    }
+  }
 
-  private def colStat(conn: Connection, sample: String, f: StructField,
-      rows: BigInt)
-      : Option[org.apache.spark.sql.catalyst.plans.logical.ColumnStat] = {
-    import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
+  private def colStat(sample: String, f: StructField,
+      rows: BigInt): Option[ColumnStat] = {
     val q = dialect.quoteIfNeeded(f.name)
     f.dataType match {
       case StringType =>
-        val rs = conn.createStatement().executeQuery(
+        val r = queryRow(
           s"SELECT COUNT(DISTINCT $q), COUNT($q), MAX(LENGTH($q)), " +
-            s"SUM(LENGTH($q)) FROM $sample")
-        rs.next()
-        val ndv = rs.getLong(1); val nonNull = rs.getLong(2)
-        val maxLen = rs.getLong(3); val sumLen = rs.getLong(4)
+            s"SUM(LENGTH($q)) FROM $sample", SqlExecutor.longs(4))
+        val nonNull = r.getLong(1)
         Some(ColumnStat(
-          distinctCount = Some(BigInt(ndv)),
+          distinctCount = Some(BigInt(r.getLong(0))),
           nullCount = Some(rows - nonNull),
-          avgLen = if (nonNull > 0) Some(sumLen / nonNull) else None,
-          maxLen = Some(maxLen)))
+          avgLen = if (nonNull > 0) Some(r.getLong(3) / nonNull) else None,
+          maxLen = Some(r.getLong(2))))
       case ByteType | ShortType | IntegerType | LongType | FloatType |
            DoubleType | DateType | TimestampNTZType | TimestampType |
            _: DecimalType =>
-        val rs = conn.createStatement().executeQuery(
+        val r = queryRow(
           s"SELECT COUNT(DISTINCT $q), COUNT($q), MIN($q), MAX($q) " +
-            s"FROM $sample")
-        rs.next()
-        val ndv = rs.getLong(1); val nonNull = rs.getLong(2)
-        val mm = JdbcSqlExecutor.convertRow(rs, Array(
-          StructField("c1", LongType), StructField("c2", LongType),
-          f.copy(name = "mn"), f.copy(name = "mx")))
+            s"FROM $sample",
+          StructType(SqlExecutor.longs(2).fields ++ Seq(f, f)))
         Some(ColumnStat(
-          distinctCount = Some(BigInt(ndv)),
-          min = Option(mm.get(2, f.dataType)),
-          max = Option(mm.get(3, f.dataType)),
-          nullCount = Some(rows - nonNull),
+          distinctCount = Some(BigInt(r.getLong(0))),
+          min = Option(r.get(2, f.dataType)),
+          max = Option(r.get(3, f.dataType)),
+          nullCount = Some(rows - r.getLong(1)),
           avgLen = Some(f.dataType.defaultSize.toLong),
           maxLen = Some(f.dataType.defaultSize.toLong)))
       case _ => None
     }
   }
-
-  private val boundsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int),
-      Option[Seq[Long]]]
 
   /** Quantile boundaries for range splits: `n-1` ORDER BY/OFFSET point
     * reads over a BOUNDED prefix sample of the fragment ([[statsRowCap]]
@@ -317,48 +239,23 @@ final class JdbcSqlExecutor(
     * whenever the fragment fits the cap; a biased-but-bounded sample
     * beyond it — and a WRONG boundary only unbalances cursors, never
     * rows (the range filters stay disjoint + exhaustive regardless). */
-  override def splitBoundaries(fromSql: String, col: String,
-      n: Int): Option[Seq[Long]] =
-    boundsCache.getOrElseUpdate((fromSql, col, n), {
-      try {
-        val sample = s"(SELECT $col AS sk FROM ($fromSql) bnd_src " +
-          s"WHERE $col IS NOT NULL" +
-          s"${dialect.limitClause(Some(statsRowCap), None)}) bnd_sample"
-        val conn = connect()
-        try {
-          val rs = conn.createStatement()
-            .executeQuery(s"SELECT COUNT(*) FROM $sample")
-          rs.next()
-          val cnt = rs.getLong(1)
-          if (cnt < n.toLong * 8) None // too small to be worth cursors
-          else {
-            val bounds = (1 until n).map { i =>
-              val off = i * cnt / n
-              val q = s"SELECT sk FROM $sample ORDER BY sk" +
-                dialect.limitClause(Some(1L), Some(off))
-              val r = conn.createStatement().executeQuery(q)
-              r.next()
-              val v = r.getLong(1)
-              r.close()
-              v
-            }.distinct.sorted
-            if (bounds.isEmpty) None else Some(bounds)
-          }
-        } finally conn.close()
-      } catch { case scala.util.control.NonFatal(_) => None }
-    })
-
-  // schema is by-name: on a cache hit the (remote round-trip) schema
-  // introspection must not run at all
-  private def probeCached(key: String, fromSql: String,
-      schema: => StructType): Option[Statistics] =
-    statsCache.get(key).getOrElse {
-      try {
-        val result = probe(fromSql, schema)
-        statsCache.put(key, result)
-        result
-      } catch { case _: java.sql.SQLException => None }
+  override protected def probeSplitBoundaries(fromSql: String, col: String,
+      n: Int): Option[Seq[Long]] = {
+    val sample = s"(SELECT $col AS sk FROM ($fromSql) bnd_src " +
+      s"WHERE $col IS NOT NULL" +
+      s"${dialect.limitClause(Some(statsRowCap), None)}) bnd_sample"
+    val cnt = queryRow(s"SELECT COUNT(*) FROM $sample", SqlExecutor.longs(1))
+      .getLong(0)
+    if (cnt < n.toLong * 8) None // too small to be worth cursors
+    else {
+      val bounds = (1 until n).map { i =>
+        queryRow(s"SELECT sk FROM $sample ORDER BY sk" +
+          dialect.limitClause(Some(1L), Some(i * cnt / n)),
+          SqlExecutor.longs(1)).getLong(0)
+      }.distinct.sorted
+      if (bounds.isEmpty) None else Some(bounds)
     }
+  }
 
   /** Distributed append into an existing remote table (reference
     * `insert_into` fallback, src/table_provider.rs:110-139), made
@@ -373,42 +270,9 @@ final class JdbcSqlExecutor(
     * INSERTs straight into the target mid-task; a retry duplicated every
     * committed row of that partition.) N tasks still write in parallel —
     * the driver funnel is only the O(1)-per-partition publish statement. */
-  override def insertInto(ref: RemoteTableRef,
-      df: org.apache.spark.sql.DataFrame): Unit =
-    insertStaged(ref, df, epoch = None)
-
-  /** Epoch-fenced variant for streaming `foreachBatch` sinks: re-delivery
-    * of microbatch `epochId` (routine on recovery) is a no-op. The fence
-    * rides in the SAME publish transaction as the rows — committed epochs
-    * imply committed rows and vice versa. Returns false when the epoch
-    * was already committed. The epochs table (`<target>__epochs`) must
-    * exist (see [[ensureEpochTable]]). */
-  def insertIntoEpoch(ref: RemoteTableRef,
-      df: org.apache.spark.sql.DataFrame, epochId: Long): Boolean = {
-    val fence = epochTableRef(ref)
-    val conn = connect()
-    val seen = try {
-      val rs = conn.createStatement().executeQuery(
-        s"SELECT 1 FROM ${fence.sql(dialect)} WHERE \"batch_id\" = $epochId")
-      try rs.next() finally rs.close()
-    } finally conn.close()
-    if (seen) false
-    else { insertStaged(ref, df, epoch = Some(epochId)); true }
-  }
-
-  private def epochTableRef(ref: RemoteTableRef): RemoteTableRef =
-    RemoteTableRef.parse(ref.parts.last + "__epochs")
-
-  /** Create (or reset) the epoch-fence table for `ref`. */
-  def ensureEpochTable(ref: RemoteTableRef): Unit =
-    createTable(epochTableRef(ref), StructType(Seq(
-      StructField("batch_id", LongType))))
-
-  private def insertStaged(ref: RemoteTableRef,
+  override protected def ingest(ref: RemoteTableRef,
       df: org.apache.spark.sql.DataFrame, epoch: Option[Long]): Unit = {
-    val schema = tableSchema(ref)
-    require(df.schema.length == schema.length,
-      s"insertInto ${ref}: ${df.schema.length} columns for ${schema.length}-column table")
+    val schema = targetSchema(ref, df)
     val stgPrefix = JdbcSqlExecutor.stagePrefix(ref.parts.last)
     val u = url
     val props = connectionProps
@@ -467,11 +331,6 @@ final class JdbcSqlExecutor(
         throw e
     } finally conn.close()
   }
-
-  /** Driver-side DML statements this executor has run (INSERT…SELECT
-    * pushdowns) — lets tests assert the remote-to-remote copy never built
-    * a row stream. */
-  val dmlLog = new scala.collection.mutable.ArrayBuffer[String]
 
   /** Same-engine INSERT INTO … (SELECT …): one statement, executed where
     * the data lives. The remote engine both produces and consumes the
@@ -532,6 +391,7 @@ final class JdbcSqlExecutor(
         if e.getSQLState == "42Y55" => () } // already gone: idempotent
       st.close()
     } finally conn.close()
+    forget(ref)
   }
 
   /** DDL: create the table, replacing any prior incarnation (DROP is
@@ -568,6 +428,7 @@ final class JdbcSqlExecutor(
       st.executeUpdate(sql)
       st.close()
     } finally conn.close()
+    forget(ref)
   }
 
   private def runDml(sql: String): Long = {
@@ -578,35 +439,6 @@ final class JdbcSqlExecutor(
       val n = st.executeUpdate(sql).toLong
       st.close()
       n
-    } finally conn.close()
-  }
-
-  private def probe(fromSql: String, schema: StructType): Option[Statistics] = {
-    val strCols = schema.fields.filter(_.dataType == StringType)
-    val sums = strCols.map(f =>
-      s"SUM(LENGTH(${dialect.quoteIfNeeded(f.name)}))")
-    val capped = s"(SELECT * FROM $fromSql" +
-      s"${dialect.limitClause(Some(statsRowCap), None)}) stats_probe"
-    val items = (Seq("COUNT(*)") ++ sums).mkString(", ")
-    val conn = connect()
-    try {
-      val rs = conn.createStatement()
-        .executeQuery(s"SELECT $items FROM $capped")
-      rs.next()
-      val rows = rs.getLong(1)
-      if (rows >= statsRowCap) None
-      else {
-        val strBytes = strCols.indices.map { i =>
-          val v = rs.getLong(i + 2)
-          if (rs.wasNull()) 0L else v
-        }.sum
-        val fixed = schema.fields.filterNot(_.dataType == StringType)
-          .map(_.dataType.defaultSize).sum
-        val size = BigInt(rows) * fixed + BigInt(strBytes) +
-          BigInt(rows) * strCols.length * 8 // per-string overhead
-        Some(Statistics(sizeInBytes = size.max(1),
-          rowCount = Some(BigInt(rows))))
-      }
     } finally conn.close()
   }
 }

@@ -1,20 +1,40 @@
 package graft.federation.sql
 
+import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.{ColumnStat, Statistics}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** The remote-engine driver interface — Spark analog of the reference's
   * `SQLExecutor` trait (src/sql/executor.rs:18-75): identity + dialect +
   * query execution + catalog introspection + optional hooks.
   *
-  * `execute` returns an `RDD[InternalRow]` (not an iterator) so each
-  * implementation chooses where the remote I/O happens: the JDBC executor
-  * opens connections inside `RDD.compute` on executor tasks (N partitions =
-  * N parallel remote cursors); the in-process mock returns the inner
-  * session's RDD directly.
+  * An engine implements:
+  *  - [[execute]]: the fragment read. It returns an `RDD[InternalRow]`
+  *    (not an iterator) so each engine chooses where the remote I/O
+  *    happens: the JDBC executor opens connections inside `RDD.compute`
+  *    on executor tasks (N partitions = N parallel remote cursors); the
+  *    in-process mock returns the inner session's RDD directly;
+  *  - [[queryRow]]: the driver-side one-row read every planning probe and
+  *    the epoch-fence check go through;
+  *  - catalog listing: [[tableNames]], [[tableSchema]] (and optionally the
+  *    named-schema listings);
+  *  - for a write path, [[ingest]]: the atomic publish of a frame's rows
+  *    plus an optional epoch-fence row in ONE engine transaction, and the
+  *    DDL of [[createTable]] / [[dropTable]];
+  *  - optionally, the engine-specific SQL of [[probeColumnStatistics]] and
+  *    [[probeSplitBoundaries]].
+  *
+  * It inherits, written once here: the bounded row-count probe behind
+  * [[statistics]] and [[fragmentStatistics]] and its cache, the memo
+  * caches around [[columnStatistics]] and [[splitBoundaries]], their
+  * invalidation ([[forget]]), the epoch fence of [[insertIntoEpoch]], the
+  * column-count check of [[insertInto]], the [[executedSql]] / [[dmlLog]]
+  * buffers, and the executor's [[provider]].
   */
 trait SqlExecutor {
   def name: String
@@ -38,6 +58,13 @@ trait SqlExecutor {
   def executeSplit(sql: String, schema: StructType,
       siblings: Int): RDD[InternalRow] = execute(sql, schema)
 
+  /** Driver-side one-row read: run `sql` on the engine and decode its
+    * first row positionally to `schema`. Planning probes and the epoch
+    * fence go through it. Engines without one report no statistics. */
+  protected def queryRow(sql: String, schema: StructType): InternalRow =
+    throw new UnsupportedOperationException(
+      s"remote [$name] has no driver-side query path")
+
   /** Remote catalog listing (the engine's default schema). */
   def tableNames: Seq[String]
 
@@ -55,30 +82,109 @@ trait SqlExecutor {
     * `get_table_schema`, src/sql/table.rs:126-133). */
   def tableSchema(ref: RemoteTableRef): StructType
 
-  /** Optional per-table statistics so Spark can plan broadcasts. */
-  def statistics(ref: RemoteTableRef): Option[Statistics] = None
+  /** The provider that federates this executor's fragments. One per
+    * executor, so the lattice's provider equality checks are cheap and
+    * stable, and it lives exactly as long as the executor. */
+  lazy val provider: SqlFederationProvider = new SqlFederationProvider(this)
 
-  /** Optional PER-COLUMN statistics (ndv / min / max / null count /
-    * lengths), keyed by remote column name — what Catalyst's cost-based
-    * join reorder needs beyond row counts: with ndv on the join keys a
-    * stitched multi-fragment join reorders onto the selective dimension
-    * first. Called by [[graft.federation.plans.RemoteRelation]] only when
-    * CBO is enabled; implementations must bound and cache the probes as
-    * [[statistics]] does. */
-  def columnStatistics(ref: RemoteTableRef): Map[String,
-      org.apache.spark.sql.catalyst.plans.logical.ColumnStat] = Map.empty
+  /** Every query SQL shipped, oldest first — lets tests assert the exact
+    * wire SQL (e.g. runtime-filter predicates, the bind-join VALUES form). */
+  val executedSql = new scala.collection.mutable.ArrayBuffer[String]
 
-  /** Optional fragment-level statistics: estimate the result size of a
-    * generated fragment SQL without running it to completion. The
-    * reference's `statistics` hook takes the *plan*
+  /** Driver-side DML/DDL statements run, oldest first — lets tests assert
+    * that a remote-to-remote copy never built a row stream. */
+  val dmlLog = new scala.collection.mutable.ArrayBuffer[String]
+
+  /** Rows a stats probe is willing to scan remotely before declaring the
+    * relation "not small" (unknown stats → Spark will not broadcast). */
+  def statsRowCap: Long = 1000000L
+
+  // Option-valued: `Some(None)` caches the at-cap "not small" outcome, so
+  // a big table/fragment (the common production case) is probed once per
+  // executor lifetime instead of on every plan. Transient failures are
+  // never cached, so a flaky remote doesn't disable broadcasts forever.
+  private val statsCache = TrieMap.empty[String, Option[Statistics]]
+  private val colStatsCache = TrieMap.empty[String, Map[String, ColumnStat]]
+  private val boundsCache =
+    TrieMap.empty[(String, String, Int), Option[Seq[Long]]]
+
+  /** Bounded statistics probe — the reference's executor `statistics` hook
+    * (src/sql/executor.rs:61-63); without it Spark assumes every remote
+    * table is huge and never broadcasts a federated fragment.
+    *
+    * One capped remote aggregate: row count and total string bytes over at
+    * most [[statsRowCap]] rows, so (a) planning never stalls on a
+    * full-table COUNT(*) of a 10B-row remote, and (b) string columns are
+    * measured, not guessed — Catalyst's 20-byte default would classify a
+    * wide-text table as broadcastable and pull gigabytes through the
+    * driver. Relations at the cap report no stats (only relations small
+    * enough to be broadcast candidates need them). */
+  def statistics(ref: RemoteTableRef): Option[Statistics] =
+    probeCached(ref.toString, ref.sql(dialect), tableSchema(ref))
+
+  /** Fragment-level statistics: the same bounded probe over a generated
+    * fragment SQL. The reference's `statistics` hook takes the *plan*
     * (src/sql/executor.rs:61-63), not a table ref, precisely so a heavily
     * filtered fragment can report far smaller stats than its base table
     * and win a broadcast the whole-table numbers would forfeit. Called by
     * [[graft.federation.plans.FederatedPlan.computeStats]] only when the
-    * answer could flip a broadcast decision. Implementations must cache:
-    * planning may ask repeatedly. */
+    * answer could flip a broadcast decision; cached per SQL text. */
   def fragmentStatistics(sql: String, schema: StructType): Option[Statistics] =
-    None
+    probeCached(sql, s"($sql) frag_src", schema)
+
+  // schema is by-name: on a cache hit the (remote round-trip) schema
+  // introspection must not run at all
+  private def probeCached(key: String, fromSql: String,
+      schema: => StructType): Option[Statistics] =
+    statsCache.get(key).getOrElse {
+      try {
+        val result = probeStats(fromSql, schema)
+        statsCache.put(key, result)
+        result
+      } catch { case NonFatal(_) => None }
+    }
+
+  private def probeStats(fromSql: String,
+      schema: StructType): Option[Statistics] = {
+    val strCols = schema.fields.filter(_.dataType == StringType)
+    val items = "COUNT(*)" +: strCols.map(f =>
+      s"SUM(LENGTH(${dialect.quoteIfNeeded(f.name)}))")
+    val row = queryRow(s"SELECT ${items.mkString(", ")} FROM " +
+      s"(SELECT * FROM $fromSql" +
+      s"${dialect.limitClause(Some(statsRowCap), None)}) stats_probe",
+      SqlExecutor.longs(items.length))
+    val rows = row.getLong(0)
+    if (rows >= statsRowCap) None
+    else {
+      val strBytes = strCols.indices
+        .map(i => if (row.isNullAt(i + 1)) 0L else row.getLong(i + 1)).sum
+      val fixed = schema.fields.filterNot(_.dataType == StringType)
+        .map(_.dataType.defaultSize).sum
+      val size = BigInt(rows) * fixed + BigInt(strBytes) +
+        BigInt(rows) * strCols.length * 8 // per-string overhead
+      Some(Statistics(sizeInBytes = size.max(1),
+        rowCount = Some(BigInt(rows))))
+    }
+  }
+
+  /** PER-COLUMN statistics (ndv / min / max / null count / lengths),
+    * keyed by remote column name — what Catalyst's cost-based join
+    * reorder needs beyond row counts: with ndv on the join keys a
+    * stitched multi-fragment join reorders onto the selective dimension
+    * first. Called by [[graft.federation.plans.RemoteRelation]] only when
+    * CBO is enabled. Cached per table for the executor lifetime, failures
+    * included (as the empty map). */
+  def columnStatistics(ref: RemoteTableRef): Map[String, ColumnStat] =
+    colStatsCache.getOrElseUpdate(ref.toString,
+      try probeColumnStatistics(ref, statistics(ref).flatMap(_.rowCount))
+      catch { case NonFatal(_) => Map.empty })
+
+  /** The engine's column probes behind [[columnStatistics]]. `rows` is the
+    * table's row count, or None when the table is at [[statsRowCap]]:
+    * totals are then unknown, but sample ndv still RANKS columns by
+    * cardinality for the split-key chooser. */
+  protected def probeColumnStatistics(ref: RemoteTableRef,
+      rows: Option[BigInt]): Map[String, ColumnStat] = Map.empty
 
   /** Number of parallel remote cursors to open for a splittable fragment
     * (see [[SplitScan]]). 1 = a single remote query. A JDBC executor would
@@ -92,8 +198,16 @@ trait SqlExecutor {
     * engine can't probe (or the probe isn't worth it) — the caller falls
     * back to modulo splits, which are exact but skew-blind: a split
     * column whose values share a residue class puts the whole table on
-    * one cursor. Implementations must cache: planning may ask per plan. */
+    * one cursor. Cached per (fragment, column, n); a failed probe caches
+    * None. */
   def splitBoundaries(fromSql: String, col: String,
+      n: Int): Option[Seq[Long]] =
+    boundsCache.getOrElseUpdate((fromSql, col, n),
+      try probeSplitBoundaries(fromSql, col, n)
+      catch { case NonFatal(_) => None })
+
+  /** The engine's boundary probe behind [[splitBoundaries]]. */
+  protected def probeSplitBoundaries(fromSql: String, col: String,
       n: Int): Option[Seq[Long]] = None
 
   /** True when [[execute]] yields exactly ONE RDD partition per SQL (the
@@ -104,13 +218,54 @@ trait SqlExecutor {
     * say false. */
   def singlePartitionPerCursor: Boolean = true
 
-  /** Optional write path: append `df`'s rows to an existing remote table —
-    * the reference's `insert_into` fallback delegation
-    * (src/table_provider.rs:110-139; providers without an inner write path
-    * refuse there too). The JDBC executor implements distributed appends
-    * (one connection + batched INSERT per partition task). */
-  def insertInto(ref: RemoteTableRef,
-      df: org.apache.spark.sql.DataFrame): Unit =
+  /** Append `df`'s rows to an existing remote table — the reference's
+    * `insert_into` fallback delegation (src/table_provider.rs:110-139;
+    * providers without an inner write path refuse there too). Rows align
+    * to the table's columns by position. */
+  def insertInto(ref: RemoteTableRef, df: DataFrame): Unit =
+    ingest(ref, df, epoch = None)
+
+  /** Epoch-fenced [[insertInto]] for streaming `foreachBatch` sinks:
+    * re-delivery of microbatch `epochId` (routine on recovery) is a no-op.
+    * The fence row rides in the SAME engine transaction as the rows
+    * ([[ingest]]) — committed epochs imply committed rows and vice versa.
+    * Returns false when the epoch was already committed. The epochs table
+    * (`<target>__epochs`) must exist (see [[ensureEpochTable]]). */
+  def insertIntoEpoch(ref: RemoteTableRef, df: DataFrame,
+      epochId: Long): Boolean = {
+    val seen = queryRow(
+      s"SELECT COUNT(*) FROM ${epochTableRef(ref).sql(dialect)} " +
+        s"WHERE ${dialect.quoteIfNeeded("batch_id")} = $epochId",
+      SqlExecutor.longs(1)).getLong(0) > 0
+    if (!seen) ingest(ref, df, Some(epochId))
+    !seen
+  }
+
+  /** Create (or reset) the epoch-fence table for `ref`. */
+  def ensureEpochTable(ref: RemoteTableRef): Unit =
+    createTable(epochTableRef(ref),
+      StructType(Seq(StructField("batch_id", LongType))))
+
+  protected def epochTableRef(ref: RemoteTableRef): RemoteTableRef =
+    RemoteTableRef.parse(ref.parts.last + "__epochs")
+
+  /** The target table's schema, checked against `df`'s column count —
+    * the first step of every [[ingest]]. */
+  protected def targetSchema(ref: RemoteTableRef, df: DataFrame): StructType = {
+    val schema = tableSchema(ref)
+    require(df.schema.length == schema.length,
+      s"insertInto $ref: ${df.schema.length} columns for " +
+        s"${schema.length}-column table")
+    schema
+  }
+
+  /** The engine's atomic publish: `df`'s rows land in `ref` (positionally,
+    * per [[targetSchema]]), and with them, when `epoch` is set, one row in
+    * the epochs table ([[epochTableRef]]) — all in ONE engine transaction,
+    * so a crash never leaves rows without their fence or a fence without
+    * its rows. */
+  protected def ingest(ref: RemoteTableRef, df: DataFrame,
+      epoch: Option[Long]): Unit =
     throw new UnsupportedOperationException(
       s"remote [$name] has no write path")
 
@@ -143,14 +298,16 @@ trait SqlExecutor {
   /** Optional DDL path: create (replacing any existing) a remote table
     * shaped like `schema`, using the engine's own type names — the
     * prerequisite of a true CREATE TABLE AS
-    * ([[graft.federation.Federation.createRemoteTableAs]]). */
+    * ([[graft.federation.Federation.createRemoteTableAs]]).
+    * Implementations [[forget]] `ref`'s cached probes. */
   def createTable(ref: RemoteTableRef,
       schema: org.apache.spark.sql.types.StructType): Unit =
     throw new UnsupportedOperationException(
       s"remote [$name] has no create path")
 
   /** Optional DDL path: drop a remote table (bind-staging cleanup; a
-    * missing table is not an error — cleanup must be idempotent). */
+    * missing table is not an error — cleanup must be idempotent).
+    * Implementations [[forget]] `ref`'s cached probes. */
   def dropTable(ref: RemoteTableRef): Unit =
     throw new UnsupportedOperationException(
       s"remote [$name] has no drop path")
@@ -176,16 +333,27 @@ trait SqlExecutor {
   def vacuumStaging(olderThanMillis: Long = 3600000L,
       includeBindTables: Boolean = false): Seq[String] = Nil
 
+  /** Drop the cached probes of ONE table: its statistics and column
+    * statistics (fragment-keyed probes age out with their SQL text).
+    * [[createTable]], [[dropTable]] and [[invalidateTable]] call it;
+    * engines that cache more per table (schemas, listings) extend it. */
+  protected def forget(ref: RemoteTableRef): Unit = {
+    statsCache.remove(ref.toString)
+    colStatsCache.remove(ref.toString)
+    ()
+  }
+
   /** Drop every cached catalog probe (table list, schemas, statistics) so
-    * the next ask re-reads the live remote catalog. Default no-op for
-    * executors that cache nothing. */
-  def invalidateCaches(): Unit = ()
+    * the next ask re-reads the live remote catalog. */
+  def invalidateCaches(): Unit = {
+    statsCache.clear()
+    colStatsCache.clear()
+  }
 
   /** Drop the cached probes of ONE table — the hook behind
     * `REFRESH TABLE` / `TableCatalog.invalidateTable` on catalog-resolved
-    * remote tables; other tables' caches stay warm. Executors with
-    * undifferentiated caches fall back to the full flush. */
-  def invalidateTable(ref: RemoteTableRef): Unit = invalidateCaches()
+    * remote tables; other tables' caches stay warm. */
+  def invalidateTable(ref: RemoteTableRef): Unit = forget(ref)
 
   /** Optional hook: rewrite the generated SQL string just before execution
     * (reference `sql_query_rewriter`, src/sql/table.rs:33-45). */
@@ -261,9 +429,9 @@ final class SparkSqlExecutor(
   override def computeContext: Option[String] = Some(context)
   override def dialect: SqlDialect = SparkDialect
 
-  /** Every SQL this executor has run, oldest first — lets tests assert on
-    * the exact queries a plan shipped (e.g. runtime-filter predicates). */
-  val executedSql = new scala.collection.mutable.ArrayBuffer[String]
+  /** Rows the fragment probe scans remotely before giving up ("not small
+    * enough to matter for a broadcast"). */
+  override def statsRowCap: Long = 1L << 20
 
   override def execute(sql: String, schema: StructType): RDD[InternalRow] = {
     executedSql.synchronized { executedSql += sql }
@@ -281,50 +449,31 @@ final class SparkSqlExecutor(
       .queryExecution.toRdd
   }
 
+  override protected def queryRow(sql: String,
+      schema: StructType): InternalRow =
+    CatalystTypeConverters.createToCatalystConverter(schema)(
+      inner.sql(sql).head()).asInstanceOf[InternalRow]
+
   override def tableNames: Seq[String] = tables.keys.toSeq.sorted
 
   override def tableSchema(ref: RemoteTableRef): StructType =
     inner.table(ref.parts.map(p => s"`$p`").mkString(".")).schema
 
+  /** The inner session's own plan statistics: the mock's tables are local
+    * parquet, so no probe is needed. */
   override def statistics(ref: RemoteTableRef): Option[Statistics] = {
     val plan = inner.table(ref.parts.map(p => s"`$p`").mkString("."))
       .queryExecution.optimizedPlan
     Some(plan.stats)
   }
-
-  private val fragStatsCache =
-    scala.collection.concurrent.TrieMap.empty[String, Option[Statistics]]
-  /** Rows the fragment probe scans remotely before giving up ("not small
-    * enough to matter for a broadcast"). */
-  val fragmentStatsRowCap: Long = 1L << 20
-
-  /** Bounded remote count over the fragment SQL. Cached per SQL text —
-    * including the at-cap "no stats" outcome, so a big fragment is probed
-    * once per executor lifetime, not once per plan. Transient failures are
-    * NOT cached. */
-  override def fragmentStatistics(sql: String,
-      schema: StructType): Option[Statistics] =
-    fragStatsCache.get(sql).getOrElse {
-      try {
-        val capped = s"SELECT * FROM ($sql) frag_probe" +
-          dialect.limitClause(Some(fragmentStatsRowCap), None)
-        val n = inner.sql(s"SELECT COUNT(*) c FROM ($capped) frag_capped")
-          .head().getLong(0)
-        val result =
-          if (n >= fragmentStatsRowCap) None
-          else {
-            val rowSize = schema.fields.map(_.dataType.defaultSize).sum.max(8)
-            Some(Statistics(
-              sizeInBytes = (BigInt(n) * rowSize).max(1),
-              rowCount = Some(BigInt(n))))
-          }
-        fragStatsCache.put(sql, result)
-        result
-      } catch { case scala.util.control.NonFatal(_) => None }
-    }
 }
 
 object SqlExecutor {
+  /** An all-BIGINT row schema of `n` columns (`c0`…), for decoding probe
+    * aggregates through [[SqlExecutor.queryRow]]. */
+  def longs(n: Int): StructType =
+    StructType((0 until n).map(i => StructField(s"c$i", LongType)))
+
   /** Internal staging artifacts — bind-join staging tables
     * (`graft_bind_<hex>`) and per-partition write staging tables
     * (`<t>__stg_<writeId>_<pid>`) — must never surface in catalog

@@ -185,11 +185,6 @@ final class SqlFederationProvider(val executor: SqlExecutor)
 }
 
 object SqlFederationProvider {
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[SqlExecutor, SqlFederationProvider]()
-
-  /** Providers are compared by (name, computeContext); cache per executor
-    * instance so the lattice's equality checks are cheap and stable. */
-  def forExecutor(e: SqlExecutor): SqlFederationProvider =
-    cache.computeIfAbsent(e, ex => new SqlFederationProvider(ex))
+  /** The executor's own provider ([[SqlExecutor.provider]]). */
+  def forExecutor(e: SqlExecutor): SqlFederationProvider = e.provider
 }

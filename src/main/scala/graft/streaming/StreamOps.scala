@@ -156,26 +156,14 @@ object StreamOps {
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     val ckpt = scratchCheckpoint(name)
     try {
-      def timed[A](seg: String)(f: => A): A =
-        if (!StreamProbeHook.isOn) f
-        else {
-          val t0 = System.nanoTime()
-          try f finally
-            StreamProbeHook.segment(seg, (System.nanoTime() - t0) / 1e6)
-        }
-      val q = timed("start") {
-        df.writeStream
-          .outputMode(mode)
-          .format("memory")
-          .queryName(name)
-          .option("checkpointLocation", ckpt)
-          .start()
-      }
-      try timed("drain")(q.processAllAvailable())
-      finally {
-        StreamProbeHook.progress(q)
-        timed("stop")(q.stop())
-      }
+      val q = df.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", ckpt)
+        .start()
+      try q.processAllAvailable()
+      finally q.stop()
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
       spark.conf

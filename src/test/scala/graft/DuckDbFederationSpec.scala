@@ -618,6 +618,26 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.types.StructField("n_nationkey",
           org.apache.spark.sql.types.IntegerType))))
     assert(frag.exists(_.rowCount.exists(_ < 25)), frag.toString)
+    // a probe of a missing table answers None and is NOT cached: once
+    // another executor creates the table, this one reports its stats
+    val late = RemoteTableRef.parse("late_stats_duck")
+    val kSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType)))
+    val other = new DuckDbSqlExecutor("duck_other", spark, e.dbPath)
+    other.dropTable(late)
+    assert(e.statistics(late).isEmpty)
+    other.createTable(late, kSchema)
+    other.insertInto(late, spark.range(0, 4).selectExpr("id AS k"))
+    assert(e.statistics(late).flatMap(_.rowCount).contains(BigInt(4)))
+    other.dropTable(late)
+    // an at-cap answer is served again without a new statement
+    val capped = new DuckDbSqlExecutor("duck_cap", spark, e.dbPath,
+      statsRowCap = 5L)
+    assert(capped.statistics(RemoteTableRef.parse("nation")).isEmpty)
+    val sent = capped.executedSql.size
+    assert(capped.statistics(RemoteTableRef.parse("nation")).isEmpty)
+    assert(capped.executedSql.size == sent, capped.executedSql)
   }
 
   test("subprocess surfaces engine errors with the message") {

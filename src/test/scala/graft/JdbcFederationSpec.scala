@@ -507,6 +507,42 @@ class JdbcFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the at-cap outcome is served from cache (same answer, no re-probe)
     assert(capped.statistics(
       graft.federation.sql.RemoteTableRef.parse("EMP")).isEmpty)
+    // a probe of a missing table answers None and is NOT cached: once
+    // another executor creates the table, this one reports its stats
+    val late = graft.federation.sql.RemoteTableRef.parse("late_stats")
+    val other = executor
+    assert(ex.statistics(late).isEmpty)
+    other.createTable(late, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType))))
+    other.insertInto(late, spark.range(0, 4).selectExpr("id AS k"))
+    assert(ex.statistics(late).flatMap(_.rowCount).contains(BigInt(4)))
+    // an at-cap answer is served again without a new statement: after the
+    // table shrinks below the cap behind its back, a re-probe would
+    // report 2 rows, the cached answer still reports none
+    val capped3 = new JdbcSqlExecutor("derbycap3", spark, url, DerbyDialect,
+      statsRowCap = 3L)
+    assert(capped3.statistics(late).isEmpty)
+    assert(other.deleteWhere(late, "\"k\" >= 2") == 2L)
+    assert(capped3.statistics(late).isEmpty)
+    other.dropTable(late)
+  }
+
+  test("DDL forgets the replaced table's statistics: a re-created table " +
+      "reports its new row count") {
+    val ex = executor
+    val ref = graft.federation.sql.RemoteTableRef.parse("ddl_stats")
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType)))
+    ex.createTable(ref, schema)
+    ex.insertInto(ref, spark.range(0, 3).selectExpr("id AS k"))
+    assert(ex.statistics(ref).flatMap(_.rowCount).contains(BigInt(3)))
+    ex.createTable(ref, schema)
+    ex.insertInto(ref, spark.range(0, 7).selectExpr("id AS k"))
+    assert(ex.statistics(ref).flatMap(_.rowCount).contains(BigInt(7)),
+      ex.statistics(ref))
+    ex.dropTable(ref)
   }
 
   test("split reads keep NULL split-column rows (null-arm on split 0)") {
