@@ -132,8 +132,8 @@ object RetryStress {
     // or a protocol desync here)
     val poolProbe = dex.runQuery(
       "SELECT COUNT(*), SUM(\"k\") FROM \"retry_duck\"").head
-    val probeOk = poolProbe.get(0).asLong() == n &&
-      poolProbe.get(1).asLong() == n * (n - 1) / 2
+    val probeOk = poolProbe.getLong(0) == n &&
+      poolProbe.getDecimal(1).longValueExact() == n * (n - 1) / 2
 
     // WRITE leg 2: epoch-fenced streaming sink replay — re-delivery of a
     // committed microbatch (routine on recovery) must be a no-op, and the
@@ -148,8 +148,8 @@ object RetryStress {
     val replayDelivery = dex.insertIntoEpoch(eref, edf, epochId = 7L)
     val epochRows = dex.runQuery(
       "SELECT COUNT(*), COUNT(DISTINCT \"k\") FROM \"retry_duck_epoch\"").head
-    val epochTotal = epochRows.get(0).asLong()
-    val epochDistinct = epochRows.get(1).asLong()
+    val epochTotal = epochRows.getLong(0)
+    val epochDistinct = epochRows.getLong(1)
 
     Thread.sleep(500)
     val duckReadFailures = failedTasks.get() - beforeDuckRead

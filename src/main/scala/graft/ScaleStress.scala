@@ -429,7 +429,7 @@ object ScaleStress {
             !s.substring(s.indexOf("WHERE")).contains("gf")),
           s"window split must key on the dense gm:\n${splits.headOption}")
         winCursorCounts = splits.map(s => dex.runQuery(
-          s"SELECT COUNT(*) FROM ($s) c").head.get(0).asLong()).toSeq
+          s"SELECT COUNT(*) FROM ($s) c").head.getLong(0)).toSeq
         n
       }
 
@@ -461,11 +461,10 @@ object ScaleStress {
         s"""$fedJson}""")
     }
 
-    // r14: (1) the boundary FETCH format at 50M — the same fragment
-    // drained through the line-JSON pipe vs the adaptive parquet-staged
-    // path (VERDICT r13 item 2: staged must be ≥3× the JSON pipe); (2)
-    // the streaming source's Trigger.AvailableNow against the 50M fact —
-    // paced backfill in bounded batches, self-termination (item 7).
+    // (1) the boundary FETCH at scale: the whole fragment drained through
+    // 16 split cursors on the Arrow wire; (2) the streaming source's
+    // Trigger.AvailableNow against the same fact — paced backfill in
+    // bounded batches, self-termination.
     val doFetch = sys.env.get("SPARK_GRAFT_SCALE_FETCH").contains("1")
     if (doFetch) {
       import org.apache.spark.sql.types._
@@ -474,10 +473,10 @@ object ScaleStress {
         sys.env.getOrElse("SPARK_GRAFT_SCALE_FED_ROWS", "15000000").toLong
       val db = new java.io.File(s"$outDir/fed-stress.duckdb")
       val mkRef = graft.federation.sql.RemoteTableRef.parse("fact")
-      def mk(nm: String, stageRows: Int) =
+      def mk(nm: String) =
         new graft.federation.duckdb.DuckDbSqlExecutor(nm, spark,
-          db.getAbsolutePath, splitCount = 16, fetchStageRows = stageRows)
-      val dexIngest = mk("duck", 0)
+          db.getAbsolutePath, splitCount = 16)
+      val dexIngest = mk("duck")
       if (regen || !db.exists() || !dexIngest.tableNames.contains("fact")) {
         timed("fed_ingest_duck") {
           dexIngest.createTable(mkRef, StructType(Seq(
@@ -494,28 +493,21 @@ object ScaleStress {
       // full-corpus drain through 16 split cursors; counting inside
       // mapPartitions forces every row across the boundary (an agg would
       // federate and ship one row)
-      def drain(e: graft.federation.duckdb.DuckDbSqlExecutor): Long =
-        graft.federation.Federation.remoteDataFrame(spark, "fact", e)
+      val nArrow = timed("fetch_arrow") {
+        graft.federation.Federation.remoteDataFrame(spark, "fact",
+          mk("duckarrow"))
           .queryExecution.toRdd.mapPartitions { it =>
             var c = 0L; while (it.hasNext) { it.next(); c += 1 }
             Iterator(c)
           }.collect().sum
-      val s0 =
-        graft.federation.duckdb.DuckDbProcess.stagedFetches.get()
-      // staged first: the JSON leg then runs against a page-cache-warm
-      // db file, so the reported ratio is conservative
-      val nStaged = timed("fetch_staged") { drain(mk("duckstage", 65536)) }
-      val stagedFiles =
-        graft.federation.duckdb.DuckDbProcess.stagedFetches.get() - s0
-      val nJson = timed("fetch_json") { drain(mk("duckjson", 0)) }
-      require(nStaged == nFact && nJson == nFact,
-        s"fetch drains must carry the corpus: staged=$nStaged json=$nJson")
-      require(stagedFiles > 0, "the staged path was not exercised")
+      }
+      require(nArrow == nFact,
+        s"the fetch drain must carry the corpus: $nArrow of $nFact")
 
       // streaming AvailableNow backfill: paced at 1/10 of the corpus per
       // batch, must drain fully in bounded advancing batches and stop
       graft.federation.Federation.registerCatalog(spark, "fetchcat",
-        Seq(mk("duckan", 65536)))
+        Seq(mk("duckan")))
       val step = math.max(1L, nFact / 10L)
       val ckpt = java.nio.file.Files
         .createTempDirectory("fed_an50_ck").toString
@@ -554,10 +546,7 @@ object ScaleStress {
           f""""$n":{"sec":${p.sec}%.1f,"shuffle_write_mb":${p.w / 1048576},"shuffle_read_mb":${p.r / 1048576}}"""
         }.mkString(",")
       println(
-        s"""{"fetch_rows":$nFact,"staged_files":$stagedFiles,""" +
-        s""""fetch_speedup":${
-          math.round(phases("fetch_json").sec /
-            math.max(0.001, phases("fetch_staged").sec) * 100.0) / 100.0},""" +
+        s"""{"fetch_rows":$nFact,""" +
         s""""an_batches":${nBatches.get()},"an_rows":${batchRows.get()},""" +
         s""""an_max_batch":${maxBatch.get()},"an_terminated":$anTerminated,""" +
         s"""$fetchJson}""")

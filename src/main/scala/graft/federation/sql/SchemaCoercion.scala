@@ -1,6 +1,7 @@
 package graft.federation.sql
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, JsonToStructs}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -46,5 +47,45 @@ object SchemaCoercion {
       case (CalendarIntervalType, _: DayTimeIntervalType) =>
         IntervalCast.toDayTime(c)
       case _ => c.cast(dst)
+    }
+
+  /** The same rules over a catalyst expression, strict, for rows leaving a
+    * remote wire: JSON text decodes in FAILFAST mode and every other cast
+    * is ANSI, so an impossible value fails the read instead of becoming
+    * null. Naive timestamps are read as UTC. A native struct keeps its
+    * fields only under the same names (case-insensitive): both the pass
+    * through and the cast match fields by position, so a renamed or
+    * reordered field is refused instead of landing in the wrong slot. */
+  def strict(e: Expression, dst: DataType): Expression = {
+    if (!sameFieldNames(e.dataType, dst))
+      throw new IllegalArgumentException(
+        s"struct fields differ by name: the remote value is " +
+          s"${e.dataType.sql}, the declared type ${dst.sql}")
+    (e.dataType, dst) match {
+      case (a, b) if DataType.equalsStructurally(a, b,
+          ignoreNullability = true) => e
+      case (StringType, _: ArrayType | _: StructType | _: MapType) =>
+        JsonToStructs(dst, Map("mode" -> "FAILFAST"), e, Some("UTC"))
+      case (CalendarIntervalType, _: YearMonthIntervalType) =>
+        IntervalCast.CalendarToYearMonth(e)
+      case (CalendarIntervalType, _: DayTimeIntervalType) =>
+        IntervalCast.CalendarToDayTime(e)
+      case _ => Cast(e, dst, Some("UTC"), EvalMode.ANSI)
+    }
+  }
+
+  private def sameFieldNames(a: DataType, b: DataType): Boolean =
+    (a, b) match {
+      case (x: StructType, y: StructType) =>
+        x.length == y.length && x.fields.zip(y.fields).forall {
+          case (f, g) => f.name.equalsIgnoreCase(g.name) &&
+            sameFieldNames(f.dataType, g.dataType)
+        }
+      case (x: ArrayType, y: ArrayType) =>
+        sameFieldNames(x.elementType, y.elementType)
+      case (x: MapType, y: MapType) =>
+        sameFieldNames(x.keyType, y.keyType) &&
+          sameFieldNames(x.valueType, y.valueType)
+      case _ => true
     }
 }

@@ -10,13 +10,13 @@ import graft.federation.plans.FederatedPlan
 import graft.federation.sql.{DuckDbDialect, RemoteTableRef}
 
 /** End-to-end federation against the LIVE DuckDB engine (python duckdb
-  * subprocess speaking line-JSON; reads happen inside tasks as read-only
-  * file opens). This is the second real engine next to Derby — and the
-  * load-bearing one: the DuckDb dialect backs every unparser golden and
-  * the driver's oracle itself runs DuckDB. The capability probes below
-  * pin the dialect's claims against the engine, the same discipline that
-  * hardened DerbyDialect (CHAR padding, FETCH forms, AVG typing) in
-  * rounds 6-8.
+  * subprocess answering queries with Arrow IPC streams; reads happen
+  * inside tasks as read-only file opens). This is the second real engine
+  * next to Derby — and the load-bearing one: the DuckDb dialect backs
+  * every unparser golden and the correctness oracle itself runs DuckDB. The
+  * capability probes below pin the dialect's claims against the engine,
+  * the same discipline that hardened DerbyDialect (CHAR padding, FETCH
+  * forms, AVG typing) in rounds 6-8.
   */
 class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -403,12 +403,12 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // recovery replay of the SAME epoch: no-op, no duplicate rows
     assert(!e.insertIntoEpoch(ref, batch, epochId = 7L))
     assert(e.runQuery("SELECT COUNT(*) FROM \"epoch_target\"")
-      .head.get(0).asLong() == 3L)
+      .head.getLong(0) == 3L)
     // a NEW epoch appends
     assert(e.insertIntoEpoch(ref,
       Seq((4L, "d")).toDF("k", "v"), epochId = 8L))
     assert(e.runQuery("SELECT COUNT(*) FROM \"epoch_target\"")
-      .head.get(0).asLong() == 4L)
+      .head.getLong(0) == 4L)
     // the fence rode the SAME transaction as the rows
     val log = e.dmlLog.synchronized(e.dmlLog.toVector)
     val begin = log.lastIndexOf("BEGIN")
@@ -654,7 +654,7 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = e.runQuery(
       """SELECT t."a", t."b" FROM (VALUES (1, 'x'), (2, 'y')) AS t("a", "b")
         |ORDER BY t."a"""".stripMargin)
-    assert(got.map(_.get(1).asText()) == Vector("x", "y"))
+    assert(got.map(_.getString(1)) == Seq("x", "y"))
   }
 
   test("nulls ordering: dialect default matches the engine") {
@@ -662,7 +662,7 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e = ex
     val got = e.runQuery(
       "SELECT x FROM (VALUES (1), (NULL), (2)) AS t(x) ORDER BY x")
-    assert(got.last.get(0).isNull, got.toString)
+    assert(got.last.isNullAt(0), got.toString)
   }
 
   test("range-split scan claims RangePartitioning: window on the split " +
@@ -760,6 +760,18 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(1).getStruct(1).getStruct(1).isNullAt(0))
     assert(got(1).getStruct(1).getStruct(1).getSeq[Int](1).isEmpty)
     assert(got(2).isNullAt(1))
+    // a declared struct whose field names differ from the engine's (here
+    // swapped, over the same positional types) is refused by name; it is
+    // never matched by position
+    import org.apache.spark.sql.types._
+    val pType = df.schema("p").dataType.asInstanceOf[StructType]
+    val swapped = StructType(Seq(df.schema("id"), StructField("p",
+      StructType(Seq(pType(0).copy(name = "m"), pType(1).copy(name = "seg"))))))
+    var err: Throwable = intercept[Throwable](Federation
+      .remoteDataFrameAs(spark, "struct_wire_probe", e, swapped).collect())
+    val msg = new StringBuilder
+    while (err != null) { msg.append(err.getMessage).append(' '); err = err.getCause }
+    assert(msg.toString.contains("struct fields differ by name"), msg)
   }
 
   test("declared struct schema over a JSON text column decodes at the " +
@@ -789,6 +801,29 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(0).getStruct(1).getDouble(1) == 1.5)
     assert(got(0).getStruct(1).getSeq[Long](2) == Seq(7L, 8L))
     assert(got(1).isNullAt(1))
+    // an impossible value fails the read and names the problem; it never
+    // decodes as null
+    def failure(table: String, text: String, declared: StructType) = {
+      e.runDdl(RemoteTableRef.parse(table), Seq(
+        s"DROP TABLE IF EXISTS $table",
+        s"CREATE TABLE $table AS SELECT 1 AS id, '$text' AS payload"))
+      val err = intercept[Throwable] {
+        Federation.remoteDataFrameAs(spark, table, e, declared).collect()
+      }
+      var c: Throwable = err
+      val sb = new StringBuilder
+      while (c != null) { sb.append(c.getMessage).append(' '); c = c.getCause }
+      sb.toString
+    }
+    val malformed = failure("json_malformed_probe",
+      """{"seg": "C", "bal": 2.5""", declared)
+    assert(malformed.contains("end-of-input"), malformed)
+    val overflow = failure("json_overflow_probe", """{"amt": 123456.789}""",
+      StructType(Seq(StructField("id", IntegerType),
+        StructField("payload", StructType(Seq(
+          StructField("amt", DecimalType(5, 2))))))))
+    assert(overflow.contains("cannot be represented as Decimal(5, 2)"),
+      overflow)
   }
 
   test("MAP / ENUM / unsigned / UUID / TIME / TIMESTAMPTZ type strings " +
@@ -954,10 +989,10 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Differential oracle for the nested wire: a random TYPE TREE is
     // rendered as a DuckDB literal (crosses the subprocess wire) AND as
     // the equivalent Spark SQL literal (never leaves the JVM); the
-    // collected rows must be identical. Exercises the type parser, the
-    // JSON wire forms, and convertValue recursion on shapes no
-    // hand-written spec enumerates. FP kept out (textual round-trip is
-    // a separate concern); DECIMAL/DATE/BOOL/VARCHAR/INT/BIGINT in.
+    // collected rows must be identical. Exercises the type parser and
+    // the Arrow wire's nested vectors on shapes no hand-written spec
+    // enumerates. FP kept out (textual round-trip is a separate
+    // concern); DECIMAL/DATE/BOOL/VARCHAR/INT/BIGINT in.
     import scala.util.Random
     Federation.install(spark)
     val e = ex
@@ -1139,25 +1174,21 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.getDecimal(7).compareTo(
       new java.math.BigDecimal("9223372036854775812")) == 0)
     assert(got.getString(8) == "hi")
-  }
-
-  test("interval text parses: engine's canonical rendering → CalendarInterval") {
-    import org.apache.spark.unsafe.types.CalendarInterval
-    def p(s: String) = DuckDbProcess.parseIntervalText(s)
-    assert(p("3 months") == new CalendarInterval(3, 0, 0L))
-    assert(p("2 years 3 months") == new CalendarInterval(27, 0, 0L))
-    assert(p("14 days") == new CalendarInterval(0, 14, 0L))
-    assert(p("1 day 02:03:04.5678") ==
-      new CalendarInterval(0, 1, ((2L * 60 + 3) * 60 + 4) * 1000000L + 567800L))
-    assert(p("-3 months") == new CalendarInterval(-3, 0, 0L))
-    assert(p("00:00:00") == new CalendarInterval(0, 0, 0L))
-    // the time part's leading sign applies to the whole HH:MM:SS tail
-    assert(p("-1 day -02:00:00") ==
-      new CalendarInterval(0, -1, -2L * 3600 * 1000000L))
-    assert(p("26:00:00") == new CalendarInterval(0, 0, 26L * 3600 * 1000000L))
-    assert(p("-00:00:00.5") == new CalendarInterval(0, 0, -500000L))
-    assert(p("1 month -2 days 03:00:00") ==
-      new CalendarInterval(1, -2, 3L * 3600 * 1000000L))
+    // TIME WITH TIME ZONE, top-level or nested: DuckDB exports it without
+    // its UTC offset, so the read fails and names the type; '12:34:56'
+    // never reaches a row. Columns beside it still read.
+    e.runDdl(RemoteTableRef.parse("timetz_wire_probe"), Seq(
+      "DROP TABLE IF EXISTS timetz_wire_probe",
+      "CREATE TABLE timetz_wire_probe AS SELECT 1 AS id, " +
+        "TIMETZ '12:34:56+02' AS ttz, [TIMETZ '01:00:00+01'] AS ttzs"))
+    val ttz = Federation.remoteDataFrame(spark, "timetz_wire_probe", e)
+    for (c <- Seq("ttz", "ttzs")) {
+      var err: Throwable = intercept[Throwable](ttz.select(c).collect())
+      val msg = new StringBuilder
+      while (err != null) { msg.append(err.getMessage).append(' '); err = err.getCause }
+      assert(msg.toString.contains("TIME WITH TIME ZONE cannot cross"), msg)
+    }
+    assert(ttz.select("id").collect().head.getInt(0) == 1)
   }
 
   test("INTERVAL columns cross the live wire losslessly (the client's " +
@@ -1188,19 +1219,17 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
       "DROP TABLE IF EXISTS iv_order_probe",
       "CREATE TABLE iv_order_probe AS SELECT range AS id, " +
         "to_days(CAST(range AS INT)) AS iv FROM range(1, 1001)"))
-    // output-name sort key: the tail hoists outside the wrap, so the
-    // SQL-level ordering guarantee is structural, not insertion-order luck
+    // output-name sort key over a result with an INTERVAL column
     val rows = e.runQuery(
       "SELECT id, iv FROM iv_order_probe ORDER BY id DESC")
-    assert(rows.map(_.get(0).asLong()) == (1000L to 1L by -1L).toVector)
-    // alias-qualified sort key DROPPED from the output: the tail cannot
-    // bind outside the wrap; it stays inside with order preservation
-    // pinned engine-side — every one of the 1000 rows must arrive in order
+    assert(rows.map(_.getLong(0)) == (1000L to 1L by -1L))
+    // alias-qualified sort key DROPPED from the output — every one of the
+    // 1000 rows must arrive in order
     val rows2 = e.runQuery(
       "SELECT t1.iv AS iv FROM iv_order_probe t1 ORDER BY t1.id DESC")
-    val expect = (1000L to 1L by -1L).map(d =>
-      if (d == 1L) "1 day" else s"$d days").toVector
-    assert(rows2.map(_.get(0).asText()) == expect)
+    val expect = (1000 to 1 by -1).map(d =>
+      new org.apache.spark.unsafe.types.CalendarInterval(0, d, 0L))
+    assert(rows2.map(_.get(0)) == expect)
   }
 
   test("ORDER BY a declared interval column sorts the INTERVAL, not its " +
@@ -1219,9 +1248,9 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
       StructField("dt", DayTimeIntervalType())))
     def table = Federation
       .remoteDataFrameAs(spark, "iv_sort_probe", e, declared)
-    // the judge repro: aliased interval sort key + remote LIMIT; the
-    // hoisted ORDER BY would bind the alias to the VARCHAR wrap and
-    // return text-ordered rows ('9 days' > '15 days')
+    // aliased interval sort key + remote LIMIT: sorting the interval's
+    // text instead of the interval would return text-ordered rows
+    // ('9 days' > '15 days')
     val top3 = table.select(col("id"), col("dt").as("dt2"))
       .orderBy(col("dt2").desc).limit(3).collect().map(_.getLong(0)).toSeq
     assert(top3 == Seq(15L, 14L, 13L), s"text-ordered rows leaked: $top3")
@@ -1351,13 +1380,13 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     e.insertInto(ref, spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
     assert(e.runQuery("SELECT COUNT(*) FROM empty_write_probe")
-      .head.get(0).asLong() == 0L)
+      .head.getLong(0) == 0L)
     // a second, non-empty insert still lands (the empty pass poisoned
     // nothing)
     import spark.implicits._
     e.insertInto(ref, Seq((1, "a")).toDF("id", "v"))
     assert(e.runQuery("SELECT COUNT(*) FROM empty_write_probe")
-      .head.get(0).asLong() == 1L)
+      .head.getLong(0) == 1L)
     assert(!e.tableNames.exists(_.contains("__stg_")), "staging leftovers")
   }
 
@@ -1551,12 +1580,14 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(msgs(err).toLowerCase.contains("duckdb error"))
   }
 
-  test("nested INTERVAL (inside list/struct) fails loud at the wire — " +
-      "the lossy timedelta never reaches a row") {
-    val err = intercept[IllegalStateException] {
-      ex.runQuery("SELECT [to_months(3)] AS ivs")
-    }
-    assert(err.getMessage.contains("INTERVAL nested"))
+  test("nested INTERVAL (inside list/struct) crosses the wire " +
+      "losslessly — months stay months") {
+    import org.apache.spark.unsafe.types.CalendarInterval
+    val row = ex.runQuery(
+      "SELECT [to_months(3)] AS ivs, {'iv': to_months(3)} AS st").head
+    assert(row.getSeq[CalendarInterval](0) ==
+      Seq(new CalendarInterval(3, 0, 0L)))
+    assert(row.getStruct(1).get(0) == new CalendarInterval(3, 0, 0L))
   }
 
   // ---------------------------------------------- DSv2 TableCatalog
@@ -1995,7 +2026,7 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"split filter must not key on the 3-value column:\n${splits.head}")
       // balance: run each shipped split SQL as a remote COUNT
       val counts = splits.map(s =>
-        e.runQuery(s"SELECT COUNT(*) FROM ($s) c").head.get(0).asLong())
+        e.runQuery(s"SELECT COUNT(*) FROM ($s) c").head.getLong(0))
       assert(counts.sum == N, counts.toString)
       val mean = counts.sum.toDouble / counts.size
       assert(counts.forall(_ <= 2 * mean),
@@ -2663,9 +2694,8 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"a lambda leaked to local eval:\n$plan")
   }
 
-  test("staged boundary fetch: rows past the stage threshold spill to " +
-      "parquet and reproduce the JSON wire EXACTLY (all stageable types, " +
-      "NaN/Inf, pre-1582 dates, nulls, blobs)") {
+  test("Arrow wire round-trip: every column matches its closed form " +
+      "(NaN/Inf, pre-1582 dates, nulls, blobs), across record batches") {
     Federation.install(spark)
     val base = ex
     base.runDdl(RemoteTableRef.parse("staged_probe"), Seq(
@@ -2679,6 +2709,7 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  CAST(range * 7 AS INTEGER) AS i32,
         |  CASE WHEN range % 11 = 0 THEN 'NaN'::DOUBLE
         |       WHEN range % 13 = 0 THEN 'Infinity'::DOUBLE
+        |       WHEN range % 17 = 0 THEN '-Infinity'::DOUBLE
         |       ELSE range / 7.0 END AS d,
         |  CAST(range AS FLOAT) / 3 AS f,
         |  CAST(range / 100.0 AS DECIMAL(12,3)) AS dec,
@@ -2687,51 +2718,61 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  TIMESTAMPTZ '2024-06-01 12:00:00+00' + INTERVAL (range) MINUTE AS tsz,
         |  CASE WHEN range % 5 = 0 THEN NULL ELSE encode('b' || range) END AS bin
         |FROM range(500)""".stripMargin))
-    val exStage = new DuckDbSqlExecutor("duckstage", spark, base.dbPath,
-      fetchStageRows = 64)
-    val exJson = new DuckDbSqlExecutor("duckjson", spark, base.dbPath,
-      fetchStageRows = 0)
-    // bitwise-comparable row images: NaN != NaN under ==, byte arrays
-    // compare by reference — normalize both
-    def rows(e: DuckDbSqlExecutor): Array[Seq[Any]] =
-      Federation.remoteDataFrame(spark, "staged_probe", e)
-        .orderBy("id").collect().map(_.toSeq.map {
-          case d: Double => java.lang.Double.doubleToLongBits(d)
-          case f: Float => java.lang.Float.floatToIntBits(f)
-          case a: Array[Byte] => a.toSeq
-          case x => x
-        })
-    val c0 = DuckDbProcess.stagedFetches.get()
-    val viaJson = rows(exJson)
-    assert(DuckDbProcess.stagedFetches.get() == c0,
-      "fetchStageRows=0 must never open a staged file")
-    val viaStage = rows(exStage)
-    assert(DuckDbProcess.stagedFetches.get() > c0,
-      "the staged path was not exercised (threshold 64 over 500 rows)")
-    assert(viaJson.length == 500 && viaStage.length == 500)
-    viaStage.zip(viaJson).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(a == b, s"row $i diverges:\n staged=$a\n json  =$b")
+    val got = Federation.remoteDataFrame(spark, "staged_probe", base)
+      .orderBy("id").collect()
+    assert(got.length == 500)
+    got.zipWithIndex.foreach { case (row, i) =>
+      val r = i.toLong
+      // NaN != NaN under ==: compare doubles and floats bitwise
+      val d =
+        if (r % 11 == 0) Double.NaN
+        else if (r % 13 == 0) Double.PositiveInfinity
+        else if (r % 17 == 0) Double.NegativeInfinity
+        else r / 7.0
+      val want = Seq[Any](
+        r,
+        if (r % 7 == 0) null else s"v$r",
+        r % 2 == 0,
+        (r % 120).toByte,
+        (r * 3).toShort,
+        (r * 7).toInt,
+        java.lang.Double.doubleToLongBits(d),
+        java.lang.Float.floatToIntBits(r.toFloat / 3f),
+        java.math.BigDecimal.valueOf(r, 2).setScale(3),
+        java.time.LocalDate.of(1500, 1, 3).plusDays(r).toString,
+        java.time.LocalDateTime.of(1500, 1, 3, 4, 5, 6).plusSeconds(r),
+        java.time.Instant.parse("2024-06-01T12:00:00Z").plusSeconds(60 * r),
+        if (r % 5 == 0) null else s"b$r".getBytes("UTF-8").toSeq)
+      val seen = row.toSeq.map {
+        case x: Double => java.lang.Double.doubleToLongBits(x)
+        case x: Float => java.lang.Float.floatToIntBits(x)
+        case x: java.sql.Date => x.toString
+        case x: java.sql.Timestamp => x.toInstant
+        case x: Array[Byte] => x.toSeq
+        case x => x
+      }
+      assert(seen == want, s"row $i:\n got =$seen\n want=$want")
     }
-    // a result UNDER the threshold stays pure JSON — no file overhead
-    val c1 = DuckDbProcess.stagedFetches.get()
-    val small = Federation.remoteDataFrame(spark, "staged_probe", exStage)
-      .filter("id < 10").collect()
-    assert(small.length == 10)
-    assert(DuckDbProcess.stagedFetches.get() == c1,
-      "a 10-row result must not stage")
-    // a non-stageable declared schema (LIST column) falls back to the
-    // type-faithful JSON wire silently
+    // one result past fetchStageRows crosses record-batch boundaries,
+    // through a task's read and through the driver-side read
+    val n = base.fetchStageRows * 2L + 1234L
+    val big = s"SELECT range AS id FROM range($n)"
+    val ids = base.execute(big, org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("id",
+        org.apache.spark.sql.types.LongType))))
+      .map(_.getLong(0)).collect()
+    assert(ids.length == n && ids.sum == n * (n - 1) / 2)
+    val driverIds = base.runQuery(big).map(_.getLong(0))
+    assert(driverIds.length == n && driverIds.sum == n * (n - 1) / 2)
+    // nested values ride the same stream
     base.runDdl(RemoteTableRef.parse("staged_probe_list"), Seq(
       "DROP TABLE IF EXISTS staged_probe_list",
       "CREATE TABLE staged_probe_list AS " +
         "SELECT range AS id, [range, range + 1] AS lst FROM range(200)"))
-    val c2 = DuckDbProcess.stagedFetches.get()
-    val lst = Federation.remoteDataFrame(spark, "staged_probe_list", exStage)
+    val lst = Federation.remoteDataFrame(spark, "staged_probe_list", base)
       .collect()
     assert(lst.length == 200 &&
       lst.map(_.getSeq[Long](1).sum).sum == (0L until 200L).map(2 * _ + 1).sum)
-    assert(DuckDbProcess.stagedFetches.get() == c2,
-      "nested types must keep the JSON wire")
   }
 
   test("DSv2 catalog: CREATE TABLE and DROP TABLE reach the remote " +

@@ -147,7 +147,7 @@ class ReadChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(scan.head.sqls.size > 1, "the fetch must be multi-split")
       // pool hygiene: dead workers never rejoin; the next queries are clean
       assert(e.runQuery("SELECT COUNT(*) FROM chaos_big")
-        .head.get(0).asLong() == N)
+        .head.getLong(0) == N)
       assert(Federation.remoteDataFrame(spark, "chaos_big", e).count() == N)
     } finally {
       spark.sparkContext.removeSparkListener(chaosListener)
@@ -242,7 +242,7 @@ class ReadChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(landed, "chaos never landed on a surviving stream in 4 attempts")
       // pool hygiene: the engine still serves after the kills
       assert(e.runQuery("SELECT COUNT(*) FROM chaos_stream")
-        .head.get(0).asLong() == N)
+        .head.getLong(0) == N)
     } finally {
       spark.sparkContext.removeSparkListener(chaosListener)
       e.runWrite(Seq("DROP TABLE IF EXISTS chaos_stream"))

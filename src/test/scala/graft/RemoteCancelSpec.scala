@@ -93,7 +93,7 @@ class RemoteCancelSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pool hygiene: the killed server was destroyed, never returned — the
     // next requests (fresh or pooled servers) answer exactly
     (1 to 3).foreach { i =>
-      val got = ex.runQuery(s"SELECT $i * 7").head.get(0).asInt()
+      val got = ex.runQuery(s"SELECT $i * 7").head.getInt(0)
       assert(got == i * 7, s"poisoned pooled server reuse: got $got")
     }
   }

@@ -149,9 +149,9 @@ class UnparserSpec extends AnyFunSuite {
     // is zero — DayTimeInterval has no months (strict IntervalCast refuses
     // at the wire), YearMonthInterval has no days/micros. The mixed
     // CalendarIntervalType can never reach here: Spark's analyzer rejects
-    // sorting it. The DuckDB wire leg keeps such ORDER BY on the NATIVE
-    // interval inside the text wrap (DuckDbSqlExecutor hoistable refusal);
-    // ordering claims stay refused via orderingPortable.
+    // sorting it. On the DuckDB wire the engine sorts the NATIVE interval
+    // (it crosses as an Arrow interval, never as text); ordering claims
+    // stay refused via orderingPortable.
     val iv = rel("tv", "id" -> LongType, "dt" -> DayTimeIntervalType())
     val plan = GlobalLimit(Literal(3),
       LocalLimit(Literal(3),
