@@ -250,7 +250,7 @@ object Bench {
       warn += f"LOADED BOX (mid-sweep): calibration drifted ${calibDrift}%.2fx over the sweep - timings are inflated, re-run quiet before recording a regression"
     pinRatio.filter(_ > 1.5).foreach { r =>
       if (sampleMedianRatio.exists(_ <= 1.3))
-        warn += f"STARTUP LOAD ONLY: calibration baseline is ${r}%.2fx the quiet-box pin but the in-sweep sample median is ${sampleMedianRatio.get}%.2fx the pin - the baseline caught startup load, the sweep itself ran at quiet speed"
+        warn += f"STARTUP LOAD ONLY: calibration baseline is ${r}%.2fx the quiet-box pin but the in-sweep sample median is ${sampleMedianRatio.get}%.2fx the pin - the baseline caught start-up load; later samples ran at quiet speed, but gates timed early in the sweep may still carry start-up load"
       else
         warn += f"LOADED BOX (from the start): calibration baseline is ${r}%.2fx the committed quiet-box pin - the whole sweep is inflated"
     }

@@ -707,22 +707,11 @@ object DerbyDialect extends SqlDialect {
   // no grouping analytics at all: GROUP BY GROUPING SETS raises
   // 'Encountered "SETS"' (caught live by the ROLLUP fuzz case)
   override def supportsGroupingSets: Boolean = false
-  override def lossyDecimalCast(x: String, p: Int, s: Int): String = {
-    if (p + 2 > 31) // Derby's max decimal precision; no room for the guard
-      throw new UnparseUnsupported(s"decimal($p,$s) too wide to round-cast on derby")
-    val half = java.math.BigDecimal.valueOf(5L, s + 1).toPlainString
-    // HALF_UP overflows DECIMAL(p,s) exactly when |x| >= max + 5·10^-(s+1)
-    // (same boundary as the nudge-then-truncate emulation). There Spark's
-    // non-ANSI cast yields NULL while Derby raises 22003 and fails the
-    // whole query — so the overflow arm yields NULL explicitly. The
-    // in-range arm's intermediate DECIMAL(p+2,s+1) then always fits.
-    val bound = new java.math.BigDecimal(
-        java.math.BigInteger.TEN.pow(p).subtract(java.math.BigInteger.ONE), s)
-      .add(java.math.BigDecimal.valueOf(5L, s + 1)).toPlainString
-    s"(CASE WHEN ABS($x) >= $bound THEN CAST(NULL AS DECIMAL($p,$s)) " +
-      s"ELSE CAST(CAST($x AS DECIMAL(${p + 2},${s + 1})) + " +
-      s"(CASE WHEN $x >= 0 THEN $half ELSE -$half END) AS DECIMAL($p,$s)) END)"
-  }
+  // CAST to DECIMAL truncates on Derby (probed live) for DECIMAL and
+  // DOUBLE sources alike; 31 is its max decimal precision
+  override def lossyDecimalCast(x: String, from: DataType, to: DecimalType,
+      nullOnOverflow: Boolean): String =
+    nudgeThenTruncate(x, to, 31, nullOnOverflow)
   // Derby has no ANSI keyword literals TIMESTAMP '...' / DATE '...' —
   // only the function forms TIMESTAMP('...') / DATE('...'). And its
   // parser rejects a bare NULL in almost every expression position

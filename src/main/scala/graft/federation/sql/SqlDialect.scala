@@ -270,11 +270,40 @@ trait SqlDialect {
     * Spark's semantics at no cost. */
   def sumIntegralNeedsWidening: Boolean = false
 
-  /** CAST to DECIMAL(p,s) where the source has excess scale (double/float,
-    * or a wider-scale decimal). Spark rounds HALF_UP; engines that
-    * truncate instead (Derby, probed live) override with an emulation. */
-  def lossyDecimalCast(x: String, p: Int, s: Int): String =
-    s"CAST($x AS DECIMAL($p,$s))"
+  /** CAST to `to` where the `from` source has excess scale (double/float,
+    * or a wider-scale decimal). Spark rounds HALF_UP. On overflow (and on
+    * NaN/±Inf) it yields NULL when `nullOnOverflow` (a LEGACY or TRY cast,
+    * `CheckOverflow.nullOnOverflow`) and raises under ANSI. Engines whose
+    * cast rounds differently (Derby and DuckDB, probed live) override. */
+  def lossyDecimalCast(x: String, from: DataType, to: DecimalType,
+      nullOnOverflow: Boolean): String =
+    s"CAST($x AS ${typeName(to)})"
+
+  /** Spark's HALF_UP on an engine whose cast to DECIMAL truncates toward
+    * zero: cast to one more digit of scale, add half a unit away from
+    * zero and let the final cast truncate. HALF_UP overflows DECIMAL(p,s)
+    * exactly when |x| >= max + 5·10^-(s+1); a LEGACY/TRY cast yields NULL
+    * there, while an ANSI one lets the engine's out-of-range error
+    * through from the final cast. The intermediate DECIMAL(p+2,s+1) fits
+    * every in-range value, so it needs two digits under `maxPrecision`. */
+  protected final def nudgeThenTruncate(x: String, to: DecimalType,
+      maxPrecision: Int, nullOnOverflow: Boolean): String = {
+    val (p, s) = (to.precision, to.scale)
+    if (p + 2 > maxPrecision)
+      throw new UnparseUnsupported(
+        s"decimal($p,$s) too wide to round-cast on $name")
+    val half = java.math.BigDecimal.valueOf(5L, s + 1).toPlainString
+    val nudged = s"CAST(CAST($x AS DECIMAL(${p + 2},${s + 1})) + " +
+      s"(CASE WHEN $x >= 0 THEN $half ELSE -$half END) AS DECIMAL($p,$s))"
+    if (!nullOnOverflow) nudged
+    else {
+      val bound = new java.math.BigDecimal(
+          java.math.BigInteger.TEN.pow(p).subtract(java.math.BigInteger.ONE), s)
+        .add(java.math.BigDecimal.valueOf(5L, s + 1)).toPlainString
+      s"(CASE WHEN ABS($x) >= $bound THEN CAST(NULL AS DECIMAL($p,$s)) " +
+        s"ELSE $nudged END)"
+    }
+  }
 
   /** Null-safe equality (Spark `<=>`). Engines without IS NOT DISTINCT
     * FROM emulate with COALESCE — exact in every context, including
@@ -498,24 +527,78 @@ object DuckDbDialect extends SqlDialect {
   // operator chain has Spark's NULL semantics
   override def concat(args: Seq[String]): String =
     args.mkString("(", " || ", ")")
-  // CAST to DECIMAL(p,s) TRUNCATES toward zero on DuckDB (probed live:
-  // 2.5→2, -2.5→-2, 1.9999995→1.999999) where Spark rounds HALF_UP —
-  // same nudge-then-truncate emulation as Derby's, with DuckDB's max
-  // precision 38 bounding the two guard digits
-  override def lossyDecimalCast(x: String, p: Int, s: Int): String = {
-    if (p + 2 > 38)
+  // A cast to DECIMAL(p,s) rounds on DuckDB 1.0 by source type (probed
+  // live). DECIMAL and FLOAT sources TRUNCATE toward zero (2.5→2,
+  // -2.5→-2, 1.9999995→1.999999). A DOUBLE source rounds its binary value
+  // (2.5→3, 1.005→1.01, 0.004999999995→0.01 at scale 2), where Spark
+  // rounds the double's decimal text HALF_UP (0.004999999995→0.00). So
+  // DOUBLE sources, and FLOAT ones widened to DOUBLE, take `roundDouble`;
+  // DECIMAL sources take nudge-then-truncate, DuckDB's max precision 38
+  // bounding its two guard digits.
+  override def lossyDecimalCast(x: String, from: DataType, to: DecimalType,
+      nullOnOverflow: Boolean): String = from match {
+    case DoubleType => roundDouble(x, to, nullOnOverflow)
+    case FloatType => roundDouble(s"CAST($x AS DOUBLE)", to, nullOnOverflow)
+    case _ => nudgeThenTruncate(x, to, 38, nullOnOverflow)
+  }
+
+  /** Spark's `CAST(double AS DECIMAL(p,s))`: HALF_UP on the text
+    * `Double.toString` gives the double. Three arms, tried in order:
+    *  1. `|x| < 10^min(11-s, p-s)` (less a unit when p <= 11, where a
+    *     round-up would overflow unchecked) and `x·10^s` more than 1e-4
+    *     from a half: DuckDB's own cast, on 64-bit integers (a DECIMAL
+    *     past 18 digits runs in 128-bit HUGEINT, several times slower).
+    *     `x·10^s < 10^11`, so the double product is off by under 1e-5
+    *     and both engines pick the same integer. This arm also takes
+    *     every value under half a unit, whose exponent text DuckDB 1.0
+    *     mis-parses ('9.9e-07' becomes 0.01 at scale 2). Past scale 11
+    *     there is no such arm, and a plain compare sends those values to
+    *     0 instead.
+    *  2. NaN and ±Inf: NULL in every mode (Spark's text of them is no
+    *     number). `|x| >= 10^(p-s)`: NULL, or under ANSI DuckDB's own
+    *     cast, which raises. The nearest double to 10^k prints as 1e+k,
+    *     so this compare matches Spark's test on the text. Without ANSI
+    *     one compare does both: DuckDB orders NaN above every number.
+    *  3. The rest (ties, near-ties, magnitudes past arm 1) parse
+    *     `CAST(x AS VARCHAR)`, DuckDB's shortest text, HALF_UP. The parse
+    *     goes to one more digit of precision and then narrows, because a
+    *     round-up into 10^(p-s) passes the parse unchecked ('99.995' →
+    *     100.00 in DECIMAL(4,2)) but not the narrowing cast.
+    * Below 1e16 the value of `Double.toString` on JDK 17 is the shortest
+    * text's (no difference in 800k sampled doubles). From 1e16 up JDK 17
+    * prints digits that are not the shortest (6.8615415705361114E17,
+    * where DuckDB prints 6.861541570536111e+17), and nothing in DuckDB
+    * reproduces them, so a target with more than 16 integer digits stays
+    * local. */
+  private def roundDouble(x: String, to: DecimalType,
+      nullOnOverflow: Boolean): String = {
+    val (p, s) = (to.precision, to.scale)
+    if (p - s > 16)
       throw new UnparseUnsupported(
-        s"decimal($p,$s) too wide to round-cast on duckdb")
-    val half = java.math.BigDecimal.valueOf(5L, s + 1).toPlainString
-    // HALF_UP overflows DECIMAL(p,s) exactly when |x| >= max + 5·10^-(s+1);
-    // Spark's non-ANSI cast yields NULL there while DuckDB raises a
-    // conversion error and fails the whole query — yield NULL explicitly
-    val bound = new java.math.BigDecimal(
-        java.math.BigInteger.TEN.pow(p).subtract(java.math.BigInteger.ONE), s)
-      .add(java.math.BigDecimal.valueOf(5L, s + 1)).toPlainString
-    s"(CASE WHEN ABS($x) >= $bound THEN CAST(NULL AS DECIMAL($p,$s)) " +
-      s"ELSE CAST(CAST($x AS DECIMAL(${p + 2},${s + 1})) + " +
-      s"(CASE WHEN $x >= 0 THEN $half ELSE -$half END) AS DECIMAL($p,$s)) END)"
+        s"double to decimal($p,$s) holds values from 1e16, which Spark " +
+          "rounds from digits duckdb does not print")
+    val dec = s"DECIMAL($p,$s)"
+    val fast =
+      if (s > 11) s"WHEN ABS($x) < 5e-${s + 1} THEN CAST(0 AS $dec) "
+      else {
+        val bound =
+          if (p > 11) s"1e${11 - s}"
+          else java.math.BigDecimal.ONE.scaleByPowerOfTen(p - s)
+            .subtract(java.math.BigDecimal.ONE.scaleByPowerOfTen(-s))
+            .toPlainString + "e0"
+        val cast =
+          if (p <= 18) s"CAST($x AS $dec)"
+          else s"CAST(CAST($x AS DECIMAL(18,$s)) AS $dec)"
+        s"WHEN ABS($x) < $bound AND " +
+          s"ABS($x * 1e$s - FLOOR($x * 1e$s) - 0.5) > 1e-4 THEN $cast "
+      }
+    val overflow =
+      if (nullOnOverflow) s"WHEN ABS($x) >= 1e${p - s} THEN CAST(NULL AS $dec) "
+      else s"WHEN NOT isfinite($x) THEN CAST(NULL AS $dec) " +
+        s"WHEN ABS($x) >= 1e${p - s} THEN CAST($x AS $dec) "
+    val narrow = if (nullOnOverflow) "TRY_CAST" else "CAST"
+    s"(CASE $fast${overflow}ELSE $narrow(CAST(CAST($x AS VARCHAR) AS " +
+      s"DECIMAL(${math.min(p + 1, 38)},$s)) AS $dec) END)"
   }
   // ORDER BY probed bit-identical to Spark beyond the fixed-point
   // default: strings sort by UTF-8 bytes ('~' < 'é' < '😀', same as

@@ -690,6 +690,19 @@ class SqlUnparser(dialect: SqlDialect) {
       s"${dialect.functionName(name)}(${r(c)})"
     def fnN(name: String, cs: Seq[Expression]): String =
       s"${dialect.functionName(name)}(${cs.map(r).mkString(", ")})"
+    // a cast that drops scale rounds HALF_UP in Spark; the dialect
+    // renders that rounding (and the overflow mode) for its engine
+    def decimalCast(c: Expression, dt: DecimalType,
+        nullOnOverflow: Boolean): String = {
+      val excessScale = c.dataType match {
+        case DoubleType | FloatType => true
+        case d: DecimalType => d.scale > dt.scale
+        case _ => false
+      }
+      if (excessScale)
+        dialect.lossyDecimalCast(r(c), c.dataType, dt, nullOnOverflow)
+      else s"CAST(${r(c)} AS ${dialect.typeName(dt)})"
+    }
 
     e match {
       case a: AttributeReference =>
@@ -748,14 +761,8 @@ class SqlUnparser(dialect: SqlDialect) {
         s"CASE WHEN ${r(p)} THEN ${r(t)} ELSE ${r(f)} END"
 
       // casts & decimal bookkeeping
-      case Cast(c, dt: DecimalType, _, _) =>
-        val excessScale = c.dataType match {
-          case DoubleType | FloatType => true
-          case d: DecimalType => d.scale > dt.scale
-          case _ => false
-        }
-        if (excessScale) dialect.lossyDecimalCast(r(c), dt.precision, dt.scale)
-        else s"CAST(${r(c)} AS ${dialect.typeName(dt)})"
+      case Cast(c, dt: DecimalType, _, mode) =>
+        decimalCast(c, dt, mode != EvalMode.ANSI)
       // fractional → integral: Spark truncates toward zero; engines that
       // ROUND instead (DuckDB probed: CAST(2.7 AS BIGINT) = 3 for DOUBLE,
       // FLOAT and DECIMAL sources; Postgres documented) get the source
@@ -769,25 +776,10 @@ class SqlUnparser(dialect: SqlDialect) {
         s"CAST(${dialect.functionName("trunc")}(${r(c)}) AS " +
           s"${dialect.typeName(dt)})"
       case Cast(c, dt, _, _) => s"CAST(${r(c)} AS ${dialect.typeName(dt)})"
-      case e if e.getClass.getSimpleName == "CheckOverflow" =>
-        // decimal-bound bookkeeping; re-emit as an explicit cast, routed
-        // through the same excess-scale check as Cast-to-decimal — a child
-        // carrying wider scale than the bound would otherwise truncate on
-        // engines that truncate (Derby) where Spark rounds HALF_UP
-        val co = e.asInstanceOf[UnaryExpression]
-        e.dataType match {
-          case dt: DecimalType =>
-            val excessScale = co.child.dataType match {
-              case DoubleType | FloatType => true
-              case d: DecimalType => d.scale > dt.scale
-              case _ => false
-            }
-            if (excessScale)
-              dialect.lossyDecimalCast(r(co.child), dt.precision, dt.scale)
-            else s"CAST(${r(co.child)} AS ${dialect.typeName(dt)})"
-          case other =>
-            s"CAST(${r(co.child)} AS ${dialect.typeName(other)})"
-        }
+      // decimal-bound bookkeeping: re-emit as an explicit cast to the
+      // bound, rounded like a Cast, in CheckOverflow's own overflow mode
+      case CheckOverflow(c, dt, nullOnOverflow) =>
+        decimalCast(c, dt, nullOnOverflow)
       case e if e.getClass.getSimpleName == "KnownFloatingPointNormalized" ||
         e.getClass.getSimpleName == "NormalizeNaNAndZero" =>
         r(e.asInstanceOf[UnaryExpression].child)

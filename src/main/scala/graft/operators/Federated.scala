@@ -860,8 +860,10 @@ object Federated {
     * aggregate with a FILTER clause + sort federate into ONE DuckDB SQL —
     * the aggregate pushes where Derby's refused (no FILTER support
     * there), and the DOUBLE→DECIMAL cast exercises the live-probed
-    * round-vs-truncate emulation ([[graft.federation.sql.DuckDbDialect
-    * .lossyDecimalCast]]). */
+    * HALF_UP form ([[graft.federation.sql.DuckDbDialect
+    * .lossyDecimalCast]]): DuckDB 1.0 rounds a DOUBLE source's binary
+    * value (1.005→1.01, 0.004999999995→0.01 at scale 2) where Spark
+    * rounds its shortest decimal text HALF_UP. */
   def duckQ1(s: SparkSession, dir: String): DataFrame =
     graft.federation.duckdb.DuckDbHarness.sql(s, dir,
       """SELECT l_returnflag, l_linestatus,

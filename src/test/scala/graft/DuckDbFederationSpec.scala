@@ -74,10 +74,11 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("live probe: DECIMAL cast rounds like Spark (HALF_UP emulation)") {
-    // DuckDB CAST truncates toward zero (probed: 2.5→2, -2.5→-2); the
-    // dialect's nudge-then-truncate emulation must restore Spark's
-    // HALF_UP for positives, negatives and the carry case — compare the
-    // FEDERATED projection against local Spark on engineered halves
+    // DuckDB CAST of a DECIMAL truncates toward zero (probed: 2.5→2,
+    // -2.5→-2); the dialect's nudge-then-truncate emulation must restore
+    // Spark's HALF_UP for positives, negatives and the carry case —
+    // compare the FEDERATED projection against local Spark on
+    // engineered halves
     DuckDbHarness.registerViews(spark, dir)
     val proj =
       """CAST((n_nationkey - 12) * 0.25 AS DECIMAL(4,1)) AS q,
@@ -90,6 +91,33 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"SELECT n_nationkey, $proj FROM " +
         s"parquet.`$dir/nation.parquet` ORDER BY n_nationkey")
     assert(rows(fed) == rows(local))
+    // DOUBLE sources, which Spark rounds by their shortest decimal text
+    // HALF_UP. Rounding twice gives 7424.4649 → 7424.465 → 7424.47, and
+    // DuckDB's own cast rounds the binary value (0.004999999995 → 0.01)
+    val doubles = Seq(7424.4649, 614.114999999, 0.0049, 0.004999999995,
+      2.675, 1.005, -2.675, 1.9087301168133925e14)
+    ex.runDdl(RemoteTableRef.parse("double_round_probe"), Seq(
+      "DROP TABLE IF EXISTS double_round_probe",
+      "CREATE TABLE double_round_probe AS SELECT * FROM (VALUES " +
+        doubles.zipWithIndex.map { case (d, i) =>
+          s"($i, CAST('$d' AS DOUBLE))" }.mkString(", ") + ") AS v(id, d)"))
+    val pushed = Federation.remoteDataFrame(spark, "double_round_probe", ex)
+      .selectExpr("id", "CAST(d AS DECIMAL(18,2)) AS v")
+    assert(remoteScans(pushed).exists(_.contains("DECIMAL(18,2)")),
+      remoteScans(pushed))
+    val got = pushed.collect().map(r => r.getInt(0) -> r.getDecimal(1)).toMap
+    val want = Seq("7424.46", "614.11", "0.00", "0.00", "2.68", "1.01",
+      "-2.68", "190873011681339.25")
+    doubles.indices.foreach { i =>
+      val local = org.apache.spark.sql.catalyst.expressions.Cast(
+        org.apache.spark.sql.catalyst.expressions.Literal(doubles(i)),
+        org.apache.spark.sql.types.DecimalType(18, 2)).eval()
+        .asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal
+      assert(local.compareTo(new java.math.BigDecimal(want(i))) == 0,
+        s"Spark casts ${doubles(i)} to $local")
+      assert(got(i).compareTo(new java.math.BigDecimal(want(i))) == 0,
+        s"${doubles(i)} → ${got(i)}, Spark gives ${want(i)}")
+    }
   }
 
   test("live probe: CONCAT propagates NULL (|| chain, not CONCAT())") {

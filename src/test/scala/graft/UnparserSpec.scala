@@ -331,6 +331,67 @@ class UnparserSpec extends AnyFunSuite {
     assert(!new SqlUnparser(SqliteDialect).unparse(sorted).contains("NULLS"))
   }
 
+  test("lossy DECIMAL casts: per-engine HALF_UP form, overflow per mode") {
+    val r = rel("r", "x" -> DoubleType, "f" -> FloatType,
+      "m" -> DecimalType(20, 8))
+    val Seq(x, f, m) = r.output
+    def cast(e: Expression, p: Int, s: Int, mode: EvalMode.Value) =
+      Project(Seq(Alias(Cast(e, DecimalType(p, s), Some("UTC"), mode), "v")()), r)
+    def duck(plan: LogicalPlan) = new SqlUnparser(DuckDbDialect).unparse(plan)
+    def derby(plan: LogicalPlan) = new SqlUnparser(DerbyDialect).unparse(plan)
+    // DuckDB, DOUBLE source: 64-bit cast away from ties, NULL past the
+    // range and for NaN/Inf, else the shortest text
+    assert(duck(cast(x, 18, 2, EvalMode.LEGACY)) == "SELECT (CASE " +
+      "WHEN ABS(t1.x) < 1e9 AND ABS(t1.x * 1e2 - FLOOR(t1.x * 1e2) - 0.5) " +
+      "> 1e-4 THEN CAST(t1.x AS DECIMAL(18,2)) " +
+      "WHEN ABS(t1.x) >= 1e16 THEN CAST(NULL AS DECIMAL(18,2)) " +
+      "ELSE TRY_CAST(CAST(CAST(t1.x AS VARCHAR) AS DECIMAL(19,2)) AS " +
+      "DECIMAL(18,2)) END) AS v FROM r AS t1")
+    // past scale 11 there is no 64-bit arm; values under half a unit go
+    // to 0 before their exponent text reaches DuckDB's parser
+    assert(duck(cast(x, 24, 12, EvalMode.LEGACY)).startsWith("SELECT (CASE " +
+      "WHEN ABS(t1.x) < 5e-13 THEN CAST(0 AS DECIMAL(24,12)) WHEN ABS(t1.x)"))
+    // a small target keeps the 64-bit arm a unit under its range
+    assert(duck(cast(x, 4, 0, EvalMode.TRY)).contains(
+      "WHEN ABS(t1.x) < 9999e0 AND ABS(t1.x * 1e0 - FLOOR(t1.x * 1e0) - 0.5)"))
+    // ANSI: NaN/Inf stay NULL, an overflow raises in DuckDB's own cast and
+    // the round-up into 10^(p-s) in the narrowing cast
+    val ansi = duck(cast(x, 18, 2, EvalMode.ANSI))
+    assert(ansi.contains("WHEN NOT isfinite(t1.x) THEN CAST(NULL AS " +
+      "DECIMAL(18,2)) WHEN ABS(t1.x) >= 1e16 THEN CAST(t1.x AS DECIMAL(18,2))"))
+    assert(ansi.contains("ELSE CAST(CAST(CAST(t1.x AS VARCHAR)"))
+    assert(!ansi.contains("TRY_CAST"))
+    // FLOAT widens to DOUBLE first; DuckDB truncates a FLOAT source
+    assert(duck(cast(f, 10, 4, EvalMode.LEGACY)).contains(
+      "CAST(CAST(CAST(t1.f AS DOUBLE) AS VARCHAR) AS DECIMAL(11,4))"))
+    // more than 16 integer digits: Spark's JDK 17 digits from 1e16 up
+    // are not DuckDB's, so the cast stays local
+    assert(SqlUnparser.tryUnparse(cast(x, 28, 6, EvalMode.LEGACY),
+      DuckDbDialect).isEmpty)
+    // DECIMAL source: one nudge-then-truncate helper; the NULL arm only
+    // where the cast yields NULL on overflow
+    val nudge = "CAST(CAST(t1.m AS DECIMAL(20,3)) + (CASE WHEN t1.m >= 0 " +
+      "THEN 0.005 ELSE -0.005 END) AS DECIMAL(18,2))"
+    assert(duck(cast(m, 18, 2, EvalMode.LEGACY)) == "SELECT (CASE WHEN " +
+      "ABS(t1.m) >= 9999999999999999.995 THEN CAST(NULL AS DECIMAL(18,2)) " +
+      s"ELSE $nudge END) AS v FROM r AS t1")
+    assert(duck(cast(m, 18, 2, EvalMode.ANSI)) == s"SELECT $nudge AS v FROM r AS t1")
+    assert(SqlUnparser.tryUnparse(cast(m, 37, 2, EvalMode.LEGACY),
+      DuckDbDialect).isEmpty)
+    // CheckOverflow carries its own mode
+    val co = Project(Seq(Alias(
+      CheckOverflow(m, DecimalType(18, 2), nullOnOverflow = false), "v")()), r)
+    assert(duck(co) == s"SELECT $nudge AS v FROM r AS t1")
+    // Derby keeps the same helper for DOUBLE sources, under its max
+    // precision 31
+    assert(derby(cast(x, 18, 2, EvalMode.ANSI)).contains(
+      "CAST(CAST(\"t1\".\"x\" AS DECIMAL(20,3)) + " +
+        "(CASE WHEN \"t1\".\"x\" >= 0 THEN 0.005 ELSE -0.005 END) " +
+        "AS DECIMAL(18,2))"))
+    assert(SqlUnparser.tryUnparse(cast(x, 30, 2, EvalMode.LEGACY),
+      DerbyDialect).isEmpty)
+  }
+
   test("hex-to-dec conv: per-dialect spelling, refusal where none exists") {
     val conv = Project(Seq(Alias(
       Conv(Substring(Md5(Cast(a, StringType)), Literal(1), Literal(14)),
