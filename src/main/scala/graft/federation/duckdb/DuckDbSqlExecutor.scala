@@ -17,7 +17,7 @@ import org.apache.spark.sql.catalyst.plans.logical.ColumnStat
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector, ColumnarBatch}
 
-import graft.federation.sql.{RemoteTableRef, SchemaCoercion, SchemaDrift, SqlDialect, SqlExecutor, UnparseUnsupported}
+import graft.federation.sql.{RemoteCancel, RemoteTableRef, SchemaCoercion, SchemaDrift, SqlDialect, SqlExecutor, UnparseUnsupported}
 
 /** A live DuckDB remote engine, driven through a pooled python subprocess
   * (the container has the python `duckdb` module but no DuckDB JDBC
@@ -25,10 +25,14 @@ import graft.federation.sql.{RemoteTableRef, SchemaCoercion, SchemaDrift, SqlDia
   * side of the federation boundary).
   *
   * Execution model mirrors [[graft.federation.jdbc.JdbcSqlExecutor]]:
-  * row fetching happens inside `RDD.compute`, where each task borrows its
-  * own subprocess opening the database file READ-ONLY — DuckDB permits any
-  * number of concurrent read-only processes on one file, so split scans
-  * fan out to n parallel engine cursors exactly like n JDBC connections.
+  * a split scan, or a scan under other operators, fetches its rows inside
+  * `RDD.compute`, where each task borrows its own subprocess opening the
+  * database file READ-ONLY — DuckDB permits any number of concurrent
+  * read-only processes on one file, so split scans fan out to n parallel
+  * engine cursors exactly like n JDBC connections. A single-cursor scan
+  * at the root of a collected plan, and every planning probe, reads on
+  * the calling driver thread through [[queryRows]] instead: one round
+  * trip with no Spark job around it.
   * On a cluster this requires the database file on shared storage and
   * python+duckdb+pyarrow on executors, the same deployment contract as a
   * JDBC driver jar. Writes (DDL/DML/bulk ingest) take the single-writer
@@ -86,10 +90,6 @@ final class DuckDbSqlExecutor(
         Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] {
           _ => res.close()
         })
-        // task kill → destroy the in-flight subprocess: the blocked pipe
-        // read EOFs immediately and the server is never returned to the
-        // pool (an undrained stream would corrupt the next request)
-        graft.federation.sql.RemoteCancel.watch(() => res.cancel())
         res.rowsAs(schema, execName, q)
       }
     }
@@ -153,9 +153,16 @@ final class DuckDbSqlExecutor(
     schemaCache.getOrElseUpdate(ref.toString,
       DuckDbProcess.describe(dbPath, s"SELECT * FROM ${ref.sql(dialect)}"))
 
+  /** Every probe is a wire statement: [[executedSql]] records it. */
   override protected def queryRow(sql: String,
-      schema: StructType): InternalRow =
-    fetch(sql, Some(schema))._2.head
+      schema: StructType): InternalRow = {
+    executedSql.synchronized { executedSql += sql }
+    super.queryRow(sql, schema)
+  }
+
+  override def queryRows[A](sql: String, schema: StructType)(
+      consume: Iterator[InternalRow] => A): A =
+    read(sql, Some(schema))((_, rows) => consume(rows))
 
   /** Per-column CBO probes — ONE engine-side aggregate for every column
     * (DuckDB has no single-DISTINCT restriction), over the same bounded
@@ -272,26 +279,33 @@ final class DuckDbSqlExecutor(
     else Some(bounds)
   }
 
-  /** Driver-side one-shot read query (planning probes, tests), in the
+  /** Driver-side one-shot read query (tests, catalog listings), in the
     * types the stream carries. */
   def runQuery(sql: String): Seq[Row] = {
-    val (schema, rows) = fetch(sql, None)
-    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
-    rows.map(toRow(_).asInstanceOf[Row])
+    executedSql.synchronized { executedSql += sql }
+    read(sql, None) { (schema, rows) =>
+      // through an UnsafeRow: a batch view cannot `get` every type
+      val proj = UnsafeProjection.create(schema)
+      val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+      rows.map(r => toRow(proj(r)).asInstanceOf[Row]).toVector
+    }
   }
 
-  /** Every row of `sql`, copied out of the stream, under `declared` when
-    * given (the same drift check and coercion as a task's read). */
-  private def fetch(sql: String,
-      declared: Option[StructType]): (StructType, Vector[InternalRow]) = {
-    executedSql.synchronized { executedSql += sql }
+  /** The rows of `sql` on the calling thread, under `declared` when given
+    * (the same drift check and coercion as a task's read), else under the
+    * stream's own schema. Each row is a view valid until the next one is
+    * pulled. */
+  private def read[A](sql: String, declared: Option[StructType])(
+      consume: (StructType, Iterator[InternalRow]) => A): A = {
     val res = DuckDbProcess.query(dbPath, sql)
     try {
       val schema = declared.getOrElse(res.schema)
-      val proj = UnsafeProjection.create(schema)
-      (schema, res.rowsAs(schema, name, sql).map(proj(_).copy()).toVector)
+      consume(schema, res.rowsAs(schema, name, sql))
     } finally res.close()
   }
+
+  override def lostCursor(e: Throwable): Boolean =
+    e.isInstanceOf[DuckDbProcess.WorkerLost]
 
   /** Driver-side write batch: the statements run on ONE connection holding
     * the single-writer lock, in order. Returns per-statement change counts
@@ -482,6 +496,10 @@ object DuckDbProcess {
   /** Rows per Arrow record batch (`fetch_arrow_reader`'s batch size). */
   val BatchRows: Int = 65536
 
+  /** The worker process ended mid-response (killed, crashed): the request
+    * may be re-run on a fresh worker, unlike an engine error. */
+  final class WorkerLost(msg: String) extends IllegalStateException(msg)
+
   /** The entire engine adapter, shipped as `python3 -c <script>` — a
     * PERSISTENT request loop (one JSON request line in → one response
     * out, flushed per request), so the python + duckdb + pyarrow import
@@ -661,6 +679,8 @@ object DuckDbProcess {
     * would deadlock the engine; the captured text feeds error
     * messages). */
   private final class Server(val proc: Process) {
+    /** Set when the server goes back to the pool: it has waited idle. */
+    @volatile var idled = false
     val writer = new java.io.OutputStreamWriter(proc.getOutputStream,
       StandardCharsets.UTF_8)
     val in = new java.io.BufferedInputStream(proc.getInputStream, 1 << 16)
@@ -685,10 +705,16 @@ object DuckDbProcess {
     /** The process ended mid-response: never reusable. */
     def died(): Nothing = {
       destroy()
-      proc.waitFor()
-      throw new IllegalStateException(
-        s"duckdb subprocess died without terminator " +
-          s"(exit ${proc.exitValue()}): ${errText()}")
+      val exit =
+        try proc.waitFor().toString
+        catch {
+          case _: InterruptedException =>
+            // a cancelled caller: keep its interrupt visible
+            Thread.currentThread().interrupt()
+            "unknown, caller interrupted"
+        }
+      throw new WorkerLost(
+        s"duckdb subprocess died without terminator (exit $exit): ${errText()}")
     }
 
     /** The next byte without consuming it; -1 at EOF. */
@@ -747,16 +773,20 @@ object DuckDbProcess {
   private def borrow(): Server = {
     var s = pool.poll()
     while (s != null && !s.proc.isAlive) { s.destroy(); s = pool.poll() }
-    if (s == null) new Server(new ProcessBuilder("python3", "-c", Script).start())
-    else s
+    if (s == null) spawn() else s
   }
 
-  private def release(s: Server): Unit =
+  private def spawn(): Server =
+    new Server(new ProcessBuilder("python3", "-c", Script).start())
+
+  private def release(s: Server): Unit = {
+    s.idled = true
     if (!s.proc.isAlive || !pool.offer(s)) s.destroy()
+  }
 
   private def request(db: String, ro: Boolean, op: String,
-      extra: String): Server = {
-    val srv = borrow()
+      extra: String, fresh: Boolean = false): Server = {
+    val srv = if (fresh) spawn() else borrow()
     val req = s"""{"db":${jstr(db)},"ro":$ro,"op":"$op"$extra}"""
     try {
       srv.writer.write(req); srv.writer.write("\n"); srv.writer.flush()
@@ -780,13 +810,17 @@ object DuckDbProcess {
   }
 
   /** A streaming query response. The request is sent here; the stream is
-    * opened lazily, at the first [[schema]] or row, so a task can
-    * register its cancellation first. Owns one `RootAllocator`:
-    * [[close]] releases the reader, then the allocator (which throws on
-    * leaked buffers); [[cancel]] only kills the worker. */
-  final class ArrowResult private[DuckDbProcess] (srv: Server)
-    extends AutoCloseable {
+    * opened lazily, at the first [[schema]] or row, after the result has
+    * registered its cancellation: a killed task, or an interrupted caller
+    * off a task, destroys the worker ([[RemoteCancel]]). Owns one
+    * `RootAllocator`: [[close]] releases the reader, then the allocator
+    * (which throws on leaked buffers); [[cancel]] only kills the worker. */
+  final class ArrowResult private[DuckDbProcess] (first: Server,
+      resend: () => Server) extends AutoCloseable {
 
+    @volatile private var srv = first
+    @volatile private var cancelled = false
+    private val watch = RemoteCancel.watch(() => cancel())
     private val allocator = new RootAllocator()
     private var reader: ArrowStreamReader = _
     private var batch: ColumnarBatch = _
@@ -798,6 +832,15 @@ object DuckDbProcess {
 
     private def open(): ColumnarBatch = {
       if (batch == null) {
+        // a pooled worker killed while idle can still be exiting when it
+        // is borrowed: it takes the request and ends before the first
+        // byte. The request is a read, so it goes once more, to a fresh
+        // worker
+        if (srv.idled && !cancelled && srv.peek() == -1) {
+          srv.destroy()
+          srv = resend()
+          if (cancelled) srv.destroy()
+        }
         srv.peek() match {
           case -1 => srv.died()
           case '{' =>
@@ -881,10 +924,14 @@ object DuckDbProcess {
     }
 
     /** Task kill: destroy the worker so a blocked read EOFs. The buffers
-      * stay with the task thread, which [[close]]s them. */
-    def cancel(): Unit = if (!finished) srv.destroy()
+      * stay with the reading thread, which [[close]]s them. */
+    def cancel(): Unit = {
+      cancelled = true
+      if (!finished) srv.destroy()
+    }
 
     override def close(): Unit = {
+      watch.close()
       cancel()
       finished = true
       if (reader != null) reader.close(false)
@@ -892,10 +939,12 @@ object DuckDbProcess {
     }
   }
 
-  def query(db: String, sql: String, threads: Int = 0): ArrowResult =
-    new ArrowResult(request(db, ro = true, "query",
-      s""","sql":${jstr(sql)}""" +
-        (if (threads > 0) s""","threads":$threads""" else "")))
+  def query(db: String, sql: String, threads: Int = 0): ArrowResult = {
+    val extra = s""","sql":${jstr(sql)}""" +
+      (if (threads > 0) s""","threads":$threads""" else "")
+    new ArrowResult(request(db, ro = true, "query", extra),
+      () => request(db, ro = true, "query", extra, fresh = true))
+  }
 
   def describe(db: String, sql: String): StructType = {
     val cols = control(db, ro = true, "describe",

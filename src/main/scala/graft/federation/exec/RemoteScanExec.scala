@@ -32,6 +32,19 @@ import graft.federation.sql.SqlExecutor
   * once in the join proper) — inherent to IN-list runtime filtering and
   * bounded by the broadcast threshold.
   *
+  * A single-cursor, non-streaming scan at the ROOT of a collected plan (a
+  * fully pushed query) skips Spark's scheduler: [[executeCollect]] reads
+  * the rows on the calling driver thread through the executor's
+  * `queryRows`, as the reference's `VirtualExecutionPlan` streams
+  * `SQLExecutor::execute`'s batches straight to its consumer — one remote
+  * round trip and no job, task or result serialization around it. It
+  * keeps what the task path guarantees: runtime filters and bind joins,
+  * the drift check and coercion, the boundary metrics (posted to the SQL
+  * UI once), `spark.driver.maxResultSize`, cancellation by interrupting
+  * the calling thread, and a re-run of a fetch whose worker died, up to
+  * the scheduler's task-failure limit. Split scans, scans under other
+  * operators and streaming scans run as tasks ([[doExecute]]).
+  *
   * The generated SQL appears in EXPLAIN (the reference displays it the
   * same way, src/sql/mod.rs:348-369).
   */
@@ -378,6 +391,84 @@ final case class RemoteScanExec(
       build _, metrics("numFragmentReuses"))
   }
 
+  override def executeCollect(): Array[InternalRow] =
+    if (sqls.size > 1 || stream.isDefined) super.executeCollect()
+    else executeQuery(collectOnDriver())
+
+  /** The driver read of [[executeCollect]]: the effective SQL once, then
+    * fetches until one completes. A fetch whose engine worker or
+    * connection was lost mid-read ([[SqlExecutor.lostCursor]]) re-runs on
+    * a fresh cursor up to the scheduler's task-failure limit, as a failed
+    * task would; a dead attempt's rows and counts are dropped. Engine
+    * errors, the size guard and an interrupted caller end the read. */
+  private def collectOnDriver(): Array[InternalRow] = {
+    val sql = effectiveSqls().head
+    val maxBytes = GraftShims.maxResultSize(sparkContext)
+    val attempts = GraftShims.maxTaskFailures(sparkContext)
+    var attempt = 1
+    var got: Option[RemoteScanExec.DriverFetch] = None
+    while (got.isEmpty) {
+      try got = Some(fetchOnDriver(sql, maxBytes))
+      catch {
+        case scala.util.control.NonFatal(e)
+            if Thread.currentThread().isInterrupted =>
+          throw new org.apache.spark.SparkException(
+            s"remote fetch on [${executor.name}] cancelled: the calling " +
+              "thread was interrupted", e)
+        case scala.util.control.NonFatal(e)
+            if attempt < attempts && executor.lostCursor(e) =>
+          logWarning(s"remote fetch on [${executor.name}] lost its cursor " +
+            s"(attempt $attempt of $attempts), re-running: ${e.getMessage}")
+          attempt += 1
+      }
+    }
+    val f = got.get
+    metrics("numSplits").add(1)
+    metrics("numOutputRows").add(f.rows.length)
+    metrics("remoteFetchTime").add(f.fetchNs)
+    metrics("remoteBytes").add(f.bytes)
+    metrics("numCoercedRows").add(f.coerced)
+    // no task carries these values to the SQL UI: post them from here
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty("spark.sql.execution.id"),
+      metrics.values.toSeq)
+    f.rows
+  }
+
+  /** One driver fetch of `sql`, with the task path's boundary: rows that
+    * are not yet `UnsafeRow`s are projected (and counted as coerced),
+    * every row is copied out of the engine's reused buffers, and the
+    * read aborts once the rows outgrow `maxBytes` (0 = no limit). The
+    * fetch time is the call's wall time less this boundary work. */
+  private def fetchOnDriver(sql: String,
+      maxBytes: Long): RemoteScanExec.DriverFetch = {
+    val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(output.map(_.dataType).toArray)
+    val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var bytes, coerced, ownNs = 0L
+    val t0 = System.nanoTime()
+    executor.collectRows(sql, schema) { it =>
+      it.foreach { r =>
+        val t1 = System.nanoTime()
+        val u = r match {
+          case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+            u.copy()
+          case other => coerced += 1; proj(other).copy()
+        }
+        rows += u
+        bytes += u.getSizeInBytes
+        if (maxBytes > 0 && bytes > maxBytes)
+          throw new org.apache.spark.SparkException(
+            s"Total size of the ${rows.length} rows collected on the " +
+              s"driver ($bytes bytes) is bigger than " +
+              s"spark.driver.maxResultSize ($maxBytes bytes)")
+        ownNs += System.nanoTime() - t1
+      }
+    }
+    RemoteScanExec.DriverFetch(rows.toArray,
+      System.nanoTime() - t0 - ownNs, bytes, coerced)
+  }
+
   /** Evaluate one runtime filter's build side and render its predicate:
     * distinct keys bounded by the cap become an IN-list; beyond the cap a
     * min/max range; an empty (or all-null) build side short-circuits to
@@ -451,6 +542,10 @@ final case class RemoteScanExec(
 }
 
 object RemoteScanExec {
+  /** The rows and boundary counts of one completed driver fetch. */
+  private final case class DriverFetch(rows: Array[InternalRow],
+      fetchNs: Long, bytes: Long, coerced: Long)
+
   def apply(output: Seq[Attribute], sql: String,
       executor: SqlExecutor): RemoteScanExec =
     RemoteScanExec(output, Seq(sql), executor)

@@ -17,10 +17,13 @@ import graft.federation.sql.{RemoteTableRef, SqlDialect, SqlExecutor, UnparseUns
 /** A real JDBC remote engine — the executor the reference's whole design
   * exists for (SQLExecutor over a foreign DBMS, src/sql/executor.rs:18-75).
   *
-  * Driver-side work is limited to SQL generation and one-shot metadata
-  * introspection; row fetching happens inside `RDD.compute`, so on a
-  * cluster each task opens its own connection/cursor (and split reads —
+  * A split scan, or a scan under other operators, fetches its rows inside
+  * `RDD.compute`, so on a cluster each task opens its own
+  * connection/cursor (and split reads —
   * [[graft.federation.sql.SplitScan]] — fan out to one cursor per split).
+  * A single-cursor scan at the root of a collected plan, the planning
+  * probes and the metadata introspection run on the driver; every cursor,
+  * task or driver, opens through [[JdbcSqlExecutor.openCursor]].
   * Row conversion is schema-directed (JDBC getters chosen from the target
   * Catalyst type), mirroring Spark's own JDBC source pattern.
   */
@@ -38,11 +41,8 @@ final class JdbcSqlExecutor(
   // the reference warns about (src/sql/executor.rs:25-29)
   override def computeContext: Option[String] = Some(url)
 
-  private def connect(): Connection = {
-    val p = new java.util.Properties()
-    connectionProps.foreach { case (k, v) => p.setProperty(k, v) }
-    DriverManager.getConnection(url, p)
-  }
+  private def connect(): Connection =
+    JdbcSqlExecutor.connect(url, connectionProps)
 
   override def execute(sql: String, schema: StructType): RDD[InternalRow] = {
     executedSql.synchronized { executedSql += sql }
@@ -52,51 +52,12 @@ final class JdbcSqlExecutor(
     val execName = name
     session.sparkContext.parallelize(Seq(sql), 1).mapPartitions { sqls =>
       sqls.flatMap { q =>
-        val p = new java.util.Properties()
-        props.foreach { case (k, v) => p.setProperty(k, v) }
-        val conn = DriverManager.getConnection(u, p)
-        // register cleanup BEFORE executing: a failing query must not leak
-        // the connection across task retries
-        val stmt =
-          try conn.createStatement()
-          catch { case e: Throwable => conn.close(); throw e }
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-          try stmt.close() finally conn.close()
+        val (rows, cursor) =
+          JdbcSqlExecutor.openCursor(u, props, q, fields, execName)
+        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] {
+          _ => cursor.close()
         })
-        // task kill → interrupt this thread: the ONLY prompt cancel this
-        // engine supports (probed live: Statement.cancel unimplemented,
-        // cross-thread conn.close() lets the query run to completion, a
-        // thread interrupt aborts it in milliseconds)
-        locally {
-          val taskThread = Thread.currentThread()
-          graft.federation.sql.RemoteCancel.watch(() => taskThread.interrupt())
-        }
-        val rs = stmt.executeQuery(q)
-        // execution-time drift guard: the registered schema directs the
-        // row decode, so a remote retype to text would otherwise corrupt
-        // silently (getInt-on-VARCHAR semantics vary by driver)
-        locally {
-          val md = rs.getMetaData
-          val live = (1 to md.getColumnCount).map { i =>
-            (md.getColumnTypeName(i),
-              graft.federation.sql.SchemaDrift.jdbcFamily(md.getColumnType(i)))
-          }
-          graft.federation.sql.SchemaDrift.check(
-            fields.toIndexedSeq, live, execName, q)
-        }
-        new Iterator[InternalRow] {
-          private var ready = false
-          private var done = false
-          override def hasNext: Boolean = {
-            if (!ready && !done) { done = !rs.next(); ready = !done }
-            ready
-          }
-          override def next(): InternalRow = {
-            if (!hasNext) throw new NoSuchElementException
-            ready = false
-            JdbcSqlExecutor.convertRow(rs, fields)
-          }
-        }
+        rows
       }
     }
   }
@@ -159,15 +120,21 @@ final class JdbcSqlExecutor(
     } finally conn.close()
   }
 
-  override protected def queryRow(sql: String,
-      schema: StructType): InternalRow = {
-    val conn = connect()
-    try {
-      val rs = conn.createStatement().executeQuery(sql)
-      if (!rs.next()) throw new NoSuchElementException(s"no row from: $sql")
-      JdbcSqlExecutor.convertRow(rs, schema.fields)
-    } finally conn.close()
+  override def queryRows[A](sql: String, schema: StructType)(
+      consume: Iterator[InternalRow] => A): A = {
+    val (rows, cursor) = JdbcSqlExecutor.openCursor(url, connectionProps,
+      sql, schema.fields, name)
+    try consume(rows) finally cursor.close()
   }
+
+  /** SQLState class 08 is a connection exception: the connection died
+    * under the read, not the statement. */
+  override def lostCursor(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case s: java.sql.SQLException =>
+        Option(s.getSQLState).exists(_.startsWith("08"))
+      case _ => false
+    }
 
   /** Bounded per-column probes for CBO: one query per column (Derby
     * permits a single DISTINCT aggregate per query — probed), each over
@@ -480,9 +447,7 @@ object JdbcSqlExecutor {
   def stagePartition(url: String, props: Map[String, String], stg: String,
       fields: Array[StructField],
       rows: Iterator[org.apache.spark.sql.Row]): Unit = {
-    val p = new java.util.Properties()
-    props.foreach { case (k, v) => p.setProperty(k, v) }
-    val conn = DriverManager.getConnection(url, p)
+    val conn = connect(url, props)
     try {
       conn.setAutoCommit(false)
       val st = conn.createStatement()
@@ -592,6 +557,60 @@ object JdbcSqlExecutor {
     case TimestampType | TimestampNTZType => Types.TIMESTAMP
     case other =>
       throw new UnsupportedOperationException(s"JDBC null type for $other")
+  }
+
+  /** A connection to `url` with `props` as its connection properties. */
+  def connect(url: String, props: Map[String, String]): Connection = {
+    val p = new java.util.Properties()
+    props.foreach { case (k, v) => p.setProperty(k, v) }
+    DriverManager.getConnection(url, p)
+  }
+
+  /** One remote cursor: `sql` on a fresh connection, its rows decoded
+    * with [[convertRow]] after the drift check, and the handle that closes
+    * statement and connection. The task read and the driver read share
+    * it. The registered schema directs the decode, so a remote retype to
+    * text would otherwise corrupt silently (getInt-on-VARCHAR semantics
+    * vary by driver): the live result metadata is checked first. A killed
+    * task, or an interrupted caller off a task, interrupts the thread
+    * running the statement: the ONLY prompt cancel embedded Derby
+    * supports (probed live: Statement.cancel unimplemented, cross-thread
+    * conn.close() lets the query run to completion, a thread interrupt
+    * aborts it in milliseconds). A failure while opening closes
+    * everything before it propagates. */
+  def openCursor(url: String, props: Map[String, String], sql: String,
+      fields: Array[StructField],
+      execName: String): (Iterator[InternalRow], AutoCloseable) = {
+    val conn = connect(url, props)
+    val stmt =
+      try conn.createStatement()
+      catch { case e: Throwable => conn.close(); throw e }
+    val thread = Thread.currentThread()
+    val watch = graft.federation.sql.RemoteCancel.watch(() => thread.interrupt())
+    val cursor: AutoCloseable = () =>
+      try watch.close() finally try stmt.close() finally conn.close()
+    try {
+      val rs = stmt.executeQuery(sql)
+      val md = rs.getMetaData
+      graft.federation.sql.SchemaDrift.check(fields.toIndexedSeq,
+        (1 to md.getColumnCount).map(i => (md.getColumnTypeName(i),
+          graft.federation.sql.SchemaDrift.jdbcFamily(md.getColumnType(i)))),
+        execName, sql)
+      val rows = new Iterator[InternalRow] {
+        private var ready = false
+        private var done = false
+        override def hasNext: Boolean = {
+          if (!ready && !done) { done = !rs.next(); ready = !done }
+          ready
+        }
+        override def next(): InternalRow = {
+          if (!hasNext) throw new NoSuchElementException
+          ready = false
+          convertRow(rs, fields)
+        }
+      }
+      (rows, cursor)
+    } catch { case e: Throwable => cursor.close(); throw e }
   }
 
   def convertRow(rs: ResultSet, fields: Array[StructField]): InternalRow = {

@@ -20,19 +20,35 @@ import org.apache.spark.TaskContext
   * process, which EOFs the blocked pipe read.
   *
   * So: each executor registers its in-flight remote fetch here; a single
-  * daemon thread polls `TaskContext.isInterrupted()` (set by ANY task
-  * kill, with or without `interruptThread`) every 100 ms and fires the
-  * engine-appropriate cancel action once. Entries deregister on task
-  * completion under the entry lock, so a late poll can never cancel into
-  * a thread that has moved on to another task.
+  * daemon thread polls every 100 ms and fires the engine-appropriate
+  * cancel action once. Inside a task it polls `TaskContext.isInterrupted()`
+  * (set by ANY task kill, with or without `interruptThread`); on the
+  * driver (planning probes, a root scan collected without a job) there is
+  * no task to kill, so it polls the calling thread's interrupt flag —
+  * Spark Connect and the Thrift server cancel a statement by interrupting
+  * its execution thread. A blocked pipe read never notices that flag by
+  * itself, which is why the watchdog must act for it. Entries deregister
+  * under the entry lock (on task completion, or when the caller closes
+  * the handle), so a late poll can never cancel into a thread that has
+  * moved on.
   */
 object RemoteCancel {
 
-  val EnabledKey = "spark.graft.federation.remoteCancel.enabled"
-
-  private final class Entry(val ctx: TaskContext, val onKill: () => Unit) {
+  private final class Entry(killed: () => Boolean, onKill: () => Unit)
+    extends AutoCloseable {
     var done = false
     var fired = false
+    def poll(): Unit = synchronized {
+      if (!done && !fired && killed()) {
+        fired = true
+        try onKill() catch { case _: Throwable => () }
+      }
+    }
+    override def close(): Unit = {
+      synchronized { done = true }
+      entries.remove(this)
+      ()
+    }
   }
 
   private val entries = ConcurrentHashMap.newKeySet[Entry]()
@@ -43,43 +59,34 @@ object RemoteCancel {
       t.setDaemon(true)
       t
     }
-    ex.scheduleAtFixedRate(() => sweep(), 100, 100, TimeUnit.MILLISECONDS)
+    ex.scheduleAtFixedRate(() => entries.forEach(_.poll()),
+      100, 100, TimeUnit.MILLISECONDS)
     ex
   }
 
-  private def sweep(): Unit = {
-    val it = entries.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      e.synchronized {
-        if (!e.done && !e.fired && e.ctx.isInterrupted()) {
-          e.fired = true
-          try e.onKill() catch { case _: Throwable => () }
-        }
-      }
-      if (e.synchronized(e.done)) it.remove()
-    }
-  }
-
-  /** Watch the current task; `onKill` runs (once, on the watchdog thread)
-    * if the task is killed while the fetch is in flight. Deregisters
-    * itself via a task-completion listener. No-op without a task context
-    * (driver-side probes). */
-  def watch(onKill: () => Unit): Unit = {
-    val ctx = TaskContext.get()
-    if (ctx == null) return
+  /** Watch the current task — or, outside a task, the calling thread —
+    * and run `onKill` (once, on the watchdog thread) if it is killed or
+    * interrupted while the fetch is in flight. Closing the handle
+    * deregisters; inside a task, task completion also does. */
+  def watch(onKill: () => Unit): AutoCloseable = {
     poller // start the daemon on first use
-    val e = new Entry(ctx, onKill)
-    entries.add(e)
-    ctx.addTaskCompletionListener[Unit] { _ =>
-      e.synchronized {
-        e.done = true
-        // a cancel that landed as a thread interrupt between the task
-        // body ending and this listener must not leak into the thread's
-        // next task
-        if (e.fired) Thread.interrupted()
+    val ctx = TaskContext.get()
+    val e =
+      if (ctx != null) {
+        val e = new Entry(() => ctx.isInterrupted(), onKill)
+        ctx.addTaskCompletionListener[Unit] { _ =>
+          e.close()
+          // a cancel that landed as a thread interrupt between the task
+          // body ending and this listener must not leak into the thread's
+          // next task
+          if (e.synchronized(e.fired)) Thread.interrupted()
+        }
+        e
+      } else {
+        val caller = Thread.currentThread()
+        new Entry(() => caller.isInterrupted, onKill)
       }
-      entries.remove(e)
-    }
+    entries.add(e)
+    e
   }
 }

@@ -346,6 +346,23 @@ trait SqlDialect {
   /** Integer remainder (Derby has no % operator). */
   def modulo(left: String, right: String): String = s"($left % $right)"
 
+  /** Spark's `div` (IntegralDivide) over integral operands: the quotient
+    * truncated toward zero. ANSI SQL's `/` on integers is that quotient
+    * (Derby), an engine whose `/` is fractional overrides. */
+  def integralDivide(left: String, right: String): String =
+    s"($left / $right)"
+
+  /** Whether [[integralDivide]] by zero raises (as Spark's does under
+    * ANSI; SQL's division-by-zero error, Derby) or gives NULL (as Spark's
+    * does without ANSI; DuckDB). None = it depends on the engine's own
+    * settings, so only a non-zero literal divisor is pushed. */
+  def divisionByZeroRaises: Option[Boolean] = Some(true)
+
+  /** A cast to `to` that gives NULL where a plain CAST raises — Spark's
+    * LEGACY or TRY cast past the target's range. None = the engine has no
+    * such cast, and the unparser refuses the expression. */
+  def tryCast(x: String, to: DataType): Option[String] = None
+
   /** Hex-string → decimal-string conversion (Spark's `conv(x, 16, 10)` —
     * the deterministic MD5-bucket sampling rule rides on it). None means
     * the engine has no portable spelling and the expression refuses,
@@ -472,6 +489,12 @@ object SparkDialect extends SqlDialect {
   override def orderingPortable(dt: DataType): Boolean = true
   override def hexToDecimal(hex: String): Option[String] =
     Some(s"conv($hex, 16, 10)")
+  override def integralDivide(left: String, right: String): String =
+    s"($left div $right)"
+  // the remote session's own ANSI setting decides
+  override def divisionByZeroRaises: Option[Boolean] = None
+  override def tryCast(x: String, to: DataType): Option[String] =
+    Some(s"TRY_CAST($x AS ${typeName(to)})")
 }
 
 /** DuckDB dialect — LIVE-probed against the container's DuckDB 1.0.0
@@ -600,6 +623,16 @@ object DuckDbDialect extends SqlDialect {
     s"(CASE $fast${overflow}ELSE $narrow(CAST(CAST($x AS VARCHAR) AS " +
       s"DECIMAL(${math.min(p + 1, 38)},$s)) AS $dec) END)"
   }
+  // `/` on BIGINTs is fractional on DuckDB 1.0 (probed: (7 / 2) * 2 =
+  // 7.0); `//` truncates toward zero (-7 // 2 = -3) and gives NULL for
+  // a zero divisor
+  override def integralDivide(left: String, right: String): String =
+    s"($left // $right)"
+  override def divisionByZeroRaises: Option[Boolean] = Some(false)
+  // probed: TRY_CAST(CAST(123456.5 AS DECIMAL(20,8)) AS DECIMAL(10,8)) is
+  // NULL, as Spark's LEGACY and TRY casts are
+  override def tryCast(x: String, to: DataType): Option[String] =
+    Some(s"TRY_CAST($x AS ${typeName(to)})")
   // ORDER BY probed bit-identical to Spark beyond the fixed-point
   // default: strings sort by UTF-8 bytes ('~' < 'é' < '😀', same as
   // UTF8String), doubles sort NaN greatest with ±0.0 tied

@@ -5,7 +5,8 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.{ColumnStat, Statistics}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -19,8 +20,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *    happens: the JDBC executor opens connections inside `RDD.compute`
   *    on executor tasks (N partitions = N parallel remote cursors); the
   *    in-process mock returns the inner session's RDD directly;
-  *  - [[queryRow]]: the driver-side one-row read every planning probe and
-  *    the epoch-fence check go through;
+  *  - [[queryRows]]: the driver-side read on the calling thread, with the
+  *    same drift check, coercion and cancellation as a task's read. Every
+  *    planning probe and the epoch-fence check go through its head,
+  *    [[queryRow]], and a fully pushed collect through [[collectRows]];
   *  - catalog listing: [[tableNames]], [[tableSchema]] (and optionally the
   *    named-schema listings);
   *  - for a write path, [[ingest]]: the atomic publish of a frame's rows
@@ -58,12 +61,38 @@ trait SqlExecutor {
   def executeSplit(sql: String, schema: StructType,
       siblings: Int): RDD[InternalRow] = execute(sql, schema)
 
-  /** Driver-side one-row read: run `sql` on the engine and decode its
-    * first row positionally to `schema`. Planning probes and the epoch
-    * fence go through it. Engines without one report no statistics. */
+  /** Driver-side read: run `sql` on the engine and hand its rows, decoded
+    * positionally to `schema` under the same drift check and coercion as
+    * [[execute]]'s, to `consume` on the calling thread. A row is valid
+    * until the next one is pulled. The cursor closes when `consume`
+    * returns or throws; interrupting the calling thread cancels the remote
+    * statement ([[RemoteCancel]]). */
+  def queryRows[A](sql: String, schema: StructType)(
+      consume: Iterator[InternalRow] => A): A
+
+  /** The first row of [[queryRows]], for planning probes and the epoch
+    * fence. The rest of the result is drained, so a pooled cursor goes
+    * back to its pool. */
   protected def queryRow(sql: String, schema: StructType): InternalRow =
-    throw new UnsupportedOperationException(
-      s"remote [$name] has no driver-side query path")
+    queryRows(sql, schema) { it =>
+      if (!it.hasNext) throw new NoSuchElementException(s"no row from: $sql")
+      val row = UnsafeProjection.create(schema)(it.next()).copy()
+      it.foreach(_ => ())
+      row
+    }
+
+  /** A whole fragment read on the driver: [[queryRows]], recorded in
+    * [[executedSql]] as [[execute]] records its SQL. */
+  final def collectRows[A](sql: String, schema: StructType)(
+      consume: Iterator[InternalRow] => A): A = {
+    executedSql.synchronized { executedSql += sql }
+    queryRows(sql, schema)(consume)
+  }
+
+  /** Whether `e`, thrown by [[queryRows]], means the engine's worker or
+    * connection was lost mid-read, so a re-run on a fresh cursor may
+    * succeed. An error the engine reported for the statement is not. */
+  def lostCursor(e: Throwable): Boolean = false
 
   /** Remote catalog listing (the engine's default schema). */
   def tableNames: Seq[String]
@@ -435,6 +464,16 @@ final class SparkSqlExecutor(
 
   override def execute(sql: String, schema: StructType): RDD[InternalRow] = {
     executedSql.synchronized { executedSql += sql }
+    coerced(sql, schema).queryExecution.toRdd
+  }
+
+  override def queryRows[A](sql: String, schema: StructType)(
+      consume: Iterator[InternalRow] => A): A =
+    consume(coerced(sql, schema).queryExecution.executedPlan
+      .executeCollect().iterator)
+
+  private def coerced(sql: String,
+      schema: StructType): org.apache.spark.sql.classic.Dataset[_] = {
     // sqlRewriter was already applied at SQL-generation time
     // (SqlFederationProvider.unparse/unparseSplits) — applying it here too
     // would run non-idempotent hooks twice
@@ -444,15 +483,9 @@ final class SparkSqlExecutor(
         case e: Exception => throw new IllegalStateException(
           s"remote [$name] rejected generated SQL: $sql", e)
       }
-    val coerced = graft.federation.sql.SchemaCoercion.coerce(df, schema)
-    coerced.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.toRdd
+    SchemaCoercion.coerce(df, schema)
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
   }
-
-  override protected def queryRow(sql: String,
-      schema: StructType): InternalRow =
-    CatalystTypeConverters.createToCatalystConverter(schema)(
-      inner.sql(sql).head()).asInstanceOf[InternalRow]
 
   override def tableNames: Seq[String] = tables.keys.toSeq.sorted
 

@@ -691,16 +691,29 @@ class SqlUnparser(dialect: SqlDialect) {
     def fnN(name: String, cs: Seq[Expression]): String =
       s"${dialect.functionName(name)}(${cs.map(r).mkString(", ")})"
     // a cast that drops scale rounds HALF_UP in Spark; the dialect
-    // renders that rounding (and the overflow mode) for its engine
+    // renders that rounding (and the overflow mode) for its engine. One
+    // that keeps the scale but may overflow (fewer integer digits, or a
+    // non-numeric source) gives NULL under a LEGACY or TRY cast, where an
+    // engine's plain CAST raises
     def decimalCast(c: Expression, dt: DecimalType,
         nullOnOverflow: Boolean): String = {
-      val excessScale = c.dataType match {
-        case DoubleType | FloatType => true
-        case d: DecimalType => d.scale > dt.scale
-        case _ => false
+      def intDigits(d: DecimalType) = d.precision - d.scale
+      val (excessScale, mayOverflow) = c.dataType match {
+        case DoubleType | FloatType => (true, true)
+        case d: DecimalType =>
+          (d.scale > dt.scale, intDigits(d) > intDigits(dt))
+        case ByteType => (false, 3 > intDigits(dt))
+        case ShortType => (false, 5 > intDigits(dt))
+        case IntegerType => (false, 10 > intDigits(dt))
+        case LongType => (false, 19 > intDigits(dt))
+        case _ => (false, true)
       }
       if (excessScale)
         dialect.lossyDecimalCast(r(c), c.dataType, dt, nullOnOverflow)
+      else if (nullOnOverflow && mayOverflow)
+        dialect.tryCast(r(c), dt).getOrElse(fail(
+          s"no NULL-on-overflow cast of ${c.dataType.sql} to ${dt.sql} on " +
+            dialect.name))
       else s"CAST(${r(c)} AS ${dialect.typeName(dt)})"
     }
 
@@ -716,7 +729,20 @@ class SqlUnparser(dialect: SqlDialect) {
       case Subtract(l, rr, _) => bin(l, "-", rr)
       case Multiply(l, rr, _) => bin(l, "*", rr)
       case Divide(l, rr, _) => bin(l, "/", rr)
-      case IntegralDivide(l, rr, _) => bin(l, "/", rr)
+      // a divisor that may be zero is exact only where the engine treats
+      // zero as Spark does in this mode: ANSI raises, LEGACY gives NULL
+      case IntegralDivide(l, rr, ctx) =>
+        if (Seq(l, rr).exists(_.dataType.isInstanceOf[DecimalType]))
+          fail(s"div over ${l.dataType.sql} and ${rr.dataType.sql}")
+        val ansi = ctx.evalMode == EvalMode.ANSI
+        rr match {
+          case Literal(v, _) if v != null && v != 0 =>
+          case _ if !dialect.divisionByZeroRaises.contains(ansi) =>
+            fail(s"div by a divisor that may be zero (ANSI $ansi) on " +
+              dialect.name)
+          case _ =>
+        }
+        dialect.integralDivide(r(l), r(rr))
       case Remainder(l, rr, _) => dialect.modulo(r(l), r(rr))
       case UnaryMinus(c, _) => s"(- ${r(c)})"
 
@@ -791,8 +817,6 @@ class SqlUnparser(dialect: SqlDialect) {
         s"(${select(s.plan).sql})"
       case ex: Exists if !ex.isCorrelated =>
         s"EXISTS (${select(ex.plan).sql})"
-      case Not(InSubquery(Seq(v), l: ListQuery)) if !l.isCorrelated =>
-        s"${r(v)} NOT IN (${select(l.plan).sql})"
       case InSubquery(Seq(v), l: ListQuery) if !l.isCorrelated =>
         s"${r(v)} IN (${select(l.plan).sql})"
 

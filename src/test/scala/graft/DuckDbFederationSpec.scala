@@ -73,6 +73,45 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(df) == want)
   }
 
+  test("live: div pushes as DuckDB's `//` and gives Spark's integral " +
+      "quotient; a LEGACY decimal narrowing pushes as TRY_CAST") {
+    ex.runWrite(Seq("CREATE OR REPLACE TABLE div_t AS SELECT " +
+      "CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b, " +
+      "CAST(m AS DECIMAL(20,8)) AS m FROM (VALUES (7, 2, 123456.5), " +
+      "(-7, 2, 12.5), (7, -2, -3.25), (9, 0, 0.5)) v(a, b, m)"))
+    try {
+      Federation.install(spark)
+      Federation.registerRemoteTable(spark, "duck_div_t", "div_t", ex)
+      spark.sql("SELECT * FROM VALUES (7L, 2L, CAST(123456.5 AS " +
+        "DECIMAL(20,8))), (-7L, 2L, CAST(12.5 AS DECIMAL(20,8))), " +
+        "(7L, -2L, CAST(-3.25 AS DECIMAL(20,8))), " +
+        "(9L, 0L, CAST(0.5 AS DECIMAL(20,8))) AS t(a, b, m)")
+        .createOrReplaceTempView("div_local")
+      def check(q: String, pushed: Option[String]): Unit = {
+        val df = spark.sql(q.replace("FROM t", "FROM duck_div_t"))
+        val scans = remoteScans(df)
+        assert(scans.size == 1, s"expected one remote scan: $scans")
+        pushed.foreach(p => assert(scans.head.contains(p), scans.head))
+        assert(rows(df) == rows(spark.sql(q.replace("FROM t",
+          "FROM div_local"))), q)
+      }
+      // DuckDB's `/` is fractional: (7 / 2) * 2 came back as 7
+      check("SELECT a, (a div 2) * 2 AS q FROM t", Some("// 2)"))
+      // under ANSI a column divisor may be zero, where Spark raises and
+      // `//` gives NULL: the quotient stays local
+      check("SELECT a, (a div b) * 2 AS q FROM t WHERE b <> 0", None)
+      val key = "spark.sql.ansi.enabled"
+      spark.conf.set(key, "false")
+      try {
+        check("SELECT a, b, a div b AS q FROM t", Some("// t1.b)"))
+        // 123456.5 overflows DECIMAL(10,8): NULL without ANSI, where a
+        // plain CAST raises on DuckDB
+        check("SELECT a, CAST(m AS DECIMAL(10,8)) AS c FROM t",
+          Some("TRY_CAST("))
+      } finally spark.conf.unset(key)
+    } finally ex.runWrite(Seq("DROP TABLE IF EXISTS div_t"))
+  }
+
   test("live probe: DECIMAL cast rounds like Spark (HALF_UP emulation)") {
     // DuckDB CAST of a DECIMAL truncates toward zero (probed: 2.5→2,
     // -2.5→-2); the dialect's nudge-then-truncate emulation must restore
@@ -1784,6 +1823,10 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
       override def execute(sql: String,
           schema: org.apache.spark.sql.types.StructType) =
         e.execute(sql, schema)
+      override def queryRows[A](sql: String,
+          schema: org.apache.spark.sql.types.StructType)(
+          consume: Iterator[org.apache.spark.sql.catalyst.InternalRow] => A) =
+        e.queryRows(sql, schema)(consume)
       override def tableNames = e.tableNames
       override def tableSchema(ref: RemoteTableRef) = {
         probes.synchronized { probes += ref.toString }

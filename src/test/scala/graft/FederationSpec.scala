@@ -578,6 +578,44 @@ class FederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(n == expected)
   }
 
+  test("mock: div pushes as Spark's div, and a LEGACY decimal narrowing " +
+      "as TRY_CAST — both give the local answer") {
+    setup()
+    // a column divisor stays local on the mock: zero raises or gives NULL
+    // by the mock session's own ANSI setting
+    val tmp = java.nio.file.Files.createTempDirectory("fed_div").toString
+    try {
+      spark.sql("SELECT * FROM VALUES (7L, 2L, CAST(123456.5 AS " +
+        "DECIMAL(20,8))), (-7L, 2L, CAST(12.5 AS DECIMAL(20,8))), " +
+        "(9L, 0L, CAST(-3.25 AS DECIMAL(20,8))) AS t(a, b, m)")
+        .write.parquet(s"$tmp/div_t")
+      spark.read.parquet(s"$tmp/div_t").createOrReplaceTempView("div_local")
+      val ex = new graft.federation.sql.SparkSqlExecutor("mockdiv",
+        spark.newSession(), Map("div_t" -> s"$tmp/div_t"),
+        context = s"mockdiv@$tmp")
+      graft.federation.Federation.registerRemoteTable(
+        spark, "fed_div_t", "div_t", ex)
+      def check(q: String, pushed: String): Unit = {
+        val df = spark.sql(q.replace("FROM t", "FROM fed_div_t"))
+        val got = df.collect().map(_.toString).sorted.toSeq
+        assert(fedFragments(df).nonEmpty, q)
+        val wire = ex.executedSql.synchronized(ex.executedSql.last)
+        assert(wire.contains(pushed), wire)
+        assert(got == spark.sql(q.replace("FROM t", "FROM div_local"))
+          .collect().map(_.toString).sorted.toSeq, q)
+      }
+      // Spark's `/` is fractional: (7 / 2) * 2 would come back as 7
+      check("SELECT a, (a div 2) * 2 AS q FROM t", " div 2)")
+      val key = "spark.sql.ansi.enabled"
+      spark.conf.set(key, "false")
+      try {
+        // 123456.5 overflows DECIMAL(10,8): NULL without ANSI
+        check("SELECT CAST(m AS DECIMAL(10,8)) AS c FROM t", "TRY_CAST(")
+      } finally spark.conf.unset(key)
+    } finally org.apache.commons.io.FileUtils
+      .deleteQuietly(new java.io.File(tmp))
+  }
+
   test("per-table hooks: self-joined table contributes its hooks once") {
     setup()
     val hooks = new graft.federation.sql.TableHooks(

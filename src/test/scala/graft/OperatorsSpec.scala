@@ -158,12 +158,23 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "cap=1 must split at least one multi-occupant bucket")
   }
 
+  /** Ids of the RDDs persisted in this context now. The cache tests
+    * compare id sets, not counts: other RDDs of the shared context come
+    * and go meanwhile (an earlier test's non-blocking unpersist lands
+    * late), so a count can move for reasons of its own. */
+  private def persistedIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
   test("dedup signature cache releases storage on demand and rebuilds") {
-    operators.Dedup.minhash(spark, dir).count() // materializes the cache
-    val before = spark.sparkContext.getPersistentRDDs.size
-    assert(before > 0, "signature staging table should be persisted")
     operators.Dedup.releaseSignatures(spark, dir)
-    assert(spark.sparkContext.getPersistentRDDs.size < before,
+    val base = persistedIds()
+    // collect, not count: a count needs no candidate pair (the left join
+    // to the pairs drops out), so it never reads the signatures
+    operators.Dedup.minhash(spark, dir).collect() // materializes the cache
+    val built = persistedIds() -- base
+    assert(built.nonEmpty, "signature staging table should be persisted")
+    operators.Dedup.releaseSignatures(spark, dir)
+    assert((persistedIds() intersect built).isEmpty,
       "release must unpersist the staging table")
     // transparent rebuild after release
     assert(operators.Dedup.minhash(spark, dir).count() > 0)
@@ -172,18 +183,19 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ivf index cache persists once, releases storage on demand, rebuilds") {
     operators.Similarity.releaseIvfIndex(spark, dir)
-    val base = spark.sparkContext.getPersistentRDDs.size
+    val base = persistedIds()
     val first = operators.Similarity.ivfTopK(spark, dir).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size > base,
+    val built = persistedIds() -- base
+    assert(built.nonEmpty,
       "ivf index (centroids + inverted file) should be persisted")
-    val cached = spark.sparkContext.getPersistentRDDs.size
+    val cached = persistedIds()
     // a second probe reuses the index: no new persisted tables
     val again = operators.Similarity.ivfTopK(spark, dir).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size == cached,
+    assert((persistedIds() -- cached).isEmpty,
       "second probe must reuse the cached index, not rebuild it")
     assert(again.toSeq == first.toSeq)
     operators.Similarity.releaseIvfIndex(spark, dir)
-    assert(spark.sparkContext.getPersistentRDDs.size < cached,
+    assert((persistedIds() intersect built).isEmpty,
       "release must unpersist the index")
     // transparent rebuild after release
     assert(operators.Similarity.ivfTopK(spark, dir).count() > 0)
@@ -192,18 +204,21 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("component label cache persists once, releases storage, rebuilds") {
     operators.Dedup.releaseComponents(spark, dir)
-    val base = spark.sparkContext.getPersistentRDDs.size
+    // the signatures the candidate pairs come from are a cache of their
+    // own: materialize them first, so the build adds only the labels
+    operators.Dedup.minhash(spark, dir).collect()
+    val base = persistedIds()
     val first = operators.Dedup.components(spark, dir).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size > base,
-      "converged label table should be persisted")
-    val cached = spark.sparkContext.getPersistentRDDs.size
+    val built = persistedIds() -- base
+    assert(built.nonEmpty, "converged label table should be persisted")
+    val cached = persistedIds()
     // a second read reuses the labels: no new persisted tables, no new loop
     val again = operators.Dedup.components(spark, dir).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size == cached,
+    assert((persistedIds() -- cached).isEmpty,
       "second read must reuse the cached labels, not re-run the fixpoint")
     assert(again.toSeq == first.toSeq)
     operators.Dedup.releaseComponents(spark, dir)
-    assert(spark.sparkContext.getPersistentRDDs.size < cached,
+    assert((persistedIds() intersect built).isEmpty,
       "release must unpersist the label table")
     assert(operators.Dedup.components(spark, dir).count() > 0)
     operators.Dedup.releaseComponents(spark, dir)
@@ -211,19 +226,19 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("quantized code table caches once, releases, rebuilds") {
     operators.Similarity.releaseCodes(spark, dir)
-    val base = spark.sparkContext.getPersistentRDDs.size
+    val base = persistedIds()
     val first = operators.Similarity.quantizedTopK(spark, dir).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size > base,
-      "code table should be persisted")
-    val cached = spark.sparkContext.getPersistentRDDs.size
+    val built = persistedIds() -- base
+    assert(built.nonEmpty, "code table should be persisted")
+    val cached = persistedIds()
     // rerank reuses the same stored codes: no new persisted tables
     operators.Similarity.rerankTopK(spark, dir).collect()
-    assert(spark.sparkContext.getPersistentRDDs.size == cached,
+    assert((persistedIds() -- cached).isEmpty,
       "rerank must reuse the cached code table")
     assert(operators.Similarity.quantizedTopK(spark, dir)
       .collect().toSeq == first.toSeq)
     operators.Similarity.releaseCodes(spark, dir)
-    assert(spark.sparkContext.getPersistentRDDs.size < cached,
+    assert((persistedIds() intersect built).isEmpty,
       "release must unpersist the code table")
     assert(operators.Similarity.quantizedTopK(spark, dir).count() > 0)
     operators.Similarity.releaseCodes(spark, dir)

@@ -21,7 +21,8 @@ import graft.federation.sql.RemoteTableRef
   * exact final answer, and boundary metrics counted once (SQLMetrics
   * exclude failed attempts). `local[4, 4]` gives local tasks the
   * cluster-default retry budget (`spark.task.maxFailures` = 4); nothing
-  * is raised beyond defaults.
+  * is raised beyond defaults. A fully pushed collect runs no task: its
+  * driver fetch re-runs under the same limit.
   */
 class ReadChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -153,6 +154,64 @@ class ReadChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sparkContext.removeSparkListener(chaosListener)
       e.runWrite(Seq("DROP TABLE IF EXISTS chaos_big"))
     }
+  }
+
+  test("DuckDB worker killed mid-fetch of a fully pushed collect: the " +
+      "driver re-runs the fetch, answer exact, rows counted once") {
+    // one cursor, so the scan is collected on the driver with no task to
+    // retry: the driver's own re-run (up to the same 4-failure limit)
+    // must take over
+    val e = new DuckDbSqlExecutor("duck1", spark,
+      DuckDbHarness.executor(spark, dir).dbPath)
+    Federation.install(spark)
+    val N = 1000000L
+    // a streaming per-row cost keeps the 1M-row fetch in flight ~1 s
+    e.runDdl(RemoteTableRef.parse("chaos_drv"), Seq(
+      "CREATE OR REPLACE VIEW chaos_drv AS SELECT range AS id FROM " +
+        s"range($N) WHERE md5(md5(md5(CAST(range AS VARCHAR)))) <> 'x'"))
+    try {
+      var landed = false
+      var attempt = 0
+      while (!landed && attempt < 12) {
+        attempt += 1
+        val df = Federation.remoteDataFrame(spark, "chaos_drv", e)
+        // plan (and probe) before the chaos window opens
+        val scan = df.queryExecution.executedPlan match {
+          case r: graft.federation.exec.RemoteScanExec => r
+          case other => fail(s"not a root remote scan:\n$other")
+        }
+        def shipped: Int = e.executedSql.synchronized(
+          e.executedSql.count(_ == scan.sqls.head))
+        val shipped0 = shipped
+        @volatile var res: Array[org.apache.spark.sql.Row] = null
+        @volatile var err: Throwable = null
+        val t = new Thread(() => {
+          try res = df.collect() catch { case x: Throwable => err = x }
+        })
+        t.start()
+        // three volleys stay under the 4-failure limit
+        var volleys = 0
+        while (t.isAlive && volleys < 3 && shipped - shipped0 < 2) {
+          Thread.sleep(300)
+          if (t.isAlive) { killDuckWorkers(); volleys += 1 }
+        }
+        t.join(180000)
+        assert(!t.isAlive, "chaos attempt hung")
+        assert(err == null, s"the driver fetch failed: $err")
+        // landed: the fetch SQL shipped again after a lost worker
+        if (shipped - shipped0 >= 2) {
+          landed = true
+          assert(res.length == N)
+          assert(res.map(_.getLong(0)).sum == N * (N - 1) / 2)
+          assert(scan.metrics("numOutputRows").value == N,
+            s"rows metric must count the fetch once, got " +
+              s"${scan.metrics("numOutputRows").value}")
+          assert(scan.metrics("numSplits").value == 1)
+        }
+      }
+      assert(landed, "chaos never landed on a driver fetch in 12 attempts")
+      assert(e.runQuery("SELECT COUNT(*) FROM chaos_drv").head.getLong(0) == N)
+    } finally e.runWrite(Seq("DROP VIEW IF EXISTS chaos_drv"))
   }
 
   test("DuckDB worker killed mid-MICROBATCH: the streaming source's task " +

@@ -7,8 +7,11 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+import graft.federation.Federation
 import graft.federation.duckdb.DuckDbHarness
+import graft.federation.exec.RemoteScanExec
 import graft.federation.jdbc.{DerbyDialect, JdbcSqlExecutor}
+import graft.federation.sql.RemoteTableRef
 
 /** Remote cancellation: a killed Spark job must cancel the in-flight
   * remote statement promptly instead of holding the executor thread until
@@ -21,8 +24,11 @@ import graft.federation.jdbc.{DerbyDialect, JdbcSqlExecutor}
   * only a thread interrupt aborts it. The DuckDB subprocess dies by
   * process kill, which also guarantees it never rejoins the pool.
   *
-  * Both tests cancel WITHOUT `interruptOnCancel` — proving the watchdog
-  * path, not Spark's own optional interrupt.
+  * The job tests cancel WITHOUT `interruptOnCancel` — proving the
+  * watchdog path, not Spark's own optional interrupt. A fully pushed
+  * collect runs no job at all (the root scan reads on the driver); Spark
+  * Connect and the Thrift server cancel it by interrupting the calling
+  * thread, which the interrupt tests do.
   */
 class RemoteCancelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -55,13 +61,32 @@ class RemoteCancelSpec extends AnyFunSuite with BeforeAndAfterAll {
     (died, err)
   }
 
-  test("killed job interrupts an in-flight Derby statement promptly") {
-    val url = "jdbc:derby:memory:cancelspec;create=true"
+  /** Run `body` on its own thread, interrupt that thread after
+    * `interruptAfterMs`, return (diedWithinMs, error). */
+  private def runAndInterrupt(interruptAfterMs: Long, deadlineMs: Long)(
+      body: => Unit): (Boolean, Throwable) = {
+    @volatile var err: Throwable = null
+    val t = new Thread(() => try body catch { case e: Throwable => err = e })
+    t.start()
+    Thread.sleep(interruptAfterMs)
+    val t0 = System.nanoTime()
+    t.interrupt()
+    t.join(deadlineMs)
+    val died = !t.isAlive && (System.nanoTime() - t0) / 1e6 < deadlineMs
+    (died, err)
+  }
+
+  private def derbyT10(url: String): Unit = {
     val conn = DriverManager.getConnection(url)
     val st = conn.createStatement()
     st.executeUpdate("CREATE TABLE t10 (i INT)")
     (0 until 10).foreach(i => st.executeUpdate(s"INSERT INTO t10 VALUES ($i)"))
     st.close(); conn.close()
+  }
+
+  test("killed job interrupts an in-flight Derby statement promptly") {
+    val url = "jdbc:derby:memory:cancelspec;create=true"
+    derbyT10(url)
     val ex = new JdbcSqlExecutor("derby", spark, url, DerbyDialect)
     // 10^9-row cartesian: minutes of engine compute if not cancelled
     val slow = "SELECT COUNT(*) FROM t10 a, t10 b, t10 c, t10 d, t10 e," +
@@ -96,5 +121,54 @@ class RemoteCancelSpec extends AnyFunSuite with BeforeAndAfterAll {
       val got = ex.runQuery(s"SELECT $i * 7").head.getInt(0)
       assert(got == i * 7, s"poisoned pooled server reuse: got $got")
     }
+  }
+
+  test("interrupting the caller stops a slow fully pushed Derby collect " +
+      "promptly") {
+    val url = "jdbc:derby:memory:cancelspec2;create=true"
+    derbyT10(url)
+    val conn = DriverManager.getConnection(url)
+    val st = conn.createStatement()
+    // 10^9-row cartesian: minutes of engine compute if not cancelled
+    st.executeUpdate("CREATE VIEW slow_v AS SELECT COUNT(*) AS c FROM t10 a," +
+      " t10 b, t10 c, t10 d, t10 e, t10 f, t10 g, t10 h, t10 i")
+    st.close(); conn.close()
+    val ex = new JdbcSqlExecutor("derby", spark, url, DerbyDialect)
+    Federation.install(spark)
+    val df = Federation.remoteDataFrame(spark, "SLOW_V", ex)
+    val (died, err) = runAndInterrupt(2000, 10000) { df.collect(); () }
+    assert(died, "Derby driver fetch did not stop promptly after interrupt")
+    assert(err != null && String.valueOf(err.getMessage).contains("cancelled"),
+      String.valueOf(err))
+    assert(df.queryExecution.executedPlan.isInstanceOf[RemoteScanExec])
+    // a fresh statement still works
+    assert(Federation.remoteDataFrame(spark, "T10", ex).collect().length == 10)
+  }
+
+  test("interrupting the caller stops a slow fully pushed DuckDB collect; " +
+      "the pool serves correct results afterwards") {
+    val dir = "/root/testdata/sf0.001"
+    // one cursor: the harness executor would split the view's scan
+    val ex = new graft.federation.duckdb.DuckDbSqlExecutor("duck1", spark,
+      DuckDbHarness.executor(spark, dir).dbPath)
+    // ~2.5e11 candidate pairs: minutes of engine compute if not cancelled
+    ex.runDdl(RemoteTableRef.parse("slow_v"), Seq("CREATE OR REPLACE VIEW " +
+      "slow_v AS SELECT COUNT(*) AS c FROM range(500000) a, range(500000) b " +
+      "WHERE (a.range + b.range) % 97 = 13"))
+    try {
+      Federation.install(spark)
+      val df = Federation.remoteDataFrame(spark, "slow_v", ex)
+      val (died, err) = runAndInterrupt(2000, 10000) { df.collect(); () }
+      assert(died, "DuckDB driver fetch did not stop promptly after interrupt")
+      assert(err != null &&
+        String.valueOf(err.getMessage).contains("cancelled"), String.valueOf(err))
+      assert(df.queryExecution.executedPlan.isInstanceOf[RemoteScanExec])
+      (1 to 3).foreach { i =>
+        val got = ex.runQuery(s"SELECT $i * 7").head.getInt(0)
+        assert(got == i * 7, s"poisoned pooled server reuse: got $got")
+      }
+      assert(Federation.remoteDataFrame(spark, "region", ex).collect()
+        .length == 5)
+    } finally ex.runWrite(Seq("DROP VIEW IF EXISTS slow_v"))
   }
 }

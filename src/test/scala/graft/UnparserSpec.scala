@@ -28,6 +28,9 @@ class UnparserSpec extends AnyFunSuite {
     override def dialect: SqlDialect = AnsiDialect
     override def execute(sql: String, schema: StructType): RDD[InternalRow] =
       throw new UnsupportedOperationException("golden tests never execute")
+    override def queryRows[A](sql: String, schema: StructType)(
+        consume: Iterator[InternalRow] => A): A =
+      throw new UnsupportedOperationException("golden tests never execute")
     override def tableNames: Seq[String] = Nil
     override def tableSchema(ref: RemoteTableRef): StructType =
       throw new UnsupportedOperationException
@@ -390,6 +393,70 @@ class UnparserSpec extends AnyFunSuite {
         "AS DECIMAL(18,2))"))
     assert(SqlUnparser.tryUnparse(cast(x, 30, 2, EvalMode.LEGACY),
       DerbyDialect).isEmpty)
+  }
+
+  test("decimal narrowing without excess scale: NULL on overflow where " +
+      "the cast mode says so") {
+    val r = rel("r", "m" -> DecimalType(20, 8), "n" -> LongType,
+      "i" -> IntegerType)
+    val Seq(m, n, i) = r.output
+    def cast(e: Expression, p: Int, s: Int, mode: EvalMode.Value) =
+      Project(Seq(Alias(Cast(e, DecimalType(p, s), Some("UTC"), mode), "v")()), r)
+    def in(d: SqlDialect, plan: LogicalPlan) =
+      SqlUnparser.tryUnparse(plan, d)
+    // LEGACY / TRY: Spark gives NULL past the range, as TRY_CAST does
+    assert(in(DuckDbDialect, cast(m, 10, 8, EvalMode.LEGACY)).contains(
+      "SELECT TRY_CAST(t1.m AS DECIMAL(10,8)) AS v FROM r AS t1"))
+    assert(in(DuckDbDialect, cast(n, 10, 0, EvalMode.TRY)).contains(
+      "SELECT TRY_CAST(t1.n AS DECIMAL(10,0)) AS v FROM r AS t1"))
+    assert(in(SparkDialect, cast(m, 10, 8, EvalMode.LEGACY)).contains(
+      "SELECT TRY_CAST(t1.m AS DECIMAL(10,8)) AS v FROM r AS t1"))
+    // Derby has no such cast: the expression stays local
+    assert(in(DerbyDialect, cast(m, 10, 8, EvalMode.LEGACY)).isEmpty)
+    // ANSI raises on overflow, as a plain CAST does
+    assert(in(DuckDbDialect, cast(m, 10, 8, EvalMode.ANSI)).contains(
+      "SELECT CAST(t1.m AS DECIMAL(10,8)) AS v FROM r AS t1"))
+    assert(in(DerbyDialect, cast(m, 10, 8, EvalMode.ANSI)).nonEmpty)
+    // a target that holds every source value cannot overflow
+    assert(in(DerbyDialect, cast(m, 22, 8, EvalMode.LEGACY)).nonEmpty)
+    assert(in(DuckDbDialect, cast(i, 10, 0, EvalMode.LEGACY)).contains(
+      "SELECT CAST(t1.i AS DECIMAL(10,0)) AS v FROM r AS t1"))
+  }
+
+  test("div renders as each engine's integral quotient; refused where it " +
+      "cannot be exact") {
+    val r = rel("r", "a" -> LongType, "b" -> LongType,
+      "d" -> DecimalType(10, 2))
+    val Seq(x, y, d) = r.output
+    def div(l: Expression, rr: Expression, mode: EvalMode.Value) =
+      Project(Seq(Alias(IntegralDivide(l, rr, NumericEvalContext(mode)),
+        "q")()), r)
+    def in(dl: SqlDialect, plan: LogicalPlan) =
+      SqlUnparser.tryUnparse(plan, dl)
+    // a non-zero literal divisor is exact in every mode
+    assert(in(DuckDbDialect, div(x, Literal(2L), EvalMode.ANSI)).contains(
+      "SELECT (t1.a // 2) AS q FROM r AS t1"))
+    assert(in(SparkDialect, div(x, Literal(2L), EvalMode.ANSI)).contains(
+      "SELECT (t1.a div 2) AS q FROM r AS t1"))
+    assert(in(DerbyDialect, div(x, Literal(2L), EvalMode.ANSI)).contains(
+      "SELECT (\"t1\".\"a\" / 2) AS \"q\" FROM \"r\" AS \"t1\""))
+    // a divisor that may be zero: Spark raises under ANSI and gives NULL
+    // without it. DuckDB's `//` gives NULL, Derby's `/` raises, and the
+    // mock follows its own session's setting, so only a matching engine
+    // takes it
+    assert(in(DuckDbDialect, div(x, y, EvalMode.LEGACY)).contains(
+      "SELECT (t1.a // t1.b) AS q FROM r AS t1"))
+    assert(in(DuckDbDialect, div(x, y, EvalMode.ANSI)).isEmpty)
+    assert(in(DuckDbDialect, div(x, Literal(0L), EvalMode.ANSI)).isEmpty)
+    assert(in(DerbyDialect, div(x, y, EvalMode.ANSI)).nonEmpty)
+    assert(in(DerbyDialect, div(x, y, EvalMode.LEGACY)).isEmpty)
+    assert(in(SparkDialect, div(x, y, EvalMode.ANSI)).isEmpty)
+    assert(in(SparkDialect, div(x, y, EvalMode.LEGACY)).isEmpty)
+    // a decimal quotient is no integral division on any engine
+    Seq(DuckDbDialect, SparkDialect, DerbyDialect).foreach { dl =>
+      assert(in(dl, div(d, Literal(Decimal(2), DecimalType(10, 2)),
+        EvalMode.LEGACY)).isEmpty, dl.name)
+    }
   }
 
   test("hex-to-dec conv: per-dialect spelling, refusal where none exists") {
