@@ -358,15 +358,6 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"errors":$errors,$diagFields"queries":$qs,"sf":"$sfDir"}""")
     println(s"""{"metric":"total","value":$total,"unit":"sec","iters":$iters,"errors":$errors,$diagFields"sf":"$sfDir"}""")
     System.out.flush()
-    graft.operators.Dedup.releaseAllSignatures()
-    graft.operators.Classifier.releaseAllWeights()
-    graft.operators.Sampling.releaseAllDsir()
-    graft.streaming.StreamOps.releaseAllDsirModels()
-    graft.operators.Similarity.releaseAllCounts()
-    graft.operators.Similarity.releaseAllIvf()
-    graft.operators.Similarity.releaseAllCodes()
-    graft.operators.Similarity.releaseAllPq()
-    graft.streaming.StreamOps.releaseAllLmModels()
     spark.stop()
   }
 }

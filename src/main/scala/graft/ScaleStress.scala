@@ -137,7 +137,7 @@ object ScaleStress {
         val out = graft.operators.Pipeline.curatedCorpus(spark, outDir)
         out.agg(sum(col("n_docs")), sum(col("n_seqs"))).head.getLong(0)
       }
-      graft.streaming.StreamOps.releaseAllLmModels()
+      graft.SessionCache.release(outDir)
       val pipeJson = phases
         .filter(p => Seq("gen", "pipe_train_corpus", "pipe_curated_corpus")
           .contains(p._1))
@@ -622,7 +622,7 @@ object ScaleStress {
             sum(when(col("verified"), 1L).otherwise(0L)))
           .head
       }
-      graft.operators.Dedup.releaseSignatures(spark, outDir)
+      graft.SessionCache.release(outDir)
       val edJson = phases
         .filter(p => Seq("gen", "editdist_verify").contains(p._1))
         .map { case (n, p) =>

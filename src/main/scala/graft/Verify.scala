@@ -45,14 +45,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.operators.Dedup.releaseAllSignatures()
-    graft.operators.Classifier.releaseAllWeights()
-    graft.operators.Sampling.releaseAllDsir()
-    graft.streaming.StreamOps.releaseAllDsirModels()
-    graft.operators.Similarity.releaseAllCounts()
-    graft.operators.Similarity.releaseAllIvf()
-    graft.operators.Similarity.releaseAllCodes()
-    graft.operators.Similarity.releaseAllPq()
     spark.stop()
   }
 }

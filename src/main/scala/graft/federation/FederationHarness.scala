@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.federation.sql.SparkSqlExecutor
+import graft.federation.sql.{SparkSqlExecutor, SqlExecutor}
 
 /** Test/driver harness: remote engines simulated by isolated-catalog
   * sibling SparkSessions over the same parquet testdata — the Spark
@@ -26,7 +26,7 @@ object FederationHarness {
   def executor(spark: SparkSession, dir: String,
       name: String): SparkSqlExecutor =
     executors.getOrElseUpdate(
-      (graft.SessionKeys.id(spark), dir, name), {
+      (graft.SessionCache.id(spark), dir, name), {
         val inner = spark.newSession()
         new SparkSqlExecutor(name, inner,
           tpch.map(t => t -> s"$dir/$t.parquet").toMap,
@@ -38,35 +38,41 @@ object FederationHarness {
   def splitExecutor(spark: SparkSession, dir: String,
       name: String, n: Int): SparkSqlExecutor =
     executors.getOrElseUpdate(
-      (graft.SessionKeys.id(spark), dir, s"$name#$n"), {
+      (graft.SessionCache.id(spark), dir, s"$name#$n"), {
         val inner = spark.newSession()
         new SparkSqlExecutor(name, inner,
           tpch.map(t => t -> s"$dir/$t.parquet").toMap,
           context = s"$name@$dir", numSplits = n)
       })
 
-  /** Last dir whose fed_/fedb_ views were registered, per session:
-    * setup() runs on EVERY federated gate build (93 gates × bench
-    * iterations), and re-registering 18 remote views each time was pure
-    * catalog churn (r15 FedProbe: DataFrame build 45-780 ms vs ~20 ms of
-    * optimize). Views are re-registered only when the session is new or
-    * the data dir changes (so switching dirs still repoints them). */
-  private val registeredDir = TrieMap.empty[Int, String]
+  /** Last dir whose `<prefix>*` views were registered, per (session,
+    * prefix): every harness registers on EVERY gate build (93 federated
+    * gates × bench iterations), and re-listing the engine catalog plus
+    * re-registering each remote view was pure catalog churn (r15
+    * FedProbe: DataFrame build 45-780 ms vs ~20 ms of optimize). */
+  private val registered = TrieMap.empty[(Int, String), String]
+
+  /** Install federation into `spark` and register a `<prefix><table>`
+    * remote view for every table of `ex` — a no-op when this session
+    * already has this prefix's views over `dir`, so only a new session or
+    * a new dir (which repoints the views) loads the executor. */
+  private[federation] def registerOnce(spark: SparkSession, dir: String,
+      prefix: String)(ex: => SqlExecutor): Unit = {
+    val key = (graft.SessionCache.id(spark), prefix)
+    if (registered.get(key).contains(dir)) return
+    Federation.install(spark)
+    val e = ex
+    e.tableNames.foreach { t =>
+      Federation.registerRemoteTable(spark, prefix + t, t, e)
+    }
+    registered.put(key, dir)
+  }
 
   /** Install federation into `spark` and register the fed_* / fedb_*
-    * remote views for `dir` (idempotent, and a no-op when this session
-    * already has this dir's views). */
+    * remote views for `dir` (idempotent). */
   def setup(spark: SparkSession, dir: String): Unit = {
-    val id = graft.SessionKeys.id(spark)
-    if (registeredDir.get(id).contains(dir)) return
-    Federation.install(spark)
-    val alpha = executor(spark, dir, "alpha")
-    val beta = executor(spark, dir, "beta")
-    tpch.foreach { t =>
-      Federation.registerRemoteTable(spark, s"fed_$t", t, alpha)
-      Federation.registerRemoteTable(spark, s"fedb_$t", t, beta)
-    }
-    registeredDir.put(id, dir)
+    registerOnce(spark, dir, "fed_")(executor(spark, dir, "alpha"))
+    registerOnce(spark, dir, "fedb_")(executor(spark, dir, "beta"))
   }
 
   /** Run a SQL query against the federated views. */

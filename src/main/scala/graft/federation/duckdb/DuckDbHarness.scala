@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.federation.Federation
+import graft.federation.FederationHarness
 
 /** Gate/test harness for the live DuckDB engine: builds a per-(JVM, dir)
   * DuckDB database FILE from the driver's parquet testdata and registers
@@ -27,80 +27,48 @@ object DuckDbHarness {
 
   val Splits = 4
 
-  private val loaded = TrieMap.empty[(Int, String), DuckDbSqlExecutor]
+  private val loaded = TrieMap.empty[(Int, String, String), DuckDbSqlExecutor]
 
   def executor(spark: SparkSession, dir: String,
       tables: Seq[String] = GateTables): DuckDbSqlExecutor =
-    loaded.getOrElseUpdate((graft.SessionKeys.id(spark), dir), {
-      val root = java.nio.file.Paths.get("target", "duckdb")
-      java.nio.file.Files.createDirectories(root)
-      val db = root.resolve(
-        s"graft_${Math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}.duckdb")
-      java.nio.file.Files.deleteIfExists(db)
-      db.toFile.deleteOnExit()
-      val path = db.toAbsolutePath.toString
-      DuckDbProcess.exec(path, tables.map { t =>
-        s"""CREATE TABLE "$t" AS SELECT * FROM read_parquet('$dir/$t.parquet')"""
-      })
-      new DuckDbSqlExecutor("duck", spark, path, splitCount = Splits)
-    })
-
-  // last dir registered per session — registerViews runs on every gate
-  // build and each call re-listed the engine catalog + re-registered
-  // every view (r15 FedProbe: build-time churn); skip when unchanged
-  private val registeredA = TrieMap.empty[Int, String]
-  private val registeredB = TrieMap.empty[Int, String]
-
-  /** Register `duck_<table>` remote views (idempotent; no-op when this
-    * session already has this dir's views). */
-  def registerViews(spark: SparkSession, dir: String): Unit = {
-    val id = graft.SessionKeys.id(spark)
-    if (registeredA.get(id).contains(dir)) return
-    Federation.install(spark)
-    val ex = executor(spark, dir)
-    ex.tableNames.foreach { t =>
-      Federation.registerRemoteTable(spark, s"duck_$t", t, ex)
-    }
-    registeredA.put(id, dir)
-  }
-
-  /** Register the views and run a SQL query against them. */
-  def sql(spark: SparkSession, dir: String, query: String): DataFrame = {
-    registerViews(spark, dir)
-    spark.sql(query)
-  }
-
-  private val loadedB = TrieMap.empty[(Int, String), DuckDbSqlExecutor]
+    load(spark, dir, tables, "duck", "graft")
 
   /** A SECOND live DuckDB instance — its own database file, so its
     * computeContext differs and the no-mixing invariant applies between
     * two instances of the SAME engine type (the jdbc harness proves this
     * with two Derby instances; this is the subprocess-engine parallel). */
   def executorB(spark: SparkSession, dir: String): DuckDbSqlExecutor =
-    loadedB.getOrElseUpdate((graft.SessionKeys.id(spark), dir), {
+    load(spark, dir, Seq("nation", "region"), "duckb", "graftb")
+
+  /** Load `tables` for `dir` into the database file `<file>_…` once per
+    * (session, dir, name). */
+  private def load(spark: SparkSession, dir: String, tables: Seq[String],
+      name: String, file: String): DuckDbSqlExecutor =
+    loaded.getOrElseUpdate((graft.SessionCache.id(spark), dir, name), {
       val root = java.nio.file.Paths.get("target", "duckdb")
       java.nio.file.Files.createDirectories(root)
       val db = root.resolve(
-        s"graftb_${Math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}.duckdb")
+        s"${file}_${Math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}.duckdb")
       java.nio.file.Files.deleteIfExists(db)
       db.toFile.deleteOnExit()
       val path = db.toAbsolutePath.toString
-      DuckDbProcess.exec(path, Seq("nation", "region").map { t =>
+      DuckDbProcess.exec(path, tables.map { t =>
         s"""CREATE TABLE "$t" AS SELECT * FROM read_parquet('$dir/$t.parquet')"""
       })
-      new DuckDbSqlExecutor("duckb", spark, path, splitCount = Splits)
+      new DuckDbSqlExecutor(name, spark, path, splitCount = Splits)
     })
 
-  /** Register `duck2_<table>` views on the second instance (idempotent;
-    * no-op when this session already has this dir's views). */
-  def registerViewsB(spark: SparkSession, dir: String): Unit = {
-    val id = graft.SessionKeys.id(spark)
-    if (registeredB.get(id).contains(dir)) return
-    Federation.install(spark)
-    val ex = executorB(spark, dir)
-    ex.tableNames.foreach { t =>
-      Federation.registerRemoteTable(spark, s"duck2_$t", t, ex)
-    }
-    registeredB.put(id, dir)
+  /** Register `duck_<table>` remote views (idempotent). */
+  def registerViews(spark: SparkSession, dir: String): Unit =
+    FederationHarness.registerOnce(spark, dir, "duck_")(executor(spark, dir))
+
+  /** Register `duck2_<table>` views on the second instance (idempotent). */
+  def registerViewsB(spark: SparkSession, dir: String): Unit =
+    FederationHarness.registerOnce(spark, dir, "duck2_")(executorB(spark, dir))
+
+  /** Register the views and run a SQL query against them. */
+  def sql(spark: SparkSession, dir: String, query: String): DataFrame = {
+    registerViews(spark, dir)
+    spark.sql(query)
   }
 }

@@ -7,7 +7,7 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.federation.Federation
+import graft.federation.FederationHarness
 
 /** Gate/test harness for the REAL JDBC path: loads TPC-H tables from the
   * driver's parquet testdata into an embedded in-memory Derby database and
@@ -55,8 +55,8 @@ object JdbcHarness {
 
   private def load(spark: SparkSession, dir: String,
       tables: Seq[String], suffix: String): JdbcSqlExecutor =
-    loaded.getOrElseUpdate((graft.SessionKeys.id(spark), dir + suffix), {
-      val db = s"graft_${Math.abs(dir.hashCode)}_${graft.SessionKeys.id(spark)}$suffix"
+    loaded.getOrElseUpdate((graft.SessionCache.id(spark), dir + suffix), {
+      val db = s"graft_${Math.abs(dir.hashCode)}_${graft.SessionCache.id(spark)}$suffix"
       val url = s"jdbc:derby:memory:$db;create=true"
       val conn = DriverManager.getConnection(url)
       try {
@@ -133,22 +133,16 @@ object JdbcHarness {
         }
         conn.commit()
       } finally conn.close()
-      urls.put((graft.SessionKeys.id(spark), dir + suffix),
-        s"jdbc:derby:memory:$db")
       new JdbcSqlExecutor("derby", spark, s"jdbc:derby:memory:$db",
         DerbyDialect, splitCount = Splits)
     })
-
-  private val urls = TrieMap.empty[(Int, String), String]
 
   /** Prepare an empty write-target table on the harness database (create
     * if missing, clear otherwise) — the DDL half a remote engine owns;
     * the federation write path only appends ([[JdbcSqlExecutor.insertInto]]). */
   def resetWriteTarget(spark: SparkSession, dir: String, table: String,
       columnsDdl: String): Unit = {
-    executor(spark, dir) // ensure the database exists
-    val url = urls((graft.SessionKeys.id(spark), dir))
-    val conn = DriverManager.getConnection(url)
+    val conn = DriverManager.getConnection(executor(spark, dir).url)
     try {
       val st = conn.createStatement()
       try st.executeUpdate(s"""CREATE TABLE "$table" ($columnsDdl)""")
@@ -178,37 +172,14 @@ object JdbcHarness {
     case other => throw new UnsupportedOperationException(s"derby type for $other")
   }
 
-  // last dir registered per session — registerViews runs on every gate
-  // build, and each call re-listed Derby's catalog (a DatabaseMetaData
-  // round-trip) plus re-registered every view (same churn as
-  // FederationHarness.setup, r15 FedProbe); skip when unchanged
-  private val registeredA = TrieMap.empty[Int, String]
-  private val registeredB = TrieMap.empty[Int, String]
-
   /** Register `jdbc_<table>` remote views over the Derby database
-    * (idempotent; no-op when this session already has this dir's views). */
-  def registerViews(spark: SparkSession, dir: String): Unit = {
-    val id = graft.SessionKeys.id(spark)
-    if (registeredA.get(id).contains(dir)) return
-    Federation.install(spark)
-    val ex = executor(spark, dir)
-    ex.tableNames.foreach { t =>
-      Federation.registerRemoteTable(spark, s"jdbc_$t", t, ex)
-    }
-    registeredA.put(id, dir)
-  }
+    * (idempotent). */
+  def registerViews(spark: SparkSession, dir: String): Unit =
+    FederationHarness.registerOnce(spark, dir, "jdbc_")(executor(spark, dir))
 
   /** Register `jdbc2_<table>` views over the SECOND Derby instance. */
-  def registerViewsB(spark: SparkSession, dir: String): Unit = {
-    val id = graft.SessionKeys.id(spark)
-    if (registeredB.get(id).contains(dir)) return
-    Federation.install(spark)
-    val ex = executorB(spark, dir)
-    ex.tableNames.foreach { t =>
-      Federation.registerRemoteTable(spark, s"jdbc2_$t", t, ex)
-    }
-    registeredB.put(id, dir)
-  }
+  def registerViewsB(spark: SparkSession, dir: String): Unit =
+    FederationHarness.registerOnce(spark, dir, "jdbc2_")(executorB(spark, dir))
 
   /** Register `jdbc_<table>` remote views over the Derby database and run
     * a SQL query against them. */

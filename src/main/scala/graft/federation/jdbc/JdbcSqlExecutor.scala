@@ -30,7 +30,7 @@ import graft.federation.sql.{RemoteTableRef, SqlDialect, SqlExecutor, UnparseUns
 final class JdbcSqlExecutor(
     override val name: String,
     session: SparkSession,
-    url: String,
+    val url: String,
     override val dialect: SqlDialect,
     override val splitCount: Int = 1,
     connectionProps: Map[String, String] = Map.empty,
@@ -665,7 +665,9 @@ object DerbyDialect extends SqlDialect {
   override def supportsFilterClause: Boolean = false
   override def regexpMatch(input: String, pattern: String): String =
     throw new UnparseUnsupported("derby has no regexp predicate")
-  // no % operator — SQL-standard MOD function only
+  // no % operator — SQL-standard MOD function only. A zero divisor of
+  // `/` or MOD raises 22012 on DOUBLE, DECIMAL, BIGINT and INTEGER
+  // (probed on Derby 10.16), so the default divisionByZeroRaises holds
   override def modulo(left: String, right: String): String =
     s"MOD($left, $right)"
   // probed against embedded Derby 10.16 (see UnparserSpec drift test):

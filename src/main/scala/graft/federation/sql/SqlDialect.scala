@@ -352,11 +352,18 @@ trait SqlDialect {
   def integralDivide(left: String, right: String): String =
     s"($left / $right)"
 
-  /** Whether [[integralDivide]] by zero raises (as Spark's does under
-    * ANSI; SQL's division-by-zero error, Derby) or gives NULL (as Spark's
-    * does without ANSI; DuckDB). None = it depends on the engine's own
+  /** Whether a zero divisor of `/`, [[integralDivide]] or [[modulo]]
+    * raises, for every numeric type (as Spark's does under ANSI; SQL's
+    * division-by-zero error, Derby) or gives NULL (as Spark's does
+    * without ANSI; DuckDB, SQLite). None = it depends on the engine's own
     * settings, so only a non-zero literal divisor is pushed. */
   def divisionByZeroRaises: Option[Boolean] = Some(true)
+
+  /** `divisor` wrapped to raise `errorClass` when it is zero, for an
+    * engine whose zero divisor gives NULL: lets a divisor that may be
+    * zero push under ANSI. None = the engine cannot raise on demand. */
+  def raisingDivisor(divisor: String, errorClass: String): Option[String] =
+    None
 
   /** A cast to `to` that gives NULL where a plain CAST raises — Spark's
     * LEGACY or TRY cast past the target's range. None = the engine has no
@@ -624,11 +631,19 @@ object DuckDbDialect extends SqlDialect {
       s"DECIMAL(${math.min(p + 1, 38)},$s)) AS $dec) END)"
   }
   // `/` on BIGINTs is fractional on DuckDB 1.0 (probed: (7 / 2) * 2 =
-  // 7.0); `//` truncates toward zero (-7 // 2 = -3) and gives NULL for
-  // a zero divisor
+  // 7.0); `//` truncates toward zero (-7 // 2 = -3). A zero divisor gives
+  // NULL for `//`, `/` and `%` on every numeric type (probed on DOUBLE,
+  // DECIMAL and BIGINT)
   override def integralDivide(left: String, right: String): String =
     s"($left // $right)"
   override def divisionByZeroRaises: Option[Boolean] = Some(false)
+  // probed: error() raises where it is reached, and a CASE evaluates a
+  // branch only for the rows that take it, so a zero divisor under a
+  // guard such as `CASE WHEN m > 0 THEN x / m END` does not raise
+  override def raisingDivisor(divisor: String,
+      errorClass: String): Option[String] =
+    Some(s"(CASE $divisor WHEN 0 THEN error('[$errorClass] division by zero') " +
+      s"ELSE $divisor END)")
   // probed: TRY_CAST(CAST(123456.5 AS DECIMAL(20,8)) AS DECIMAL(10,8)) is
   // NULL, as Spark's LEGACY and TRY casts are
   override def tryCast(x: String, to: DataType): Option[String] =
@@ -710,6 +725,9 @@ object SqliteDialect extends SqlDialect {
   override def supportsInlineValues: Boolean = false
   // SQLite has no GROUPING SETS / ROLLUP / CUBE clause
   override def supportsGroupingSets: Boolean = false
+  // a zero divisor gives NULL (probed with SQLite 3: 1/0, 1.5/0.0, 7 % 0
+  // and 7.5 % 0.0 are all NULL)
+  override def divisionByZeroRaises: Option[Boolean] = Some(false)
   override def quote(ident: String): String =
     "\"" + ident.replace("\"", "\"\"") + "\""
   override def typeName(dt: DataType): String = dt match {

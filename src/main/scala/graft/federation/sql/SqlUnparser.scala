@@ -717,6 +717,27 @@ class SqlUnparser(dialect: SqlDialect) {
       else s"CAST(${r(c)} AS ${dialect.typeName(dt)})"
     }
 
+    // a divisor that may be zero is exact only where the engine treats
+    // zero as Spark does in this mode, for every numeric type: ANSI raises
+    // (DIVIDE_BY_ZERO / REMAINDER_BY_ZERO), LEGACY and TRY give NULL. Under
+    // ANSI, an engine whose zero gives NULL may wrap the divisor to raise;
+    // the wrap renders it twice, so it must be deterministic
+    def divisor(op: String, d: Expression, ctx: NumericEvalContext,
+        error: String): String = {
+      val ansi = ctx.evalMode == EvalMode.ANSI
+      def refuse = fail(s"$op by a divisor that may be zero (ANSI $ansi) " +
+        s"on ${dialect.name}")
+      d match {
+        case Literal(v: Decimal, _) if !v.isZero => r(d)
+        case Literal(v: java.lang.Number, _) if v.doubleValue != 0 => r(d)
+        case _ if dialect.divisionByZeroRaises.contains(ansi) => r(d)
+        case _: Literal => refuse
+        case _ if ansi && d.deterministic =>
+          dialect.raisingDivisor(r(d), error).getOrElse(refuse)
+        case _ => refuse
+      }
+    }
+
     e match {
       case a: AttributeReference =>
         scope.getOrElse(a.exprId,
@@ -728,22 +749,14 @@ class SqlUnparser(dialect: SqlDialect) {
       case Add(l, rr, _) => bin(l, "+", rr)
       case Subtract(l, rr, _) => bin(l, "-", rr)
       case Multiply(l, rr, _) => bin(l, "*", rr)
-      case Divide(l, rr, _) => bin(l, "/", rr)
-      // a divisor that may be zero is exact only where the engine treats
-      // zero as Spark does in this mode: ANSI raises, LEGACY gives NULL
+      case Divide(l, rr, ctx) =>
+        s"(${r(l)} / ${divisor("/", rr, ctx, "DIVIDE_BY_ZERO")})"
       case IntegralDivide(l, rr, ctx) =>
         if (Seq(l, rr).exists(_.dataType.isInstanceOf[DecimalType]))
           fail(s"div over ${l.dataType.sql} and ${rr.dataType.sql}")
-        val ansi = ctx.evalMode == EvalMode.ANSI
-        rr match {
-          case Literal(v, _) if v != null && v != 0 =>
-          case _ if !dialect.divisionByZeroRaises.contains(ansi) =>
-            fail(s"div by a divisor that may be zero (ANSI $ansi) on " +
-              dialect.name)
-          case _ =>
-        }
-        dialect.integralDivide(r(l), r(rr))
-      case Remainder(l, rr, _) => dialect.modulo(r(l), r(rr))
+        dialect.integralDivide(r(l), divisor("div", rr, ctx, "DIVIDE_BY_ZERO"))
+      case Remainder(l, rr, ctx) =>
+        dialect.modulo(r(l), divisor("%", rr, ctx, "REMAINDER_BY_ZERO"))
       case UnaryMinus(c, _) => s"(- ${r(c)})"
 
       // comparison / boolean

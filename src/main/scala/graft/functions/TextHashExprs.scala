@@ -296,6 +296,9 @@ object TextHashExprs {
   private def c4LineKeepKernel(s: String, from: Int, to: Int,
       minWords: Int): Boolean = {
     var end = to
+    // spaces only, as DuckDB's rtrim: a line ending ".\r" is not kept,
+    // as the oracle's `regexp_matches(rtrim(l), '[.!?"]$')` is false
+    // there (Java's `$` would match before the final \r)
     while (end > from && s.charAt(end - 1) == ' ') end -= 1
     if (end == from) return false
     val last = s.charAt(end - 1)

@@ -109,23 +109,15 @@ object Classifier {
       .withColumn("keep", col("score_q10") > 0)
   }
 
-  /** Fitted-model cache per (session, dir, labels, dim): the model is a
-    * ≤16 KB array, but TRAINING is a corpus pass — the scoring gate, the
-    * PR-curve gate, and repeated bench iterations must not each re-run
-    * it (the production shape: a model is fitted once per corpus
-    * snapshot and served many times). Release hooks follow the
-    * sigCache/IVF pattern. */
-  private val weightCache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, Seq[String], Int), Array[Long]]
-
+  /** The fitted model per (session, dir, labels, dim), cached in
+    * [[graft.SessionCache]]: the model is a ≤16 KB array, but TRAINING is
+    * a corpus pass — the scoring gate, the PR-curve gate, and repeated
+    * bench iterations must not each re-run it (the production shape: a
+    * model is fitted once per corpus snapshot and served many times). */
   private[graft] def cachedWeights(s: SparkSession, dir: String,
       posSources: Seq[String], dim: Int): Array[Long] =
-    weightCache.getOrElseUpdate(
-      (graft.SessionKeys.id(s), dir, posSources, dim),
+    graft.SessionCache(s, dir, ("classifier.weights", posSources, dim))(
       nbWeights(Tables.documents(s, dir), posSources, dim))
-
-  /** Release every cached fitted model (end-of-run cleanup hook). */
-  def releaseAllWeights(): Unit = weightCache.clear()
 
   /** Gate: train on the curated-vs-crawl split and score every document.
     * One training aggregate (≤`dim` rows out), then a zero-shuffle

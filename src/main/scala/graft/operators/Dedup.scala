@@ -71,35 +71,19 @@ object Dedup {
     PortableHashExprs.portable_minhash(text, NumHashes)
 
   /** Per-document MinHash signatures + LSH band keys (exploded downstream).
-    * Cached once per (session, dir): both sides of the bucket self-join
-    * (and the verify stage) reuse it, and recomputing the signature per
-    * join side would double the dominant cost. At cluster scale this
-    * materialization is a staging table. Keyed caching (instead of
-    * persist-per-call) keeps repeated bench/verify invocations from
-    * accumulating storage memory. */
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
+    * Cached once per (session, dir) in [[graft.SessionCache]]: both sides
+    * of the bucket self-join (and the verify stage) reuse it, and
+    * recomputing the signature per join side would double the dominant
+    * cost. At cluster scale this materialization is a staging table.
+    * Keyed caching (instead of persist-per-call) keeps repeated
+    * bench/verify invocations from accumulating storage memory; a caller
+    * done with a corpus frees it with `SessionCache.release`. */
   private def signatures(s: SparkSession, dir: String): DataFrame =
-    sigCache.getOrElseUpdate((graft.SessionKeys.id(s), dir),
+    graft.SessionCache.persisted(s, dir, "dedup.signatures")(
       documents(s, dir)
         .select(col("doc_id"), minhashSignature(col("text")).as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Release the persisted signature staging table for one corpus. The
-    * keyed cache shares a single materialization across the bucket-join
-    * sides and the verify stage of one pipeline run; callers done with a
-    * corpus release it here — without an evict hook a long-lived session
-    * accumulates storage across every dir it ever deduped. The next call
-    * over the same dir transparently rebuilds. */
-  def releaseSignatures(s: SparkSession, dir: String): Unit =
-    sigCache.remove((graft.SessionKeys.id(s), dir))
-      .foreach(_.unpersist(blocking = false))
-
-  /** Release every cached signature table (end-of-run cleanup). */
-  def releaseAllSignatures(): Unit =
-    sigCache.keys.toSeq.foreach(k =>
-      sigCache.remove(k).foreach(_.unpersist(blocking = false)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
+      Seq(_))
 
   /** Candidate near-dup pairs from LSH banding: docs agreeing on all
     * BandRows minhashes of at least one band (the band key is the raw
@@ -405,31 +389,20 @@ object Dedup {
     * the DuckDB oracle reproduces it with a recursive reachability CTE.
     *
     * The converged label table (two longs per doc) is cached per
-    * (session, dir, threshold) — the [[sigCache]] pattern: cluster labels
-    * are computed once per corpus snapshot and then read by every
-    * downstream consumer ([[canonical]], reports, joins), exactly like a
-    * production staging table; re-running the fixpoint per query would
-    * bill the one-time clustering to every read. [[releaseComponents]]
-    * evicts. */
+    * (session, dir, threshold) in [[graft.SessionCache]], like
+    * [[signatures]]: cluster labels are computed once per corpus snapshot
+    * and then read by every downstream consumer ([[canonical]], reports,
+    * joins), exactly like a production staging table; re-running the
+    * fixpoint per query would bill the one-time clustering to every read.
+    * Evicting it unpersists the labels; [[componentsOf]]'s loop already
+    * unpersisted every intermediate round. */
   def components(s: SparkSession, dir: String,
       threshold: Double = 0.7): DataFrame =
-    componentCache.getOrElseUpdate(
-      (graft.SessionKeys.id(s), dir, threshold),
+    graft.SessionCache.persisted(s, dir, ("dedup.components", threshold))(
       componentsOf(
         documents(s, dir).select(col("doc_id")),
         minhashCandidates(s, dir, threshold)
-          .select(col("a_id"), col("b_id"))))
-
-  private val componentCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, Double), DataFrame]
-
-  /** Evict one corpus' cached label table (next call rebuilds). The
-    * backing persist is released; [[componentsOf]]'s loop already
-    * unpersisted every intermediate round. */
-  def releaseComponents(s: SparkSession, dir: String,
-      threshold: Double = 0.7): Unit =
-    componentCache.remove((graft.SessionKeys.id(s), dir, threshold))
-      .foreach(_.unpersist(blocking = false))
+          .select(col("a_id"), col("b_id"))))(Seq(_))
 
   /** Instrumentation: fixpoint rounds of the most recent [[componentsOf]]
     * run in this JVM — read by [[graft.ScaleStress]] to report the

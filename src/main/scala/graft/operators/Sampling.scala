@@ -408,21 +408,6 @@ object Sampling {
     * combined aggregate over the bigram stream and broadcast back; scoring
     * is a broadcast join + per-doc aggregate (one shuffle on doc_id). No
     * all-pairs work anywhere. */
-  private val dsirCache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, String, Int), DataFrame]
-
-  /** Release the persisted DSIR score table for one corpus/target (the
-    * [[graft.operators.Dedup.releaseSignatures]] contract — next call
-    * transparently rebuilds). */
-  def releaseDsir(s: SparkSession, dir: String): Unit =
-    dsirCache.keys.toSeq
-      .filter(k => k._1 == graft.SessionKeys.id(s) && k._2 == dir)
-      .foreach(k => dsirCache.remove(k).foreach(_.unpersist(blocking = false)))
-
-  /** Release every cached DSIR score table (end-of-run cleanup). */
-  def releaseAllDsir(): Unit =
-    dsirCache.keys.toSeq.foreach(k =>
-      dsirCache.remove(k).foreach(_.unpersist(blocking = false)))
 
   /** The hashed-bigram stream (doc_id, source, bucket) feeding both DSIR
     * passes. */
@@ -462,8 +447,8 @@ object Sampling {
 
   def dsirScore(s: SparkSession, dir: String,
       targetSource: String = "src0", buckets: Int = 256): DataFrame =
-    dsirCache.getOrElseUpdate(
-      (graft.SessionKeys.id(s), dir, targetSource, buckets), {
+    graft.SessionCache.persisted(s, dir,
+      ("sampling.dsir", targetSource, buckets)) {
         val bits = dsirModel(s, dir, targetSource, buckets)
           .select(col("b"), col("bits_raw"), col("bits_tgt"))
         // every gram's bucket exists in the model by construction → inner
@@ -478,7 +463,7 @@ object Sampling {
           .select(col("doc_id"), col("n_grams"),
             expr("shift_sum * 1000000L DIV n_grams").as("score_shift_ppm"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+      }(Seq(_))
 
   /** DSIR selection: keep the top `keepPpm` fraction of scorable docs by
     * (score desc, doc_id) — the deterministic analog of the paper's

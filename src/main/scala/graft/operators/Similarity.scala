@@ -156,29 +156,18 @@ object Similarity {
 
   /** Corpus row count per (session, dir) — sizes the LSH key width. On a
     * real catalog this is table statistics; here it is one metadata-scale
-    * job, cached so repeated `sim_*`/`dedup_embedding` invocations in one
-    * session don't re-run it (same keyed pattern as `Dedup.sigCache`). */
-  private val countCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Long]
-
+    * job, cached in [[graft.SessionCache]] so repeated
+    * `sim_*`/`dedup_embedding` invocations in one session don't re-run
+    * it. */
   private def corpusCount(s: SparkSession, dir: String): Long =
-    countCache.getOrElseUpdate((graft.SessionKeys.id(s), dir), {
+    graft.SessionCache(s, dir, "similarity.count") {
       // tagged so monitoring (and the cache spec) can pin this job
       val sc = s.sparkContext
       val prev = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription("graft-corpus-count")
       try embeddings(s, dir).count()
       finally sc.setJobDescription(prev)
-    })
-
-  /** Drop the cached corpus count for one (session, dir) — pair of the
-    * `Dedup.releaseSignatures` evict hook, for sessions that rewrite the
-    * corpus under the same path. */
-  def releaseCount(s: SparkSession, dir: String): Unit =
-    countCache.remove((graft.SessionKeys.id(s), dir))
-
-  /** Drop every cached corpus count (end-of-run cleanup). */
-  def releaseAllCounts(): Unit = countCache.clear()
+    }
 
   /** Banded-LSH candidate pairs with exact cosine verification: pairs
     * agreeing on at least one band's (key, refinement) bucket. Cost is
@@ -330,41 +319,20 @@ object Similarity {
   }
 
   /** The IVF index — refined centroids + the inverted file (every vector's
-    * cell assignment) — cached per (session, dir, K) and persisted. In
-    * production the index is built ONCE per corpus snapshot and every
-    * query probes it; rebuilding centroids + a full corpus assignment pass
-    * inside each top-k call (as the pre-cache code did) mismeasures the
-    * probe path by the whole build cost. Same keyed TrieMap + evict-hook
-    * pattern as `Dedup.sigCache`. */
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, Int), (DataFrame, DataFrame)]
-
+    * cell assignment) — cached per (session, dir, K) and persisted in
+    * [[graft.SessionCache]]. In production the index is built ONCE per
+    * corpus snapshot and every query probes it; rebuilding centroids + a
+    * full corpus assignment pass inside each top-k call (as the pre-cache
+    * code did) mismeasures the probe path by the whole build cost. */
   private def ivfIndex(s: SparkSession, dir: String,
       kCells: Int): (DataFrame, DataFrame) =
-    ivfCache.getOrElseUpdate((graft.SessionKeys.id(s), dir, kCells), {
+    graft.SessionCache.persisted(s, dir, ("similarity.ivf", kCells)) {
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val cents = ivfCentroids(s, dir, kCells).persist(lvl)
       val assigned =
         assignmentsOf(scoredAgainst(embeddings(s, dir), cents)).persist(lvl)
       (cents, assigned)
-    })
-
-  /** Release the persisted IVF index (centroids + inverted file) for one
-    * corpus — for sessions that rewrite the corpus under the same path.
-    * The next call over the same dir transparently rebuilds. */
-  def releaseIvfIndex(s: SparkSession, dir: String): Unit =
-    ivfCache.keys.toSeq
-      .filter(k => k._1 == graft.SessionKeys.id(s) && k._2 == dir)
-      .foreach(k => ivfCache.remove(k).foreach { case (c, a) =>
-        c.unpersist(blocking = false); a.unpersist(blocking = false)
-      })
-
-  /** Release every cached IVF index (end-of-run cleanup). */
-  def releaseAllIvf(): Unit =
-    ivfCache.keys.toSeq.foreach(k => ivfCache.remove(k).foreach {
-      case (c, a) =>
-        c.unpersist(blocking = false); a.unpersist(blocking = false)
-    })
+    } { case (c, a) => Seq(c, a) }
 
   /** The cached index's centroid table (see [[ivfIndex]]) — for consumers
     * that assign against the index without probing it, e.g. the streaming
@@ -513,27 +481,14 @@ object Similarity {
 
   /** The quantized-codes table — in production, the STORED compressed
     * index (codes are written once per corpus snapshot, queries scan
-    * them) — cached per (session, dir) and persisted, same keyed pattern
-    * as [[ivfIndex]] / `Dedup.sigCache`. */
-  private val codesCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-
+    * them) — cached per (session, dir) and persisted in
+    * [[graft.SessionCache]], like [[ivfIndex]]. */
   private def quantizedCodes(s: SparkSession, dir: String): DataFrame =
-    codesCache.getOrElseUpdate((graft.SessionKeys.id(s), dir),
+    graft.SessionCache.persisted(s, dir, "similarity.codes")(
       embeddings(s, dir)
         .select(col("vec_id"), quantize8(col("embedding")).as("q"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Release the persisted code table for one corpus (pair of
-    * [[releaseIvfIndex]]); the next call transparently rebuilds. */
-  def releaseCodes(s: SparkSession, dir: String): Unit =
-    codesCache.remove((graft.SessionKeys.id(s), dir))
-      .foreach(_.unpersist(blocking = false))
-
-  /** Release every cached code table (end-of-run cleanup). */
-  def releaseAllCodes(): Unit =
-    codesCache.keys.toSeq.foreach(k =>
-      codesCache.remove(k).foreach(_.unpersist(blocking = false)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))(
+      Seq(_))
 
   /** Top-k nearest neighbors under the quantized dot product — the same
     * broadcast-queries / never-shuffle-the-corpus plan as
@@ -838,17 +793,14 @@ object Similarity {
         coalesce(col("mean_vec"), col("seed_vec")).as("cent_vec"))
   }
 
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (DataFrame, DataFrame)]
-
   /** The PQ index: codebooks + the code table (every vector's m nearest
     * sub-centroid ids, exploded as (vec_id, j, code)) — 4 small ints
     * replacing 64 floats, the 64×-compressed layer UNDER the int8
     * quantizer in a production ANN stack. Built once per corpus snapshot
-    * (keyed cache + evict hook, the [[ivfIndex]] pattern). */
+    * (cached in [[graft.SessionCache]], like [[ivfIndex]]). */
   private def pqIndex(s: SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    pqCache.getOrElseUpdate((graft.SessionKeys.id(s), dir), {
+    graft.SessionCache.persisted(s, dir, "similarity.pq") {
       import org.apache.spark.sql.expressions.Window
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val books = pqCodebooks(s, dir).persist(lvl)
@@ -868,21 +820,7 @@ object Similarity {
         .select(col("vec_id"), col("j"), col("cent_id").as("code"))
         .persist(lvl)
       (books, codes)
-    })
-
-  /** Release the cached PQ index for one corpus (next call rebuilds). */
-  def releasePq(s: SparkSession, dir: String): Unit =
-    pqCache.remove((graft.SessionKeys.id(s), dir)).foreach {
-      case (b, c) =>
-        b.unpersist(blocking = false); c.unpersist(blocking = false)
-    }
-
-  /** Release every cached PQ index (end-of-run cleanup). */
-  def releaseAllPq(): Unit =
-    pqCache.keys.toSeq.foreach(k => pqCache.remove(k).foreach {
-      case (b, c) =>
-        b.unpersist(blocking = false); c.unpersist(blocking = false)
-    })
+    } { case (b, c) => Seq(b, c) }
 
   /** PQ top-k via asymmetric distance computation (ADC): each query keeps
     * its FULL-precision subvectors and scores a compressed vector as

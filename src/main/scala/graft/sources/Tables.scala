@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import scala.jdk.CollectionConverters._
-
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * All operators take `(spark, sfDir)` and resolve tables here so the same
@@ -17,66 +15,29 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred parquet schemas, cached per (dir, table): without an
-    * explicit schema every `spark.read.parquet` runs a footer-inference
-    * job before the real query (measured: one job of ~10% of a warm
-    * gate's wall time, per table touched, per invocation — across 221
-    * gates x 3 bench iterations that is thousands of redundant footer
-    * reads). The cache holds METADATA only — the catalog-table schema a
-    * production deployment would resolve from its metastore — so every
-    * query still computes from the parquet data. */
-  private val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.types.StructType]
-
-  /** The reader DataFrame itself is also reused per (session, dir,
-    * table): it is an immutable logical plan (relation + file index),
-    * not data — every query composed on top still scans parquet. This
-    * drops the per-build file-index setup (~40 ms measured) on top of
-    * the inference job the schema cache removes.
+  /** The reader DataFrame per (session, dir, table), cached in
+    * [[graft.SessionCache]]: it is an immutable logical plan (relation +
+    * file index), not data — every query composed on top still scans
+    * parquet. This drops the per-build file-index setup (~40 ms
+    * measured).
     *
-    * Keyed WEAKLY on the session OBJECT (not an identity hash, which
-    * recycles after GC and once handed a later test suite a DataFrame
-    * whose SparkContext was already stopped): a stopped, dereferenced
-    * session's entry is collected with the session, and a live entry can
-    * only ever be served back to the exact session that built it. The
-    * per-session map is still re-validated against `isStopped` so a
-    * caller holding a stopped session never gets a stale plan either. */
-  private val frameCache = new java.util.WeakHashMap[
-    SparkSession,
-    scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
-
+    * Its inferred schema is cached per (dir, table) across sessions:
+    * without an explicit schema every `spark.read.parquet` runs a
+    * footer-inference job before the real query (measured: one job of
+    * ~10% of a warm gate's wall time, per table touched, per invocation —
+    * across 221 gates x 3 bench iterations that is thousands of redundant
+    * footer reads). It holds METADATA only — the catalog-table schema a
+    * production deployment would resolve from its metastore. A corpus
+    * rewritten under the same dir is one `SessionCache.release(dir)`,
+    * which evicts both. */
   private def readCached(spark: SparkSession, dir: String,
-      name: String): DataFrame = {
-    val perSession = frameCache.synchronized {
-      var m = frameCache.get(spark)
-      if (m == null || spark.sparkContext.isStopped) {
-        m = scala.collection.concurrent.TrieMap
-          .empty[(String, String), DataFrame]
-        frameCache.put(spark, m)
-      }
-      m
-    }
-    perSession.getOrElseUpdate((dir, name), {
+      name: String): DataFrame =
+    graft.SessionCache(spark, dir, ("tables.frame", name)) {
       val path = s"$dir/$name.parquet"
-      val schema = schemaCache.getOrElseUpdate((dir, name),
+      val schema = graft.SessionCache.shared(dir, ("tables.schema", name))(
         spark.read.parquet(path).schema)
       spark.read.schema(schema).parquet(path)
-    })
-  }
-
-  /** Evict the cached schema and reader plans for a data directory —
-    * the release hook every other keyed cache in the repo provides
-    * (Similarity.releaseIvfIndex, Dedup.releaseComponents): a corpus
-    * rewritten under the same path must not be served a stale schema or
-    * file index. */
-  def releaseTables(dir: String): Unit = {
-    schemaCache.keys.filter(_._1 == dir).foreach(schemaCache.remove)
-    frameCache.synchronized {
-      frameCache.values.asScala.foreach { m =>
-        m.keys.filter(_._1 == dir).foreach(m.remove)
-      }
     }
-  }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)

@@ -98,8 +98,9 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
       // DuckDB's `/` is fractional: (7 / 2) * 2 came back as 7
       check("SELECT a, (a div 2) * 2 AS q FROM t", Some("// 2)"))
       // under ANSI a column divisor may be zero, where Spark raises and
-      // `//` gives NULL: the quotient stays local
-      check("SELECT a, (a div b) * 2 AS q FROM t WHERE b <> 0", None)
+      // `//` gives NULL: the divisor ships wrapped to raise
+      check("SELECT a, (a div b) * 2 AS q FROM t WHERE b <> 0",
+        Some("error('[DIVIDE_BY_ZERO]"))
       val key = "spark.sql.ansi.enabled"
       spark.conf.set(key, "false")
       try {
@@ -110,6 +111,41 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
           Some("TRY_CAST("))
       } finally spark.conf.unset(key)
     } finally ex.runWrite(Seq("DROP TABLE IF EXISTS div_t"))
+  }
+
+  test("live: `/` and `%` by zero raise under ANSI and give NULL without " +
+      "it, as in Spark, on DOUBLE, DECIMAL and BIGINT") {
+    // DuckDB gives NULL for every zero divisor, so under ANSI a divisor
+    // that may be zero ships wrapped to raise
+    ex.runWrite(Seq("CREATE OR REPLACE TABLE zdiv_t AS SELECT " +
+      "CAST(d AS DOUBLE) AS d, CAST(m AS DECIMAL(10,2)) AS m, " +
+      "CAST(b AS BIGINT) AS b FROM (VALUES (7.5, 7.5, 7), (0.0, 0.0, 0)) " +
+      "v(d, m, b)"))
+    try {
+      Federation.install(spark)
+      Federation.registerRemoteTable(spark, "duck_zdiv_t", "zdiv_t", ex)
+      spark.sql("SELECT * FROM VALUES (7.5D, CAST(7.5 AS DECIMAL(10,2)), " +
+        "7L), (0.0D, CAST(0.0 AS DECIMAL(10,2)), 0L) AS t(d, m, b)")
+        .createOrReplaceTempView("zdiv_local")
+      def run(q: String, table: String): Either[String, Seq[String]] =
+        try Right(rows(spark.sql(q.replace("FROM t", s"FROM $table"))))
+        catch { case e: Exception => Left(e.toString) }
+      val ops = for {
+        c <- Seq("d", "m", "b"); op <- Seq("/", "%")
+      } yield s"SELECT 7 $op $c AS q FROM t"
+      val key = "spark.sql.ansi.enabled"
+      for (ansi <- Seq("true", "false")) {
+        spark.conf.set(key, ansi)
+        try ops.foreach { q =>
+          val got = run(q, "duck_zdiv_t")
+          val want = run(q, "zdiv_local")
+          if (ansi == "true") {
+            assert(got.left.exists(_.contains("_BY_ZERO")), s"$q: $got")
+            assert(want.isLeft, s"$q: $want")
+          } else assert(got == want, q)
+        } finally spark.conf.unset(key)
+      }
+    } finally ex.runWrite(Seq("DROP TABLE IF EXISTS zdiv_t"))
   }
 
   test("live probe: DECIMAL cast rounds like Spark (HALF_UP emulation)") {

@@ -616,6 +616,42 @@ class FederationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .deleteQuietly(new java.io.File(tmp))
   }
 
+  test("mock: `/` and `%` by a column divisor stay local under ANSI and " +
+      "LEGACY, and give the local answer") {
+    setup()
+    // the mock's inner session does not follow this session's runtime
+    // ANSI setting, so a zero divisor is only exact where Spark decides
+    val tmp = java.nio.file.Files.createTempDirectory("fed_zdiv").toString
+    try {
+      spark.sql("SELECT * FROM VALUES (7.5D, 7L, 2L), (1.0D, 9L, 0L) " +
+        "AS t(d, a, b)").write.parquet(s"$tmp/zdiv_t")
+      spark.read.parquet(s"$tmp/zdiv_t").createOrReplaceTempView("zdiv_local")
+      val ex = new graft.federation.sql.SparkSqlExecutor("mockzdiv",
+        spark.newSession(), Map("zdiv_t" -> s"$tmp/zdiv_t"),
+        context = s"mockzdiv@$tmp")
+      graft.federation.Federation.registerRemoteTable(
+        spark, "fed_zdiv_t", "zdiv_t", ex)
+      def run(q: String, table: String): Either[String, Seq[String]] =
+        try Right(spark.sql(q.replace("FROM t", s"FROM $table"))
+          .collect().map(_.toString).sorted.toSeq)
+        catch { case e: Exception => Left(e.getClass.getName) }
+      val key = "spark.sql.ansi.enabled"
+      for (ansi <- Seq("true", "false"); op <- Seq("/", "%");
+           lhs <- Seq("d", "a")) {
+        val q = s"SELECT $lhs $op b AS q FROM t"
+        spark.conf.set(key, ansi)
+        try {
+          val got = run(q, "fed_zdiv_t")
+          val wire = ex.executedSql.synchronized(ex.executedSql.last)
+          assert(!wire.contains(s" $op "), s"$q (ANSI $ansi): $wire")
+          assert(got.isLeft == (ansi == "true"), s"$q (ANSI $ansi): $got")
+          assert(got == run(q, "zdiv_local"), s"$q (ANSI $ansi)")
+        } finally spark.conf.unset(key)
+      }
+    } finally org.apache.commons.io.FileUtils
+      .deleteQuietly(new java.io.File(tmp))
+  }
+
   test("per-table hooks: self-joined table contributes its hooks once") {
     setup()
     val hooks = new graft.federation.sql.TableHooks(

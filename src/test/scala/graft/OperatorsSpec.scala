@@ -166,23 +166,23 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("dedup signature cache releases storage on demand and rebuilds") {
-    operators.Dedup.releaseSignatures(spark, dir)
+    SessionCache.release(dir)
     val base = persistedIds()
     // collect, not count: a count needs no candidate pair (the left join
     // to the pairs drops out), so it never reads the signatures
     operators.Dedup.minhash(spark, dir).collect() // materializes the cache
     val built = persistedIds() -- base
     assert(built.nonEmpty, "signature staging table should be persisted")
-    operators.Dedup.releaseSignatures(spark, dir)
+    SessionCache.release(dir)
     assert((persistedIds() intersect built).isEmpty,
       "release must unpersist the staging table")
     // transparent rebuild after release
     assert(operators.Dedup.minhash(spark, dir).count() > 0)
-    operators.Dedup.releaseSignatures(spark, dir)
+    SessionCache.release(dir)
   }
 
   test("ivf index cache persists once, releases storage on demand, rebuilds") {
-    operators.Similarity.releaseIvfIndex(spark, dir)
+    SessionCache.release(dir)
     val base = persistedIds()
     val first = operators.Similarity.ivfTopK(spark, dir).collect()
     val built = persistedIds() -- base
@@ -194,16 +194,16 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((persistedIds() -- cached).isEmpty,
       "second probe must reuse the cached index, not rebuild it")
     assert(again.toSeq == first.toSeq)
-    operators.Similarity.releaseIvfIndex(spark, dir)
+    SessionCache.release(dir)
     assert((persistedIds() intersect built).isEmpty,
       "release must unpersist the index")
     // transparent rebuild after release
     assert(operators.Similarity.ivfTopK(spark, dir).count() > 0)
-    operators.Similarity.releaseIvfIndex(spark, dir)
+    SessionCache.release(dir)
   }
 
   test("component label cache persists once, releases storage, rebuilds") {
-    operators.Dedup.releaseComponents(spark, dir)
+    SessionCache.release(dir)
     // the signatures the candidate pairs come from are a cache of their
     // own: materialize them first, so the build adds only the labels
     operators.Dedup.minhash(spark, dir).collect()
@@ -217,15 +217,15 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((persistedIds() -- cached).isEmpty,
       "second read must reuse the cached labels, not re-run the fixpoint")
     assert(again.toSeq == first.toSeq)
-    operators.Dedup.releaseComponents(spark, dir)
+    SessionCache.release(dir)
     assert((persistedIds() intersect built).isEmpty,
       "release must unpersist the label table")
     assert(operators.Dedup.components(spark, dir).count() > 0)
-    operators.Dedup.releaseComponents(spark, dir)
+    SessionCache.release(dir)
   }
 
   test("quantized code table caches once, releases, rebuilds") {
-    operators.Similarity.releaseCodes(spark, dir)
+    SessionCache.release(dir)
     val base = persistedIds()
     val first = operators.Similarity.quantizedTopK(spark, dir).collect()
     val built = persistedIds() -- base
@@ -237,15 +237,15 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "rerank must reuse the cached code table")
     assert(operators.Similarity.quantizedTopK(spark, dir)
       .collect().toSeq == first.toSeq)
-    operators.Similarity.releaseCodes(spark, dir)
+    SessionCache.release(dir)
     assert((persistedIds() intersect built).isEmpty,
       "release must unpersist the code table")
     assert(operators.Similarity.quantizedTopK(spark, dir).count() > 0)
-    operators.Similarity.releaseCodes(spark, dir)
+    SessionCache.release(dir)
   }
 
   test("lsh corpus count runs one job per (session, dir)") {
-    operators.Similarity.releaseCount(spark, dir)
+    SessionCache.release(dir)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     // parquet footer reads also run driver jobs; count only the tagged
     // corpus-count job
@@ -1198,7 +1198,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((100L until 110L).forall(dropped.contains),
       s"planted dups not all caught: $dropped")
     assert(dropped.size == 10, s"over-deduped: $dropped")
-    operators.Similarity.releaseIvfIndex(spark, tmp)
+    SessionCache.release(tmp)
   }
 
   test("quality buckets tile each source evenly with ordered score ranges") {
@@ -1858,10 +1858,13 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val vocab = Seq("the", "cat", "lorem", "ipsum", "javascript", "Big",
       "x1", "{", "verboten", "verbotenheit", "wörd", "#", "a")
     val endings = Seq(".", "!", "?", "\"", "", "...", " .", ".extra")
+    // a quarter of the lines end in \r (CRLF text): the screens strip
+    // only spaces, so "… end.\r" is not a kept line
     def line(): String = {
       val n = rnd.nextInt(9)
       Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ") +
-        endings(rnd.nextInt(endings.size)) + (" " * rnd.nextInt(3))
+        endings(rnd.nextInt(endings.size)) + (" " * rnd.nextInt(3)) +
+        (if (rnd.nextInt(4) == 0) "\r" else "")
     }
     def page(): String =
       Seq.fill(rnd.nextInt(7))(line()).mkString("\n")
@@ -2112,10 +2115,14 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val b = (10L to 15L).map(i => doc(i, 2 + i.toInt % 4))
     writeOne(a, "documents.parquet")
     writeOne(b, "documents2.parquet")
-    // file source processes oldest-first: A is one microbatch, then B
-    Files.setLastModifiedTime(Paths.get(tmp, "documents.parquet"),
-      java.nio.file.attribute.FileTime
-        .fromMillis(System.currentTimeMillis - 60000))
+    // file source processes oldest-first: A is one microbatch, then B.
+    // Both mtimes come from one clock read, so the order does not hang
+    // on how long the writes took
+    val now = System.currentTimeMillis
+    Seq("documents.parquet" -> 60000L, "documents2.parquet" -> 0L).foreach {
+      case (name, ageMs) => Files.setLastModifiedTime(Paths.get(tmp, name),
+        java.nio.file.attribute.FileTime.fromMillis(now - ageMs))
+    }
     val sdf = graft.streaming.StreamOps.packingStream(spark, tmp,
       seqLen = 8, nShards = 2, glob = "documents*.parquet",
       maxFilesPerTrigger = Some(1))
@@ -2162,6 +2169,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def ev(id: Long, t: String, u: Long, ty: String)
         : (Long, Timestamp, Long, String, Double, String) =
       (id, ts(t), u, ty, 1.0, "{}")
+    // every mtime is derived from one clock read: a clock read per file
+    // would make the order depend on how long the parquet writes take
+    val now = System.currentTimeMillis
     def writeOne(evs: Seq[(Long, Timestamp, Long, String, Double, String)],
         name: String, ageMs: Long): Unit = {
       val scratch = Files.createTempDirectory("sbdw").toString
@@ -2173,7 +2183,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
         StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(Paths.get(tmp, name),
         java.nio.file.attribute.FileTime
-          .fromMillis(System.currentTimeMillis - ageMs))
+          .fromMillis(now - ageMs))
     }
     // batch A: 5 distinct keys, one repeated in-batch (dropped exactly);
     // batch B advances the watermark past A's horizon; batch C's commit
@@ -2223,6 +2233,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def ev(id: Long, t: String, u: Long)
         : (Long, Timestamp, Long, String, Double, String) =
       (id, ts(t), u, "x", 1.0, "{}")
+    // every mtime is derived from one clock read: a clock read per file
+    // would make the order depend on how long the parquet writes take
+    val now = System.currentTimeMillis
     def writeOne(evs: Seq[(Long, Timestamp, Long, String, Double, String)],
         name: String, ageMs: Long): Unit = {
       val scratch = Files.createTempDirectory("sswinw").toString
@@ -2234,7 +2247,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
         StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(Paths.get(tmp, name),
         java.nio.file.attribute.FileTime
-          .fromMillis(System.currentTimeMillis - ageMs))
+          .fromMillis(now - ageMs))
     }
     // batch A: user 1 events 10:00 + 10:10 (one open session), user 2 at
     // 10:00; batch B: user 1 at 10:30 — within the 30-min gap of 10:10,
@@ -2374,7 +2387,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lsh = operators.Dedup.minhashCandidates(spark, tmp, 0.7).collect()
     assert(!lsh.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L),
       "LSH unexpectedly paired the excerpt")
-    operators.Dedup.releaseSignatures(spark, tmp)
+    SessionCache.release(tmp)
   }
 
   test("priority keep: every cluster keeps its best-source member exactly once") {

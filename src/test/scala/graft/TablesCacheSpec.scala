@@ -9,10 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * r14 keyed the cache on `System.identityHashCode(session)`: identity
   * hashes recycle after GC, so a later suite could be handed a DataFrame
   * whose SparkContext was already stopped (`assertNotStopped` /
-  * NPE in CreateViewCommand — VERIFY_r14 tests_ok:false). The cache is now
-  * weak-keyed on the session object and re-validated against `isStopped`;
-  * these tests pin the stop/rebuild cycle and the corpus-rewrite release
-  * hook (ADVICE r14).
+  * NPE in CreateViewCommand — VERIFY_r14 tests_ok:false). The cache now
+  * lives in [[graft.SessionCache]], keyed on the session object; these
+  * tests pin the stop/rebuild cycle and the corpus-rewrite release
+  * (ADVICE r14).
   */
 class TablesCacheSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
@@ -51,7 +51,7 @@ class TablesCacheSpec extends AnyFunSuite {
       assert(sources.Tables.table(s, tmp, "region").columns.toSeq == Seq("a"))
       s.range(4).selectExpr("cast(id as int) as a", "id as b")
         .write.mode("overwrite").parquet(p)
-      sources.Tables.releaseTables(tmp)
+      SessionCache.release(tmp)
       val df = sources.Tables.table(s, tmp, "region")
       assert(df.columns.toSeq == Seq("a", "b"), "stale schema served")
       assert(df.count() == 4)

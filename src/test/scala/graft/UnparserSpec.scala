@@ -441,12 +441,14 @@ class UnparserSpec extends AnyFunSuite {
     assert(in(DerbyDialect, div(x, Literal(2L), EvalMode.ANSI)).contains(
       "SELECT (\"t1\".\"a\" / 2) AS \"q\" FROM \"r\" AS \"t1\""))
     // a divisor that may be zero: Spark raises under ANSI and gives NULL
-    // without it. DuckDB's `//` gives NULL, Derby's `/` raises, and the
-    // mock follows its own session's setting, so only a matching engine
-    // takes it
+    // without it. DuckDB's `//` gives NULL (under ANSI its divisor is
+    // wrapped to raise), Derby's `/` raises, and the mock follows its own
+    // session's setting, so only a matching engine takes it
     assert(in(DuckDbDialect, div(x, y, EvalMode.LEGACY)).contains(
       "SELECT (t1.a // t1.b) AS q FROM r AS t1"))
-    assert(in(DuckDbDialect, div(x, y, EvalMode.ANSI)).isEmpty)
+    assert(in(DuckDbDialect, div(x, y, EvalMode.ANSI)).contains(
+      "SELECT (t1.a // (CASE t1.b WHEN 0 THEN error('[DIVIDE_BY_ZERO] " +
+        "division by zero') ELSE t1.b END)) AS q FROM r AS t1"))
     assert(in(DuckDbDialect, div(x, Literal(0L), EvalMode.ANSI)).isEmpty)
     assert(in(DerbyDialect, div(x, y, EvalMode.ANSI)).nonEmpty)
     assert(in(DerbyDialect, div(x, y, EvalMode.LEGACY)).isEmpty)
@@ -456,6 +458,49 @@ class UnparserSpec extends AnyFunSuite {
     Seq(DuckDbDialect, SparkDialect, DerbyDialect).foreach { dl =>
       assert(in(dl, div(d, Literal(Decimal(2), DecimalType(10, 2)),
         EvalMode.LEGACY)).isEmpty, dl.name)
+    }
+  }
+
+  test("`/` and `%` push a divisor that may be zero only where the " +
+      "engine treats zero as Spark does in the mode") {
+    val r = rel("r", "x" -> DoubleType, "y" -> DoubleType,
+      "d" -> DecimalType(10, 2), "e" -> DecimalType(10, 2))
+    val Seq(x, y, d, e) = r.output
+    def in(dl: SqlDialect, op: (Expression, Expression, EvalMode.Value) =>
+        Expression, l: Expression, rr: Expression, mode: EvalMode.Value) =
+      SqlUnparser.tryUnparse(Project(Seq(Alias(op(l, rr, mode), "q")()), r),
+        dl)
+    val div = (l: Expression, rr: Expression, m: EvalMode.Value) =>
+      Divide(l, rr, NumericEvalContext(m))
+    val rem = (l: Expression, rr: Expression, m: EvalMode.Value) =>
+      Remainder(l, rr, NumericEvalContext(m))
+    def dec(v: Int) = Literal(Decimal(v), DecimalType(10, 2))
+    for (op <- Seq(div, rem); (l, rr, zero, two) <- Seq(
+        (x, y, Literal(0.0), Literal(2.0)), (d, e, dec(0), dec(2)))) {
+      // a non-zero literal divisor is exact on every engine, in every mode
+      Seq(DuckDbDialect, DerbyDialect, SparkDialect, SqliteDialect)
+        .foreach { dl =>
+          assert(in(dl, op, l, two, EvalMode.ANSI).nonEmpty, dl.name)
+        }
+      // DuckDB and SQLite give NULL for a zero divisor, as LEGACY and TRY
+      // do; under ANSI DuckDB wraps the divisor to raise, SQLite cannot.
+      // Derby raises, as ANSI does; the mock follows its own session
+      Seq(DuckDbDialect, SqliteDialect).foreach { dl =>
+        assert(in(dl, op, l, rr, EvalMode.LEGACY).nonEmpty, dl.name)
+        assert(in(dl, op, l, rr, EvalMode.TRY).nonEmpty, dl.name)
+        assert(in(dl, op, l, zero, EvalMode.ANSI).isEmpty, dl.name)
+      }
+      assert(in(SqliteDialect, op, l, rr, EvalMode.ANSI).isEmpty)
+      val raising = in(DuckDbDialect, op, l, rr, EvalMode.ANSI)
+      assert(raising.exists(_.contains(s"(CASE t1.${rr.asInstanceOf[
+        AttributeReference].name} WHEN 0 THEN error('[")), raising)
+      assert(in(DuckDbDialect, op, l, Rand(Literal(1L)), EvalMode.ANSI)
+        .isEmpty, "a nondeterministic divisor renders twice")
+      assert(in(DerbyDialect, op, l, rr, EvalMode.ANSI).nonEmpty)
+      assert(in(DerbyDialect, op, l, rr, EvalMode.LEGACY).isEmpty)
+      assert(in(DerbyDialect, op, l, zero, EvalMode.LEGACY).isEmpty)
+      assert(in(SparkDialect, op, l, rr, EvalMode.ANSI).isEmpty)
+      assert(in(SparkDialect, op, l, rr, EvalMode.LEGACY).isEmpty)
     }
   }
 
