@@ -15,9 +15,9 @@ import graft.federation.FederationHarness
   * is also the production bulk path for this engine.
   *
   * The executor is split-capable: a splittable fragment fans out to
-  * [[Splits]] subprocesses each opening the file read-only (DuckDB
-  * permits unlimited concurrent read-only opens — the file plays the
-  * role a sharded remote plays for JDBC).
+  * [[Splits]] subprocesses each reading the file through its own
+  * read-only connection (DuckDB permits unlimited concurrent read-only
+  * opens — the file plays the role a sharded remote plays for JDBC).
   */
 object DuckDbHarness {
 
@@ -49,10 +49,11 @@ object DuckDbHarness {
       java.nio.file.Files.createDirectories(root)
       val db = root.resolve(
         s"${file}_${Math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}.duckdb")
-      java.nio.file.Files.deleteIfExists(db)
       db.toFile.deleteOnExit()
       val path = db.toAbsolutePath.toString
-      DuckDbProcess.exec(path, tables.map { t =>
+      // a new session over the same dir rebuilds the same file: delete
+      // and load under its write fence, so no warm worker serves the old
+      DuckDbProcess.recreate(path, tables.map { t =>
         s"""CREATE TABLE "$t" AS SELECT * FROM read_parquet('$dir/$t.parquet')"""
       })
       new DuckDbSqlExecutor(name, spark, path, splitCount = Splits)

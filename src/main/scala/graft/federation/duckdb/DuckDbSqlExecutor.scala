@@ -1,6 +1,8 @@
 package graft.federation.duckdb
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ConcurrentHashMap, Semaphore, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
 
 import scala.jdk.CollectionConverters._
 
@@ -26,17 +28,25 @@ import graft.federation.sql.{RemoteCancel, RemoteTableRef, SchemaCoercion, Schem
   *
   * Execution model mirrors [[graft.federation.jdbc.JdbcSqlExecutor]]:
   * a split scan, or a scan under other operators, fetches its rows inside
-  * `RDD.compute`, where each task borrows its own subprocess opening the
-  * database file READ-ONLY — DuckDB permits any number of concurrent
-  * read-only processes on one file, so split scans fan out to n parallel
-  * engine cursors exactly like n JDBC connections. A single-cursor scan
-  * at the root of a collected plan, and every planning probe, reads on
-  * the calling driver thread through [[queryRows]] instead: one round
-  * trip with no Spark job around it.
+  * `RDD.compute`, where each task borrows its own pooled subprocess. Each
+  * subprocess keeps a READ-ONLY connection to the last database file it
+  * read open between requests, so a read pays for its query, not for
+  * opening the database and warming its buffer pool.
+  * DuckDB permits any number of concurrent read-only processes on one
+  * file, so split scans fan out to n parallel engine cursors exactly like
+  * n JDBC connections. A single-cursor scan at the root of a collected
+  * plan, and every planning probe, reads on the calling driver thread
+  * through [[queryRows]] instead: one round trip with no Spark job around
+  * it.
   * On a cluster this requires the database file on shared storage and
   * python+duckdb+pyarrow on executors, the same deployment contract as a
   * JDBC driver jar. Writes (DDL/DML/bulk ingest) take the single-writer
-  * lock and therefore run driver-side, one statement batch per request.
+  * lock and therefore run driver-side, one statement batch per request,
+  * behind the file's write fence in [[DuckDbProcess]]: a write waits for
+  * the reads in flight and has the idle warm connections to the file
+  * closed first, so every later read reopens the file and sees it. A
+  * process outside this JVM that writes the file meets those held
+  * read locks.
   *
   * Results cross the boundary as ONE Arrow IPC stream per query (see
   * [[DuckDbProcess]] for the framing), read into Spark's
@@ -323,9 +333,9 @@ final class DuckDbSqlExecutor(
     * the JDBC path's is impossible by design, and parquet staging is the
     * engine's own recommended bulk path. With an epoch, the fence row
     * rides the SAME engine transaction as the bulk ingest (`BEGIN …
-    * COMMIT` through one connection of the request loop; a failure
-    * mid-list surfaces as the request error and the open transaction
-    * rolls back on the per-request connection close). */
+    * COMMIT` through the one write connection of an `exec` request; a
+    * failure mid-list surfaces as the request error and the open
+    * transaction rolls back when that connection closes). */
   override protected def ingest(ref: RemoteTableRef,
       df: org.apache.spark.sql.DataFrame, epoch: Option[Long]): Unit = {
     val schema = targetSchema(ref, df)
@@ -458,8 +468,9 @@ final class DuckDbSqlExecutor(
   *
   *  - `{` — JSON control lines: the metadata line of `describe`
   *    (`{"cols":…}`), `tables` (`{"tables":…}`) or `exec`
-  *    (`{"counts":…}`), then the terminator `{"ok":n}`; a failed request
-  *    is the single line `{"err":…}`.
+  *    (`{"counts":…}`), then the terminator `{"ok":n}`; `release`
+  *    (close the warm read connection) answers with the terminator alone;
+  *    a failed request is the single line `{"err":…}`.
   *  - `0xFF` — the `query` body: one Arrow IPC stream (schema, record
   *    batches of [[BatchRows]] rows, end-of-stream marker; every IPC
   *    message opens with the `0xFFFFFFFF` continuation marker), then the
@@ -503,13 +514,20 @@ object DuckDbProcess {
   /** The entire engine adapter, shipped as `python3 -c <script>` — a
     * PERSISTENT request loop (one JSON request line in → one response
     * out, flushed per request), so the python + duckdb + pyarrow import
-    * is paid once per pooled server, not once per query. Each request
-    * opens and CLOSES its own connection — no file lock survives between
-    * requests, so a pooled server never blocks a writer. A request-level
-    * failure emits an `err` terminator and the loop keeps serving; only
-    * EOF on stdin (or a crash) ends the process. */
+    * is paid once per pooled server, not once per query. Reads keep ONE
+    * read-only connection open across requests, to the last file read,
+    * so a pushed query meets a warm buffer pool and pays no connect.
+    * Per-connection settings are made at the connect; a request's own
+    * `threads` cap is set, or reset, on each request. That open
+    * connection holds DuckDB's shared file lock between requests, so
+    * writes go through the JVM's per-file [[Fence]]: the `release` op
+    * closes the warm connection, and `exec` closes it too before it opens
+    * the file read-write, then closes its write connection before its
+    * terminator. A request-level failure emits an `err` terminator, drops
+    * the warm connection and the loop keeps serving; only EOF on stdin
+    * (or a crash) ends the process. */
   private val Script = s"BATCH_ROWS = $BatchRows\n" +
-    """import sys, json, time
+    """import sys, json
       |import duckdb
       |import pyarrow as pa
       |import pyarrow.ipc
@@ -565,108 +583,119 @@ object DuckDbProcess {
       |    if not any(needs(c.type) for c in b.columns): return b
       |    return pa.RecordBatch.from_arrays([norm(c) for c in b.columns],
       |                                      names=b.schema.names)
+      |def connect(db, read_only):
+      |    c = duckdb.connect(db, read_only=read_only)
+      |    # the progress bar writes "nnn%..." lines to STDOUT once a query
+      |    # runs past its trigger (~2s — first seen on a 15M-row quantile
+      |    # probe in the r10 boundary stress), corrupting the framing;
+      |    # stdout belongs to the protocol
+      |    try: c.execute("SET enable_progress_bar = false")
+      |    except Exception: pass
+      |    return c
+      |# the warm read-only connection: kept open across requests, so its
+      |# buffer pool stays warm; its file, and the threads cap the last
+      |# request left on it (0: the engine default)
+      |con = con_db = None
+      |con_threads = 0
+      |def drop():
+      |    global con, con_db
+      |    if con is not None:
+      |        try: con.close()
+      |        except Exception: pass
+      |    con = con_db = None
       |while True:
       |    req_line = sys.stdin.readline()
       |    if not req_line: break
-      |    con = None
       |    term = None
       |    try:
       |        req = json.loads(req_line)
-      |        # cross-process locking is single-writer XOR multi-reader;
-      |        # a live workload overlaps them (a streaming source polls
-      |        # the table while a writer ingests), so lock conflicts are
-      |        # TRANSIENT — connections live only for one request. Retry
-      |        # the connect with a bound instead of failing the request.
-      |        deadline = time.monotonic() + 30.0
-      |        while True:
-      |            try:
-      |                con = duckdb.connect(req["db"],
-      |                                     read_only=req.get("ro", True))
-      |                break
-      |            except Exception as ce:
-      |                if ("lock" not in str(ce).lower()
-      |                        or time.monotonic() > deadline):
-      |                    raise
-      |                time.sleep(0.05)
-      |        # the progress bar writes "nnn%..." lines to STDOUT once a
-      |        # query runs past its trigger (~2s — first seen on a 15M-row
-      |        # quantile probe in the r10 boundary stress), corrupting the
-      |        # framing; stdout belongs to the protocol
-      |        try: con.execute("SET enable_progress_bar = false")
-      |        except Exception: pass
       |        op = req["op"]
-      |        # split cursors ask for a fair thread share (see
-      |        # executeSplit) so n concurrent instances parallelize
-      |        # instead of oversubscribing n*cores threads
-      |        th = req.get("threads")
-      |        if th:
-      |            try: con.execute("SET threads TO %d" % int(th))
-      |            except Exception: pass
-      |        if op == "query":
-      |            rel = con.sql(req["sql"])
-      |            if rel is None:
-      |                rdr = pa.RecordBatchReader.from_batches(pa.schema([]), [])
-      |            else:
-      |                for c, t in zip(rel.columns, rel.types):
-      |                    if zoned_time(t):
-      |                        raise ValueError(
-      |                            "TIME WITH TIME ZONE cannot cross the Arrow "
-      |                            "wire without losing its UTC offset (column "
-      |                            "%r of type %s); cast it to VARCHAR in the "
-      |                            "query" % (c, t))
-      |                rdr = rel.fetch_arrow_reader(BATCH_ROWS)
-      |            # the stream's schema is the normalised form of an empty
-      |            # batch, so a zero-row result carries it too
-      |            schema = norm_batch(pa.RecordBatch.from_arrays(
-      |                [pa.array([], f.type) for f in rdr.schema],
-      |                schema=rdr.schema)).schema
-      |            w = pa.ipc.new_stream(out, schema)
-      |            n = 0
-      |            try:
-      |                for b in rdr:
-      |                    w.write_batch(norm_batch(b))
-      |                    n += b.num_rows
-      |            finally:
-      |                w.close()
-      |            term = {"ok": n}
-      |        elif op == "describe":
-      |            rows = con.execute("DESCRIBE " + req["sql"]).fetchall()
-      |            line({"cols": [[r[0], r[1]] for r in rows]})
-      |            term = {"ok": len(rows)}
-      |        elif op == "tables":
-      |            rows = con.execute(
-      |                "SELECT table_name FROM information_schema.tables "
-      |                "WHERE table_schema = 'main' ORDER BY table_name"
-      |            ).fetchall()
-      |            line({"tables": [r[0] for r in rows]})
-      |            term = {"ok": len(rows)}
+      |        if op == "release":
+      |            # a write of con_db is about to run: DuckDB locks a file
+      |            # single-writer XOR multi-reader across processes
+      |            drop()
+      |            term = {"ok": 0}
       |        elif op == "exec":
-      |            counts = []
-      |            for s in req["sqls"]:
-      |                cur = con.execute(s)
-      |                try:
-      |                    rows = cur.fetchall()
-      |                    counts.append(rows[0][0] if rows and
-      |                        isinstance(rows[0][0], int) else -1)
-      |                except Exception:
-      |                    counts.append(-1)
-      |            con.commit()
+      |            drop()
+      |            w = connect(req["db"], False)
+      |            try:
+      |                counts = []
+      |                for s in req["sqls"]:
+      |                    cur = w.execute(s)
+      |                    try:
+      |                        rows = cur.fetchall()
+      |                        counts.append(rows[0][0] if rows and
+      |                            isinstance(rows[0][0], int) else -1)
+      |                    except Exception:
+      |                        counts.append(-1)
+      |                w.commit()
+      |            finally:
+      |                # close BEFORE the terminator: the client takes it as
+      |                # "write done" and lets the reads of the file in
+      |                w.close()
       |            line({"counts": counts})
       |            term = {"ok": len(counts)}
       |        else:
-      |            raise ValueError("unknown op: " + op)
+      |            if con_db != req["db"]:
+      |                drop()
+      |                con = connect(req["db"], True)
+      |                con_db = req["db"]
+      |                con_threads = 0
+      |            # split cursors ask for a fair thread share (see
+      |            # executeSplit) so n concurrent instances parallelize
+      |            # instead of oversubscribing n*cores threads; the cap is
+      |            # the request's, so a request without one resets it
+      |            th = int(req.get("threads", 0))
+      |            if th != con_threads:
+      |                con.execute("SET threads TO %d" % th if th
+      |                            else "RESET threads")
+      |                con_threads = th
+      |            if op == "query":
+      |                rel = con.sql(req["sql"])
+      |                if rel is None:
+      |                    rdr = pa.RecordBatchReader.from_batches(pa.schema([]), [])
+      |                else:
+      |                    for c, t in zip(rel.columns, rel.types):
+      |                        if zoned_time(t):
+      |                            raise ValueError(
+      |                                "TIME WITH TIME ZONE cannot cross the Arrow "
+      |                                "wire without losing its UTC offset (column "
+      |                                "%r of type %s); cast it to VARCHAR in the "
+      |                                "query" % (c, t))
+      |                    rdr = rel.fetch_arrow_reader(BATCH_ROWS)
+      |                # the stream's schema is the normalised form of an
+      |                # empty batch, so a zero-row result carries it too
+      |                schema = norm_batch(pa.RecordBatch.from_arrays(
+      |                    [pa.array([], f.type) for f in rdr.schema],
+      |                    schema=rdr.schema)).schema
+      |                w = pa.ipc.new_stream(out, schema)
+      |                n = 0
+      |                try:
+      |                    for b in rdr:
+      |                        w.write_batch(norm_batch(b))
+      |                        n += b.num_rows
+      |                finally:
+      |                    w.close()
+      |                term = {"ok": n}
+      |            elif op == "describe":
+      |                rows = con.execute("DESCRIBE " + req["sql"]).fetchall()
+      |                line({"cols": [[r[0], r[1]] for r in rows]})
+      |                term = {"ok": len(rows)}
+      |            elif op == "tables":
+      |                rows = con.execute(
+      |                    "SELECT table_name FROM information_schema.tables "
+      |                    "WHERE table_schema = 'main' ORDER BY table_name"
+      |                ).fetchall()
+      |                line({"tables": [r[0] for r in rows]})
+      |                term = {"ok": len(rows)}
+      |            else:
+      |                raise ValueError("unknown op: " + op)
       |    except Exception as e:
+      |        # the next read after a failure starts on a clean connection
+      |        drop()
       |        term = {"err": "%s: %s" % (type(e).__name__, e)}
-      |    finally:
-      |        # close BEFORE the terminator: the client takes the
-      |        # terminator as "request done" and may immediately send a
-      |        # conflicting (e.g. exclusive-write) request to ANOTHER
-      |        # pooled server — the file lock must already be gone
-      |        try:
-      |            if con is not None: con.close()
-      |        except Exception: pass
-      |        line(term)
-      |        out.flush()
+      |    line(term)
+      |    out.flush()
       |""".stripMargin
 
   private val mapper = new ObjectMapper()
@@ -681,6 +710,16 @@ object DuckDbProcess {
   private final class Server(val proc: Process) {
     /** Set when the server goes back to the pool: it has waited idle. */
     @volatile var idled = false
+    /** The file whose read-only connection the server keeps open between
+      * requests (set when a read is sent to it), or null. */
+    @volatile var held: String = null
+    /** The fence permits the current request holds. They go back at the
+      * request's terminator, or when the process exits, whichever comes
+      * first: a dead worker's file lock dies with it. */
+    private val holds = new AtomicReference[List[Fence]](Nil)
+    private val exited = proc.onExit()
+    exited.thenRun(() => endRequest())
+
     val writer = new java.io.OutputStreamWriter(proc.getOutputStream,
       StandardCharsets.UTF_8)
     val in = new java.io.BufferedInputStream(proc.getInputStream, 1 << 16)
@@ -701,6 +740,32 @@ object DuckDbProcess {
     errThread.start()
     def errText(): String = errBuf.synchronized { errBuf.toString.trim }
     def destroy(): Unit = { proc.destroyForcibly(); () }
+
+    /** The current request holds `fences` until it ends. */
+    def begin(fences: List[Fence]): Unit = {
+      holds.set(fences)
+      // an exit already seen has run its endRequest before the set
+      if (exited.isDone) endRequest()
+    }
+
+    /** Take the current request's permits off the server (it is about to
+      * go back to the pool, where another request may borrow it). */
+    def takeHolds(): List[Fence] = holds.getAndSet(Nil)
+
+    /** Give back the current request's permits (at most once). */
+    def endRequest(): Unit = takeHolds().foreach(_.unread())
+
+    /** Wait, within the fence bound, until the process is gone. */
+    def awaitExit(): Unit =
+      try { exited.get(FenceWaitSeconds, TimeUnit.SECONDS); () }
+      catch {
+        case _: java.util.concurrent.TimeoutException => ()
+        case _: InterruptedException => Thread.currentThread().interrupt()
+      }
+
+    def send(line: String): Unit = {
+      writer.write(line); writer.write("\n"); writer.flush()
+    }
 
     /** The process ended mid-response: never reusable. */
     def died(): Nothing = {
@@ -755,51 +820,133 @@ object DuckDbProcess {
     }
   }
 
-  /** Idle-server pool (the `db` rides in each request, so servers are
-    * database-agnostic and one pool serves every executor/harness).
-    * Borrowing skips dead servers; returning past the cap destroys. A
-    * server goes back to the pool ONLY at a request boundary (terminator
-    * consumed) — an early close mid-stream (task cancellation) kills the
-    * process instead, because an undrained stream would corrupt the next
-    * request. */
-  private val PoolCap = 8
-  private val pool =
-    new java.util.concurrent.ArrayBlockingQueue[Server](PoolCap)
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    var s = pool.poll()
-    while (s != null) { s.destroy(); s = pool.poll() }
-  }))
+  /** How long a request waits at its file's [[Fence]], in seconds. */
+  private val FenceWaitSeconds = 30L
 
-  private def borrow(): Server = {
-    var s = pool.poll()
-    while (s != null && !s.proc.isAlive) { s.destroy(); s = pool.poll() }
-    if (s == null) spawn() else s
+  /** Permits per fence: a read takes one, a write all of them. */
+  private val FencePermits = 1 << 20
+
+  /** The read/write fence of one database file. A pooled server keeps a
+    * read-only connection open between requests, and DuckDB locks a file
+    * single-writer XOR multi-reader across processes, so every request of
+    * this JVM orders itself here. A read holds one permit from its request
+    * to its terminator (or its worker's exit). A write takes all of them,
+    * so it waits for the reads in flight, then has every idle server that
+    * holds the file close it ([[releaseIdle]]) before it runs; the next
+    * read reopens the file and sees the write. The fence is keyed on the
+    * path, not on an executor, because the pool serves every executor.
+    * Non-fair, like the file lock: a read never queues behind a waiting
+    * write, so a thread's second read of a file cannot wait on a write
+    * that waits for its first. A wait that cannot finish (a thread writing
+    * a file it still streams) fails after [[FenceWaitSeconds]]. */
+  private final class Fence(path: String) {
+    private val permits = new Semaphore(FencePermits)
+    def read(): Unit = take(1, "read", "the write in progress")
+    def tryRead(): Boolean = permits.tryAcquire()
+    def unread(): Unit = permits.release()
+    def write(): Unit = take(FencePermits, "write", "the reads in flight " +
+      "(a thread that writes a file while it still reads it never gets in)")
+    def unwrite(): Unit = permits.release(FencePermits)
+    private def take(n: Int, what: String, waitedFor: String): Unit = {
+      val got =
+        try permits.tryAcquire(n, FenceWaitSeconds, TimeUnit.SECONDS)
+        catch {
+          case _: InterruptedException =>
+            // a cancelled caller: keep its interrupt visible
+            Thread.currentThread().interrupt()
+            throw new IllegalStateException(
+              s"duckdb file fence on $path: a $what was interrupted")
+        }
+      if (!got)
+        throw new IllegalStateException(
+          s"duckdb file fence on $path: a $what waited $FenceWaitSeconds s " +
+            s"for $waitedFor")
+    }
   }
+
+  private val fences = new ConcurrentHashMap[String, Fence]
+
+  /** The file's fence; `db` is already a [[key]]. */
+  private def fence(db: String): Fence = fences.computeIfAbsent(db, new Fence(_))
+
+  /** One name per file: the fence and the servers' `held` compare it. */
+  private def key(db: String): String =
+    java.nio.file.Paths.get(db).toAbsolutePath.normalize.toString
+
+  /** Idle-server pool, the most recently returned last (the `db` rides in
+    * each request, so one pool serves every executor/harness). A read
+    * borrows a server that holds its file when there is one, so it finds
+    * the connection warm. Borrowing skips dead servers; returning past the
+    * cap destroys. A server goes back to the pool ONLY at a request
+    * boundary (terminator consumed) — an early close mid-stream (task
+    * cancellation) kills the process instead, because an undrained stream
+    * would corrupt the next request. */
+  private val PoolCap = 8
+  private val idle = new java.util.ArrayDeque[Server](PoolCap)
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    idle.synchronized(idle.asScala.foreach(_.destroy()))))
+
+  /** An idle server for a request on `db`, and the fence permits it comes
+    * with. A read prefers a server holding `db`, then one holding nothing;
+    * a write takes one holding nothing (every holder of `db` has just been
+    * released). A server holding another file is taken only with a read
+    * permit of that file, kept to the request's end: it closes that file
+    * when the request arrives, and no write of the file may run before. */
+  private def borrow(db: String, read: Boolean): Option[(Server, List[Fence])] =
+    idle.synchronized {
+      idle.removeIf { s => val dead = !s.proc.isAlive; if (dead) s.destroy(); dead }
+      val recent = idle.asScala.toList.reverse
+      val pick = recent.find(s => read && s.held == db)
+        .orElse(recent.find(_.held == null))
+        .map((_, List.empty[Fence]))
+        .orElse(recent.iterator.map(s => (s, fence(s.held)))
+          .collectFirst { case (s, f) if f.tryRead() => (s, List(f)) })
+      pick.foreach(p => idle.remove(p._1))
+      pick
+    }
 
   private def spawn(): Server =
     new Server(new ProcessBuilder("python3", "-c", Script).start())
 
   private def release(s: Server): Unit = {
     s.idled = true
-    if (!s.proc.isAlive || !pool.offer(s)) s.destroy()
+    val h = s.takeHolds()
+    val pooled = s.proc.isAlive && idle.synchronized {
+      idle.size < PoolCap && { idle.addLast(s); true }
+    }
+    // pooled first, then the permits: a write that gets them finds the
+    // server in the pool and releases its file
+    if (pooled) h.foreach(_.unread())
+    else { s.begin(h); s.destroy() }
   }
 
-  private def request(db: String, ro: Boolean, op: String,
-      extra: String, fresh: Boolean = false): Server = {
-    val srv = if (fresh) spawn() else borrow()
-    val req = s"""{"db":${jstr(db)},"ro":$ro,"op":"$op"$extra}"""
-    try {
-      srv.writer.write(req); srv.writer.write("\n"); srv.writer.flush()
-    } catch {
-      case e: java.io.IOException => srv.destroy(); throw e
+  /** Send a request on `db` (a [[key]]) to a pooled server; a read holds
+    * a read permit of the file's fence until the request ends. A pooled
+    * server that died while idle gets the request once more, fresh. */
+  private def request(db: String, op: String, extra: String, read: Boolean,
+      fresh: Boolean = false): Server = {
+    val own = if (read) { val f = fence(db); f.read(); List(f) } else Nil
+    val (srv, extra0) =
+      try (if (fresh) None else borrow(db, read)).getOrElse((spawn(), Nil))
+      catch { case e: Throwable => own.foreach(_.unread()); throw e }
+    srv.begin(own ++ extra0)
+    srv.held = if (read) db else null
+    try srv.send(s"""{"db":${jstr(db)},"op":"$op"$extra}""")
+    catch {
+      case e: java.io.IOException =>
+        srv.destroy()
+        // a pooled server that died while idle: the request never
+        // reached it
+        if (!srv.idled) throw e
+        return request(db, op, extra, read, fresh = true)
     }
     srv
   }
 
   /** A control op: its metadata line's `key` field. */
-  private def control(db: String, ro: Boolean, op: String, extra: String,
-      key: String): JsonNode = {
-    val srv = request(db, ro, op, extra)
+  private def control(db: String, op: String, extra: String, key: String,
+      read: Boolean): JsonNode = {
+    val srv = request(db, op, extra, read)
     val meta = srv.readJson()
     if (!meta.has(key)) {
       srv.terminate(meta) // throws on an err line
@@ -809,16 +956,54 @@ object DuckDbProcess {
     meta.get(key)
   }
 
+  /** Have every idle server that holds `db` close it. The caller holds the
+    * write side of the file's fence, so no read of `db` is in flight and
+    * none can start. A server that is gone is waited out instead: its file
+    * lock ends with its process. */
+  private def releaseIdle(db: String): Unit = {
+    val holders = idle.synchronized {
+      val hs = idle.asScala.filter(_.held == db).toList
+      hs.foreach(idle.remove)
+      hs
+    }
+    holders.foreach { s =>
+      try s.send("""{"op":"release"}""")
+      catch { case _: java.io.IOException => s.destroy() }
+    }
+    holders.foreach { s =>
+      s.held = null
+      try { s.terminate(s.readJson()); () }
+      catch { case _: Exception => s.destroy(); s.awaitExit() }
+    }
+  }
+
+  /** Run `body` on the write side of `db`'s fence (`db` as given; `body`
+    * gets its [[key]]), after every idle holder of the file has closed
+    * it. */
+  private def writing[A](db: String)(body: String => A): A = {
+    val k = key(db)
+    val f = fence(k)
+    f.write()
+    try { releaseIdle(k); body(k) }
+    finally f.unwrite()
+  }
+
   /** A streaming query response. The request is sent here; the stream is
     * opened lazily, at the first [[schema]] or row, after the result has
     * registered its cancellation: a killed task, or an interrupted caller
     * off a task, destroys the worker ([[RemoteCancel]]). Owns one
     * `RootAllocator`: [[close]] releases the reader, then the allocator
-    * (which throws on leaked buffers); [[cancel]] only kills the worker. */
+    * (which throws on leaked buffers); [[cancel]] only kills the worker.
+    * The request holds a read permit of its file's [[Fence]] until the
+    * terminator; a result cancelled or closed before it kills the worker,
+    * whose exit gives the permit back. */
   final class ArrowResult private[DuckDbProcess] (first: Server,
       resend: () => Server) extends AutoCloseable {
 
     @volatile private var srv = first
+
+    /** The process id of the worker serving the request. */
+    def workerPid: Long = srv.proc.pid()
     @volatile private var cancelled = false
     private val watch = RemoteCancel.watch(() => cancel())
     private val allocator = new RootAllocator()
@@ -940,15 +1125,16 @@ object DuckDbProcess {
   }
 
   def query(db: String, sql: String, threads: Int = 0): ArrowResult = {
+    val k = key(db)
     val extra = s""","sql":${jstr(sql)}""" +
       (if (threads > 0) s""","threads":$threads""" else "")
-    new ArrowResult(request(db, ro = true, "query", extra),
-      () => request(db, ro = true, "query", extra, fresh = true))
+    new ArrowResult(request(k, "query", extra, read = true),
+      () => request(k, "query", extra, read = true, fresh = true))
   }
 
   def describe(db: String, sql: String): StructType = {
-    val cols = control(db, ro = true, "describe",
-      s""","sql":${jstr(sql)}""", "cols")
+    val cols = control(key(db), "describe", s""","sql":${jstr(sql)}""",
+      "cols", read = true)
     StructType((0 until cols.size()).map { i =>
       val pair = cols.get(i)
       StructField(pair.get(0).asText(), catalystType(pair.get(1).asText()))
@@ -956,14 +1142,29 @@ object DuckDbProcess {
   }
 
   def tables(db: String): Seq[String] = {
-    val names = control(db, ro = true, "tables", "", "tables")
+    val names = control(key(db), "tables", "", "tables", read = true)
     (0 until names.size()).map(names.get(_).asText())
   }
 
-  def exec(db: String, sqls: Seq[String]): Seq[Long] = {
+  /** Run `sqls` on one read-write connection, in order, and commit. Every
+    * write to a DuckDB file goes through here (or [[recreate]]): it takes
+    * the file's [[Fence]]. */
+  def exec(db: String, sqls: Seq[String]): Seq[Long] =
+    writing(db)(runExec(_, sqls))
+
+  /** Delete the file at `db` and build it anew with `sqls`, on the write
+    * side of its fence: no read sees the old file after this starts. */
+  def recreate(db: String, sqls: Seq[String]): Seq[Long] =
+    writing(db) { k =>
+      Seq(k, s"$k.wal").foreach(f =>
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
+      runExec(k, sqls)
+    }
+
+  private def runExec(db: String, sqls: Seq[String]): Seq[Long] = {
     val arr = sqls.map(jstr).mkString("[", ",", "]")
-    val counts = control(db, ro = false, "exec", s""","sqls":$arr""",
-      "counts")
+    val counts = control(db, "exec", s""","sqls":$arr""", "counts",
+      read = false)
     (0 until counts.size()).map(counts.get(_).asLong())
   }
 

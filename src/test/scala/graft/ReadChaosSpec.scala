@@ -4,7 +4,7 @@ import java.sql.DriverManager
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, count, lit, monotonically_increasing_id, sum}
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,10 +38,31 @@ class ReadChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  /** `spark.task.maxFailures` under `local[4, 4]`: the 4th failure of one
+    * task fails its job. */
+  private val TaskBudget = 4
+
   private val failedTasks = new java.util.concurrent.atomic.AtomicInteger
+  /** Running task attempts: task id → (stage, partition). */
+  private val runningTasks =
+    new java.util.concurrent.ConcurrentHashMap[Long, (Int, Int)]
+  /** Failures so far per task, keyed (stage, partition). */
+  private val taskFailures =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Integer]
   private val chaosListener = new SparkListener {
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.reason != org.apache.spark.Success) failedTasks.incrementAndGet()
+    override def onTaskStart(t: SparkListenerTaskStart): Unit = {
+      runningTasks.put(t.taskInfo.taskId, (t.stageId, t.taskInfo.index))
+      ()
+    }
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      runningTasks.remove(t.taskInfo.taskId)
+      if (t.reason != org.apache.spark.Success) {
+        failedTasks.incrementAndGet()
+        taskFailures.merge((t.stageId, t.taskInfo.index), 1,
+          (a, b) => Integer.valueOf(a.intValue() + b.intValue()))
+      }
+      ()
+    }
   }
 
   /** Every live python descendant of this JVM is a DuckDB wire worker —
@@ -219,6 +240,8 @@ class ReadChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
       "once (the offset-WAL claim under task failure)") {
     val e = DuckDbHarness.executor(spark, dir)
     Federation.registerCatalog(spark, "chaoscat", Seq(e))
+    // attempts an earlier test left unended once it removed the listener
+    runningTasks.clear()
     spark.sparkContext.addSparkListener(chaosListener)
     val N = 1500000L
     e.runDdl(RemoteTableRef.parse("chaos_stream"), Seq(
@@ -248,12 +271,27 @@ class ReadChaosSpec extends AnyFunSuite with BeforeAndAfterAll {
           }
           .option("checkpointLocation", ckpt).start()
         try {
-          // volley kills while the paced backfill streams (3 shots stay
-          // under the 4-failure task budget, as the batch chaos does)
+          // volley kills while the paced backfill streams, at most 3,
+          // 500 ms apart at the least. A volley fires only once the
+          // listener shows a running attempt no earlier volley met, and
+          // never while a running attempt's task is one failure from its
+          // budget: the volleys cannot spend one task's 4 failures
+          val met = scala.collection.mutable.Set.empty[Long]
           var volleys = 0
+          var last = System.nanoTime()
           while (q.isActive && volleys < 3 && seen.size() < N) {
-            Thread.sleep(500)
-            if (q.isActive) { killDuckWorkers(); volleys += 1 }
+            Thread.sleep(20)
+            val running = runningTasks.asScala.toMap
+            val aimed = running.keys.exists(!met.contains(_)) &&
+              running.values.forall(k =>
+                taskFailures.getOrDefault(k, 0) + 1 < TaskBudget)
+            if (aimed && System.nanoTime() - last >= 500000000L &&
+                q.isActive) {
+              met ++= running.keys
+              killDuckWorkers()
+              volleys += 1
+              last = System.nanoTime()
+            }
           }
           q.processAllAvailable()
         } finally {
