@@ -10,7 +10,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.arrow.memory.RootAllocator
 import org.apache.arrow.vector.ipc.ArrowStreamReader
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{SparkEnv, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -28,10 +28,11 @@ import graft.federation.sql.{RemoteCancel, RemoteTableRef, SchemaCoercion, Schem
   *
   * Execution model mirrors [[graft.federation.jdbc.JdbcSqlExecutor]]:
   * a split scan, or a scan under other operators, fetches its rows inside
-  * `RDD.compute`, where each task borrows its own pooled subprocess. Each
-  * subprocess keeps a READ-ONLY connection to the last database file it
-  * read open between requests, so a read pays for its query, not for
-  * opening the database and warming its buffer pool.
+  * `RDD.compute`, where each task borrows its own pooled subprocess. In
+  * the driver JVM (and so in local mode) each subprocess keeps a
+  * READ-ONLY connection to the last database file it read open between
+  * requests, so a read pays for its query, not for opening the database
+  * and warming its buffer pool.
   * DuckDB permits any number of concurrent read-only processes on one
   * file, so split scans fan out to n parallel engine cursors exactly like
   * n JDBC connections. A single-cursor scan at the root of a collected
@@ -43,10 +44,13 @@ import graft.federation.sql.{RemoteCancel, RemoteTableRef, SchemaCoercion, Schem
   * JDBC driver jar. Writes (DDL/DML/bulk ingest) take the single-writer
   * lock and therefore run driver-side, one statement batch per request,
   * behind the file's write fence in [[DuckDbProcess]]: a write waits for
-  * the reads in flight and has the idle warm connections to the file
-  * closed first, so every later read reopens the file and sees it. A
-  * process outside this JVM that writes the file meets those held
-  * read locks.
+  * the driver's reads in flight and has its idle warm connections to the
+  * file closed first, so every later read reopens the file and sees it.
+  * An executor JVM's subprocesses are out of the fence's sight, so they
+  * open the file per request and close it before the request ends; a
+  * write that meets one of their reads in flight retries its connect
+  * until the read is done (30 s bound). A process outside Spark that
+  * writes the file meets the driver's held read locks and fails.
   *
   * Results cross the boundary as ONE Arrow IPC stream per query (see
   * [[DuckDbProcess]] for the framing), read into Spark's
@@ -516,18 +520,20 @@ object DuckDbProcess {
     * out, flushed per request), so the python + duckdb + pyarrow import
     * is paid once per pooled server, not once per query. Reads keep ONE
     * read-only connection open across requests, to the last file read,
-    * so a pushed query meets a warm buffer pool and pays no connect.
-    * Per-connection settings are made at the connect; a request's own
-    * `threads` cap is set, or reset, on each request. That open
-    * connection holds DuckDB's shared file lock between requests, so
-    * writes go through the JVM's per-file [[Fence]]: the `release` op
-    * closes the warm connection, and `exec` closes it too before it opens
-    * the file read-write, then closes its write connection before its
-    * terminator. A request-level failure emits an `err` terminator, drops
-    * the warm connection and the loop keeps serving; only EOF on stdin
-    * (or a crash) ends the process. */
+    * so a pushed query meets a warm buffer pool and pays no connect; a
+    * read marked `"warm":false` (see [[warm]]) closes it before its
+    * terminator instead. Per-connection settings are made at the
+    * connect; a request's own `threads` cap is set, or reset, on each
+    * request. That open connection holds DuckDB's shared file lock
+    * between requests, so writes go through the JVM's per-file [[Fence]]:
+    * the `release` op closes the warm connection, and `exec` closes it
+    * too before it opens the file read-write, then closes its write
+    * connection before its terminator. A connect that meets a lock held
+    * outside the fence retries for up to 30 s. A request-level failure
+    * emits an `err` terminator, drops the warm connection and the loop
+    * keeps serving; only EOF on stdin (or a crash) ends the process. */
   private val Script = s"BATCH_ROWS = $BatchRows\n" +
-    """import sys, json
+    """import sys, json, time
       |import duckdb
       |import pyarrow as pa
       |import pyarrow.ipc
@@ -584,7 +590,19 @@ object DuckDbProcess {
       |    return pa.RecordBatch.from_arrays([norm(c) for c in b.columns],
       |                                      names=b.schema.names)
       |def connect(db, read_only):
-      |    c = duckdb.connect(db, read_only=read_only)
+      |    # the JVM's fence orders its own workers on a file; a lock held
+      |    # outside it (a cluster executor's read in flight, another
+      |    # process) is transient, so the connect retries within a bound
+      |    deadline = time.monotonic() + 30.0
+      |    while True:
+      |        try:
+      |            c = duckdb.connect(db, read_only=read_only)
+      |            break
+      |        except Exception as ce:
+      |            if ("lock" not in str(ce).lower()
+      |                    or time.monotonic() > deadline):
+      |                raise
+      |            time.sleep(0.05)
       |    # the progress bar writes "nnn%..." lines to STDOUT once a query
       |    # runs past its trigger (~2s — first seen on a 15M-row quantile
       |    # probe in the r10 boundary stress), corrupting the framing;
@@ -690,6 +708,10 @@ object DuckDbProcess {
       |                term = {"ok": len(rows)}
       |            else:
       |                raise ValueError("unknown op: " + op)
+      |            if not req.get("warm", True):
+      |                # a worker the writer's fence cannot see: it holds
+      |                # the file only while a read runs
+      |                drop()
       |    except Exception as e:
       |        # the next read after a failure starts on a clean connection
       |        drop()
@@ -765,6 +787,23 @@ object DuckDbProcess {
 
     def send(line: String): Unit = {
       writer.write(line); writer.write("\n"); writer.flush()
+    }
+
+    /** Have the idle server close the file it holds warm, before it
+      * serves a request on another file: the caller holds a read permit
+      * of that file, and gives it back once this returns. A server that
+      * fails here is gone, and so is its lock once it has exited. */
+    def dropHeld(): Unit = {
+      try {
+        send("""{"op":"release"}""")
+        val t = readJson()
+        if (!t.has("ok"))
+          throw new IllegalStateException(
+            s"duckdb wire framing violated — expected a terminator, got $t")
+      } catch {
+        case e: Exception => destroy(); awaitExit(); throw e
+      }
+      held = null
     }
 
     /** The process ended mid-response: never reusable. */
@@ -886,24 +925,35 @@ object DuckDbProcess {
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     idle.synchronized(idle.asScala.foreach(_.destroy()))))
 
-  /** An idle server for a request on `db`, and the fence permits it comes
-    * with. A read prefers a server holding `db`, then one holding nothing;
-    * a write takes one holding nothing (every holder of `db` has just been
-    * released). A server holding another file is taken only with a read
-    * permit of that file, kept to the request's end: it closes that file
-    * when the request arrives, and no write of the file may run before. */
-  private def borrow(db: String, read: Boolean): Option[(Server, List[Fence])] =
+  /** An idle server for a request on `db`. A read prefers a server
+    * holding `db`, then one holding nothing; a write takes one holding
+    * nothing (every holder of `db` has just been released). A server
+    * holding another file comes with a read permit of that file, so no
+    * write of it runs while the server still has it open: the caller has
+    * the server drop the file ([[Server.dropHeld]]), then gives the
+    * permit back. */
+  private def borrow(db: String, read: Boolean): Option[(Server, Option[Fence])] =
     idle.synchronized {
       idle.removeIf { s => val dead = !s.proc.isAlive; if (dead) s.destroy(); dead }
       val recent = idle.asScala.toList.reverse
       val pick = recent.find(s => read && s.held == db)
         .orElse(recent.find(_.held == null))
-        .map((_, List.empty[Fence]))
+        .map((_, Option.empty[Fence]))
         .orElse(recent.iterator.map(s => (s, fence(s.held)))
-          .collectFirst { case (s, f) if f.tryRead() => (s, List(f)) })
+          .collectFirst { case (s, f) if f.tryRead() => (s, Some(f)) })
       pick.foreach(p => idle.remove(p._1))
       pick
     }
+
+  /** Whether a read may leave its connection open after the request. Only
+    * where the fence sees every holder of a file: in the driver JVM, which
+    * runs every write (local mode included, where tasks run in it too),
+    * or with no Spark at all. An executor JVM of a cluster reads with a
+    * connection of one request, so it holds a file's lock only while a
+    * read runs, and a driver write that meets that lock waits it out in
+    * the worker's connect retry. */
+  private def warm: Boolean =
+    Option(SparkEnv.get).forall(_.executorId == "driver")
 
   private def spawn(): Server =
     new Server(new ProcessBuilder("python3", "-c", Script).start())
@@ -920,26 +970,24 @@ object DuckDbProcess {
     else { s.begin(h); s.destroy() }
   }
 
-  /** Send a request on `db` (a [[key]]) to a pooled server; a read holds
-    * a read permit of the file's fence until the request ends. A pooled
-    * server that died while idle gets the request once more, fresh. */
+  /** Send a request on `db` (a [[key]]) to a pooled server (a `fresh`
+    * one: a new process); a read holds a read permit of the file's fence
+    * until the request ends. */
   private def request(db: String, op: String, extra: String, read: Boolean,
-      fresh: Boolean = false): Server = {
+      keep: Boolean = warm, fresh: Boolean = false): Server = {
     val own = if (read) { val f = fence(db); f.read(); List(f) } else Nil
-    val (srv, extra0) =
-      try (if (fresh) None else borrow(db, read)).getOrElse((spawn(), Nil))
-      catch { case e: Throwable => own.foreach(_.unread()); throw e }
-    srv.begin(own ++ extra0)
-    srv.held = if (read) db else null
-    try srv.send(s"""{"db":${jstr(db)},"op":"$op"$extra}""")
-    catch {
-      case e: java.io.IOException =>
-        srv.destroy()
-        // a pooled server that died while idle: the request never
-        // reached it
-        if (!srv.idled) throw e
-        return request(db, op, extra, read, fresh = true)
-    }
+    val srv =
+      try (if (fresh) None else borrow(db, read)) match {
+        case Some((s, other)) =>
+          other.foreach(f => try s.dropHeld() finally f.unread())
+          s
+        case None => spawn()
+      } catch { case e: Throwable => own.foreach(_.unread()); throw e }
+    srv.begin(own)
+    srv.held = if (read && keep) db else null
+    val cold = if (read && !keep) ""","warm":false""" else ""
+    try srv.send(s"""{"db":${jstr(db)},"op":"$op"$extra$cold}""")
+    catch { case e: java.io.IOException => srv.destroy(); throw e }
     srv
   }
 
@@ -967,13 +1015,8 @@ object DuckDbProcess {
       hs
     }
     holders.foreach { s =>
-      try s.send("""{"op":"release"}""")
-      catch { case _: java.io.IOException => s.destroy() }
-    }
-    holders.foreach { s =>
-      s.held = null
-      try { s.terminate(s.readJson()); () }
-      catch { case _: Exception => s.destroy(); s.awaitExit() }
+      try { s.dropHeld(); release(s) }
+      catch { case _: Exception => () } // gone, and its lock with it
     }
   }
 
@@ -1124,12 +1167,18 @@ object DuckDbProcess {
     }
   }
 
-  def query(db: String, sql: String, threads: Int = 0): ArrowResult = {
+  def query(db: String, sql: String, threads: Int = 0): ArrowResult =
+    query(db, sql, threads, warm)
+
+  /** A query whose worker keeps its connection open after it (`keep`,
+    * see [[warm]]) or closes it before the terminator. */
+  private[graft] def query(db: String, sql: String, threads: Int,
+      keep: Boolean): ArrowResult = {
     val k = key(db)
     val extra = s""","sql":${jstr(sql)}""" +
       (if (threads > 0) s""","threads":$threads""" else "")
-    new ArrowResult(request(k, "query", extra, read = true),
-      () => request(k, "query", extra, read = true, fresh = true))
+    new ArrowResult(request(k, "query", extra, read = true, keep),
+      () => request(k, "query", extra, read = true, keep, fresh = true))
   }
 
   def describe(db: String, sql: String): StructType = {

@@ -59,6 +59,29 @@ class DuckDbFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def msSince(t0: Long): Double = (System.nanoTime() - t0) / 1e6
 
+  /** A python process outside the JVM that runs `code` with `c`, a
+    * connection to `db` (read-only when `ro`), prints `held`, then runs
+    * `after` and exits. Returns once `held` is printed (or the process
+    * ended), with the process and the line it printed. */
+  private def outside(db: String, ro: Boolean, code: String,
+      after: String = ""): (java.lang.Process, String) = {
+    val readOnly = if (ro) "True" else "False"
+    val p = new java.lang.ProcessBuilder("python3", "-c",
+      s"""import duckdb, time
+         |try:
+         |    c = duckdb.connect('$db', read_only=$readOnly)
+         |    $code
+         |    print("held", flush=True)
+         |    $after
+         |    c.close()
+         |except Exception as e:
+         |    print("error: %s" % e, flush=True)
+         |""".stripMargin).redirectErrorStream(true).start()
+    val line = new java.io.BufferedReader(new java.io.InputStreamReader(
+      p.getInputStream)).readLine()
+    (p, String.valueOf(line))
+  }
+
   test("a threads-capped request leaves no cap on the worker's warm " +
       "connection") {
     val db = fresh("threads")
@@ -103,9 +126,15 @@ class DuckDbFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
       catch { case e: Throwable => err = e }
       finally done.countDown())
     writer.start()
-    try assert(!done.await(1, TimeUnit.SECONDS),
-      s"the write did not wait for the open read (error: $err)")
-    finally r.close()
+    try {
+      assert(!done.await(1, TimeUnit.SECONDS),
+        s"the write did not wait for the open read (error: $err)")
+      // at the fence, not in the worker's connect retry
+      assert(writer.getStackTrace.exists(
+        _.getClassName.endsWith("DuckDbProcess$Fence")),
+        "the write is not waiting at the file's fence: " +
+          writer.getStackTrace.take(8).mkString(" <- "))
+    } finally r.close()
     val t0 = System.nanoTime()
     assert(done.await(10, TimeUnit.SECONDS), "the write never ran")
     assert(err == null, s"the write failed: $err")
@@ -168,5 +197,59 @@ class DuckDbFenceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the read closed: the fence is free again
     DuckDbProcess.exec(db, Seq("INSERT INTO t VALUES (5)"))
     assert(ids(db)._2 == Seq(0L, 1L, 2L, 5L))
+  }
+
+  test("a read on a worker warm on another file gives that file's fence " +
+      "back before it runs") {
+    val f = fresh("cross_f")
+    val g = fresh("cross_g")
+    // one read of f more than there are workers, all open at once: every
+    // idle worker is borrowed, so once drained every idle worker holds f
+    val n = ProcessHandle.current().children().count().toInt + 1
+    val rs = (1 to n).map(_ => DuckDbProcess.query(f, "SELECT id FROM t"))
+    val warmOnF = rs.map(_.workerPid).toSet
+    rs.foreach(r => try r.rows.foreach(_ => ()) finally r.close())
+    val r = halfRead(g)
+    try {
+      assert(warmOnF.contains(r.workerPid),
+        "the read of g must run on a worker that was warm on f")
+      val t0 = System.nanoTime()
+      DuckDbProcess.exec(f, Seq("INSERT INTO t VALUES (8)"))
+      assert(msSince(t0) < 10000,
+        s"the write of f waited ${msSince(t0)} ms on a read of g")
+    } finally r.close()
+    assert(ids(f)._2 == Seq(0L, 1L, 2L, 8L))
+  }
+
+  test("a read that must not keep its connection leaves no lock behind; " +
+      "a warm read keeps one") {
+    val db = fresh("cold")
+    val r = DuckDbProcess.query(db, "SELECT id FROM t ORDER BY id", 0,
+      keep = false)
+    try assert(r.rows.map(_.getLong(0)).toVector == Seq(0L, 1L, 2L))
+    finally r.close()
+    val (p1, l1) = outside(db, ro = false, "c.execute('INSERT INTO t VALUES (3)')")
+    p1.waitFor()
+    assert(l1 == "held", s"a writer outside the JVM met a lock: $l1")
+    // a warm read holds the shared lock between requests
+    assert(ids(db)._2 == Seq(0L, 1L, 2L, 3L))
+    val (p2, l2) = outside(db, ro = false, "pass")
+    p2.waitFor()
+    assert(l2.contains("lock"), s"no lock held after a warm read: $l2")
+  }
+
+  test("a write that meets a lock held outside the fence waits it out") {
+    val db = fresh("retry")
+    // a reader the fence cannot see, as a cluster executor's read is
+    val (p, l) = outside(db, ro = true, "c.execute('SELECT 1')",
+      after = "time.sleep(1.5)")
+    try {
+      assert(l == "held", l)
+      val t0 = System.nanoTime()
+      DuckDbProcess.exec(db, Seq("INSERT INTO t VALUES (6)"))
+      assert(msSince(t0) > 500,
+        s"the write ran in ${msSince(t0)} ms while the lock was held")
+    } finally { p.waitFor(); () }
+    assert(ids(db)._2 == Seq(0L, 1L, 2L, 6L))
   }
 }
