@@ -99,17 +99,8 @@ object RetryStress {
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType))))
 
-    // WRITE leg 1: parquet-staged bulk ingest with a REAL task retry
-    // inside the staging write (Spark's commit protocol owns dedup there;
-    // the engine-side INSERT..read_parquet sees one committed file set)
-    val ddf = spark.range(0, n, 1, 4).map { i =>
-      val tc = TaskContext.get()
-      if (tc != null && tc.partitionId() == 1 && tc.attemptNumber() == 0 &&
-          i % 25000L == 4000L)
-        throw new RuntimeException("injected duckdb staging failure")
-      i
-    }.toDF("k")
-    dex.insertInto(dref, ddf)
+    // the bulk ingest under a real task retry is DuckDbIngestSpec's
+    dex.insertInto(dref, spark.range(0, n, 1, 4).toDF("k"))
 
     // READ leg: 4 range-split cursors, each a POOLED subprocess server;
     // attempt 0 dies mid-stream (after rows have flowed), which must
@@ -135,7 +126,7 @@ object RetryStress {
     val probeOk = poolProbe.getLong(0) == n &&
       poolProbe.getDecimal(1).longValueExact() == n * (n - 1) / 2
 
-    // WRITE leg 2: epoch-fenced streaming sink replay — re-delivery of a
+    // WRITE leg: epoch-fenced streaming sink replay — re-delivery of a
     // committed microbatch (routine on recovery) must be a no-op, and the
     // fence must ride the SAME transaction as the rows
     val eref = graft.federation.sql.RemoteTableRef.parse("retry_duck_epoch")

@@ -152,7 +152,7 @@ object ScaleStress {
     // r10 judge task 1: scale-stress the FEDERATION BOUNDARY itself —
     // every prior stress measured local operator pipelines; no remote
     // boundary had ever carried more than sf0.1. A 15M-row fact table is
-    // parquet-staged into live DuckDB, then the four boundary mechanisms
+    // bulk-ingested into live DuckDB, then the four boundary mechanisms
     // are measured: 16-way quantile-split scans (wall + per-cursor
     // balance), a split scan feeding a local broadcast join, a
     // runtime-filtered fragment (binds disabled to isolate the IN-list

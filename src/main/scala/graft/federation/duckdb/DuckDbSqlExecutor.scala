@@ -39,11 +39,13 @@ import graft.federation.sql.{RemoteCancel, RemoteTableRef, SchemaCoercion, Schem
   * plan, and every planning probe, reads on the calling driver thread
   * through [[queryRows]] instead: one round trip with no Spark job around
   * it.
-  * On a cluster this requires the database file on shared storage and
-  * python+duckdb+pyarrow on executors, the same deployment contract as a
-  * JDBC driver jar. Writes (DDL/DML/bulk ingest) take the single-writer
-  * lock and therefore run driver-side, one statement batch per request,
-  * behind the file's write fence in [[DuckDbProcess]]: a write waits for
+  * On a cluster this requires the database file's directory on shared
+  * storage and python+duckdb+pyarrow on executors, the same deployment
+  * contract as a JDBC driver jar. Writes (DDL/DML/bulk ingest) take the
+  * single-writer lock and therefore run driver-side, one statement batch
+  * per request, behind the file's write fence in [[DuckDbProcess]]; a bulk
+  * ingest's rows reach that request as Arrow IPC files its Spark tasks
+  * wrote beside the database file ([[ingest]]). A write waits for
   * the driver's reads in flight and has its idle warm connections to the
   * file closed first, so every later read reopens the file and sees it.
   * An executor JVM's subprocesses are out of the fence's sight, so they
@@ -53,7 +55,9 @@ import graft.federation.sql.{RemoteCancel, RemoteTableRef, SchemaCoercion, Schem
   * writes the file meets the driver's held read locks and fails.
   *
   * Results cross the boundary as ONE Arrow IPC stream per query (see
-  * [[DuckDbProcess]] for the framing), read into Spark's
+  * [[DuckDbProcess]] for the framing), and ingested rows as Arrow IPC
+  * streams the other way, so Arrow is this engine's one wire format. Read
+  * results go into Spark's
   * `ArrowColumnVector`s — the reference's executor contract streams Arrow
   * record batches the same way (src/sql/executor.rs:51-56) and coerces
   * them to the declared schema in one place
@@ -322,58 +326,57 @@ final class DuckDbSqlExecutor(
     e.isInstanceOf[DuckDbProcess.WorkerLost]
 
   /** Driver-side write batch: the statements run on ONE connection holding
-    * the single-writer lock, in order. Returns per-statement change counts
-    * (-1 where the engine reports none, e.g. DDL). */
-  def runWrite(sqls: Seq[String]): Seq[Long] = {
+    * the single-writer lock, in order. With `arrow` (Arrow IPC stream
+    * files of one schema), the statements can read those files' rows, in
+    * the order given, as the relation `__ingest`. Returns per-statement
+    * change counts (-1 where the engine reports none, e.g. DDL). */
+  def runWrite(sqls: Seq[String], arrow: Seq[String] = Nil): Seq[Long] = {
     dmlLog.synchronized { dmlLog ++= sqls }
-    DuckDbProcess.exec(dbPath, sqls)
+    DuckDbProcess.exec(dbPath, sqls, arrow)
   }
 
-  /** Distributed-write path: at cluster scale rows land as a parquet
-    * staging directory written by N parallel Spark tasks (Spark's commit
-    * protocol makes that half retry-idempotent), then ONE driver-side
-    * `INSERT INTO t SELECT … FROM read_parquet(…)` bulk-ingests it —
-    * DuckDB is a single-writer engine, so a per-task INSERT fan-in like
-    * the JDBC path's is impossible by design, and parquet staging is the
-    * engine's own recommended bulk path. With an epoch, the fence row
-    * rides the SAME engine transaction as the bulk ingest (`BEGIN …
-    * COMMIT` through the one write connection of an `exec` request; a
-    * failure mid-list surfaces as the request error and the open
-    * transaction rolls back when that connection closes). */
+  /** Distributed-write path, over the same Arrow wire reads use. ONE
+    * Spark job encodes the frame with Spark's own Arrow encoder, and each
+    * task writes its partition as one Arrow IPC stream file into a
+    * staging directory beside the database file (so the file's directory
+    * on shared storage is the whole cluster contract), under a temporary
+    * name, renamed when complete. The driver takes exactly the paths the
+    * job returned, one per partition from the attempt the scheduler
+    * accepted, so a failed or duplicate attempt's file is never read.
+    * Rows never pass through the driver. Only after that job (so a frame
+    * that reads this file holds no read of it) does ONE `exec` request
+    * insert the rows from those files under the write fence — DuckDB is a
+    * single-writer engine, so a per-task INSERT fan-in like the JDBC
+    * path's is impossible by design. With an epoch, the fence row rides
+    * the SAME engine transaction as the bulk ingest (`BEGIN … COMMIT`
+    * through the one write connection of an `exec` request; a failure
+    * mid-list surfaces as the request error and the open transaction
+    * rolls back when that connection closes). */
   override protected def ingest(ref: RemoteTableRef,
       df: org.apache.spark.sql.DataFrame, epoch: Option[Long]): Unit = {
     val schema = targetSchema(ref, df)
-    val stage = java.nio.file.Files
-      .createTempDirectory(stagingRoot, "ingest_").toString
-    // positional alignment: rename to the target's column names so the
-    // by-name parquet read cannot mispair
+    val db = java.nio.file.Paths.get(dbPath).toAbsolutePath
+    val stage = java.nio.file.Files.createTempDirectory(db.getParent,
+      s"${db.getFileName}.ingest-")
     try {
+      val dir = stage.toString
+      // positional alignment: rename to the target's column names, which
+      // the INSERT reads the stream's columns by
       val renamed = df.toDF(schema.fieldNames.toIndexedSeq: _*)
-      renamed.write.mode("overwrite").parquet(stage)
+      val files = org.apache.spark.sql.GraftShims.arrowPartitions(renamed) {
+        p => DuckDbSqlExecutor.stagePartition(dir, p)
+      }
       val cols = schema.fieldNames
         .map(dialect.quoteIfNeeded).mkString(", ")
       val insert = s"INSERT INTO ${ref.sql(dialect)} ($cols) " +
-        s"SELECT $cols FROM read_parquet('$stage/*.parquet')"
+        s"SELECT $cols FROM ${DuckDbProcess.IngestRelation}"
       runWrite(epoch match {
         case None => Seq(insert)
         case Some(id) => Seq("BEGIN", insert,
           s"INSERT INTO ${epochTableRef(ref).sql(dialect)} VALUES ($id)",
           "COMMIT")
-      })
-    } finally deleteRecursively(new java.io.File(stage))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
-  private lazy val stagingRoot = {
-    val p = java.nio.file.Paths.get("target", "duckdb-staging")
-    java.nio.file.Files.createDirectories(p)
-    p
+      }, files.toIndexedSeq)
+    } finally DuckDbSqlExecutor.removeStage(stage)
   }
 
   override def insertFromQuery(ref: RemoteTableRef,
@@ -467,12 +470,54 @@ final class DuckDbSqlExecutor(
   }
 }
 
+object DuckDbSqlExecutor {
+
+  /** Task side of an ingest: write the task's partition to
+    * `part-<partition>-<attempt>.arrow` in `dir`, under a temporary name
+    * renamed when the stream is complete, and return the file's path. A
+    * failed or killed attempt deletes its temporary file; one that starts
+    * after the driver removed `dir` fails to create it. */
+  private[duckdb] def stagePartition(dir: String,
+      p: org.apache.spark.sql.GraftShims.ArrowPartition): String = {
+    import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+    val tc = TaskContext.get()
+    val name = s"part-${tc.partitionId()}-${tc.attemptNumber()}.arrow"
+    val done = Paths.get(dir, name)
+    val tmp = Paths.get(dir, s".$name.tmp")
+    try {
+      val out = new java.io.BufferedOutputStream(Files.newOutputStream(tmp,
+        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE), 1 << 16)
+      try p.writeTo(out) finally out.close()
+      Files.move(tmp, done, StandardCopyOption.ATOMIC_MOVE)
+    } catch {
+      case e: Throwable => Files.deleteIfExists(tmp); throw e
+    }
+    done.toString
+  }
+
+  /** Delete an ingest's staging directory with what is in it. A task of a
+    * failed job can still be running when the job returns, so this goes
+    * on until the directory itself is gone: after that, no task can put a
+    * file there. */
+  private[duckdb] def removeStage(dir: java.nio.file.Path): Unit = {
+    var tries = 0
+    while (java.nio.file.Files.exists(dir) && tries < 100) {
+      Option(dir.toFile.listFiles()).foreach(_.foreach(_.delete()))
+      if (!dir.toFile.delete()) Thread.sleep(10)
+      tries += 1
+    }
+  }
+}
+
 /** The subprocess protocol. A request is one JSON line on stdin. The
   * response on stdout is binary, and its first byte names its form:
   *
   *  - `{` — JSON control lines: the metadata line of `describe`
   *    (`{"cols":…}`), `tables` (`{"tables":…}`) or `exec`
-  *    (`{"counts":…}`), then the terminator `{"ok":n}`; `release`
+  *    (`{"counts":…}`), then the terminator `{"ok":n}`. An `exec` request
+  *    may carry `"arrow": [paths]`, Arrow IPC stream files of one schema:
+  *    its statements then read their rows, file after file, as the
+  *    relation [[IngestRelation]] on the write connection; `release`
   *    (close the warm read connection) answers with the terminator alone;
   *    a failed request is the single line `{"err":…}`.
   *  - `0xFF` — the `query` body: one Arrow IPC stream (schema, record
@@ -511,6 +556,10 @@ object DuckDbProcess {
   /** Rows per Arrow record batch (`fetch_arrow_reader`'s batch size). */
   val BatchRows: Int = 65536
 
+  /** The relation an `exec` request's statements read its Arrow files'
+    * rows from. */
+  val IngestRelation: String = "__ingest"
+
   /** The worker process ended mid-response (killed, crashed): the request
     * may be re-run on a fresh worker, unlike an engine error. */
   final class WorkerLost(msg: String) extends IllegalStateException(msg)
@@ -528,11 +577,15 @@ object DuckDbProcess {
     * between requests, so writes go through the JVM's per-file [[Fence]]:
     * the `release` op closes the warm connection, and `exec` closes it
     * too before it opens the file read-write, then closes its write
-    * connection before its terminator. A connect that meets a lock held
+    * connection before its terminator. An `exec` with an `arrow` list
+    * registers ONE `RecordBatchReader` over those files, each memory
+    * mapped when the scan reaches it, as `__ingest` on its write
+    * connection before its statements run. A connect that meets a lock held
     * outside the fence retries for up to 30 s. A request-level failure
     * emits an `err` terminator, drops the warm connection and the loop
     * keeps serving; only EOF on stdin (or a crash) ends the process. */
-  private val Script = s"BATCH_ROWS = $BatchRows\n" +
+  private val Script =
+    s"BATCH_ROWS = $BatchRows\nINGEST = \"$IngestRelation\"\n" +
     """import sys, json, time
       |import duckdb
       |import pyarrow as pa
@@ -585,6 +638,14 @@ object DuckDbProcess {
       |    if t.id == "time with time zone": return True
       |    return t.id in ("list", "array", "struct", "map", "union") and any(
       |        zoned_time(c) for _, c in t.children)
+      |def ingest_reader(paths):
+      |    # the files' batches in the order given, as one reader; a file is
+      |    # mapped when the scan reaches it, and a batch keeps its mapping
+      |    def batches():
+      |        for p in paths:
+      |            yield from pa.ipc.open_stream(pa.memory_map(p))
+      |    schema = pa.ipc.open_stream(pa.memory_map(paths[0])).schema
+      |    return pa.RecordBatchReader.from_batches(schema, batches())
       |def norm_batch(b):
       |    if not any(needs(c.type) for c in b.columns): return b
       |    return pa.RecordBatch.from_arrays([norm(c) for c in b.columns],
@@ -637,6 +698,8 @@ object DuckDbProcess {
       |            drop()
       |            w = connect(req["db"], False)
       |            try:
+      |                if "arrow" in req:
+      |                    w.register(INGEST, ingest_reader(req["arrow"]))
       |                counts = []
       |                for s in req["sqls"]:
       |                    cur = w.execute(s)
@@ -1195,11 +1258,14 @@ object DuckDbProcess {
     (0 until names.size()).map(names.get(_).asText())
   }
 
-  /** Run `sqls` on one read-write connection, in order, and commit. Every
-    * write to a DuckDB file goes through here (or [[recreate]]): it takes
-    * the file's [[Fence]]. */
-  def exec(db: String, sqls: Seq[String]): Seq[Long] =
-    writing(db)(runExec(_, sqls))
+  /** Run `sqls` on one read-write connection, in order, and commit; with
+    * `arrow` (paths of Arrow IPC stream files of one schema), the
+    * statements read those files' rows, in order, as [[IngestRelation]].
+    * Every write to a DuckDB file goes through here (or [[recreate]]): it
+    * takes the file's [[Fence]]. */
+  def exec(db: String, sqls: Seq[String],
+      arrow: Seq[String] = Nil): Seq[Long] =
+    writing(db)(runExec(_, sqls, arrow))
 
   /** Delete the file at `db` and build it anew with `sqls`, on the write
     * side of its fence: no read sees the old file after this starts. */
@@ -1207,13 +1273,15 @@ object DuckDbProcess {
     writing(db) { k =>
       Seq(k, s"$k.wal").foreach(f =>
         java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f)))
-      runExec(k, sqls)
+      runExec(k, sqls, Nil)
     }
 
-  private def runExec(db: String, sqls: Seq[String]): Seq[Long] = {
-    val arr = sqls.map(jstr).mkString("[", ",", "]")
-    val counts = control(db, "exec", s""","sqls":$arr""", "counts",
-      read = false)
+  private def runExec(db: String, sqls: Seq[String],
+      arrow: Seq[String]): Seq[Long] = {
+    def list(xs: Seq[String]) = xs.map(jstr).mkString("[", ",", "]")
+    val files = if (arrow.isEmpty) "" else s""","arrow":${list(arrow)}"""
+    val counts = control(db, "exec", s""","sqls":${list(sqls)}$files""",
+      "counts", read = false)
     (0 until counts.size()).map(counts.get(_).asLong())
   }
 

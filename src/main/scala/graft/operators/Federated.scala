@@ -1221,7 +1221,7 @@ object Federated {
   /** Streaming ingest into the LIVE DuckDB engine, epoch-fenced: arriving
     * pages pass the in-flight C4 screen and survivors land through
     * [[graft.federation.duckdb.DuckDbSqlExecutor.insertIntoEpoch]] — the
-    * parquet-staged bulk path with the fence row in the SAME engine
+    * Arrow-staged bulk path with the fence row in the SAME engine
     * transaction, so `foreachBatch` re-delivery (recovery replay) is a
     * no-op. The read-back is a federated scan of what the stream
     * admitted; the oracle recomputes the C4 survivors in batch. */
@@ -1349,12 +1349,14 @@ object Federated {
       |  MAX(n_name) AS top_name
       |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** The distributed write path into a single-writer engine: rows land as
-    * a parquet staging directory written by N parallel Spark tasks (the
-    * cluster-scale half, covered by Spark's own commit protocol), then
-    * ONE driver-side `INSERT INTO … SELECT … FROM read_parquet(…)`
-    * bulk-ingests it — the engine's native bulk path, where the JDBC
-    * executor's per-task INSERT fan-in is impossible by design here. */
+  /** The distributed write path into a single-writer engine: N parallel
+    * Spark tasks each write their partition as one Arrow IPC stream file
+    * beside the database file (the cluster-scale half; the driver takes
+    * only the files of the attempts the scheduler accepted), then ONE
+    * driver-side `INSERT INTO … SELECT … FROM __ingest` reads them through
+    * an Arrow `RecordBatchReader` — the engine's native bulk path, where
+    * the JDBC executor's per-task INSERT fan-in is impossible by design
+    * here. */
   def duckWrite(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit, max}
     graft.federation.Federation.install(s)

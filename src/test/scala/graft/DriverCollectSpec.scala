@@ -250,6 +250,43 @@ class DriverCollectSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rootScan(d).metrics("numCoercedRows").value == 10)
   }
 
+  test("a DuckDB insertInto of rows past spark.driver.maxResultSize " +
+      "succeeds") {
+    Federation.install(spark)
+    val ref = graft.federation.sql.RemoteTableRef.parse("dc_ingest")
+    val src = spark.range(0, 50000, 1, 4)
+      .selectExpr("id", "md5(CAST(id AS STRING)) AS v")
+    duck.createTable(ref, src.schema)
+    try {
+      // the same rows as a driver result are over the 1 MiB limit
+      val e = intercept[org.apache.spark.SparkException](src.collect())
+      assert(e.getMessage.contains("spark.driver.maxResultSize"),
+        e.getMessage)
+      duck.insertInto(ref, src)
+      val r = duck.runQuery("SELECT COUNT(*), CAST(SUM(id) AS BIGINT), " +
+        "COUNT(DISTINCT v) FROM dc_ingest").head
+      assert(r == Row(50000L, 50000L * 49999L / 2, 50000L))
+    } finally duck.dropTable(ref)
+  }
+
+  test("an ingest of a split scan of the same DuckDB file does not wait " +
+      "on the file's fence") {
+    Federation.install(spark)
+    val h = DuckDbHarness.executor(spark, dir)
+    val src = Federation.remoteDataFrame(spark, "orders", h)
+      .select("o_orderkey", "o_totalprice")
+    assert(scansIn(src.queryExecution.executedPlan).exists(_.sqls.size > 1),
+      src.queryExecution.executedPlan)
+    val ref = graft.federation.sql.RemoteTableRef.parse("dc_orders_copy")
+    h.createTable(ref, src.schema)
+    try {
+      // a read of the file still open at the write fails after 30 s
+      h.insertInto(ref, src)
+      assert(h.runQuery("SELECT COUNT(*) FROM dc_orders_copy").head
+        .getLong(0) == spark.read.parquet(s"$dir/orders.parquet").count())
+    } finally h.dropTable(ref)
+  }
+
   test("a driver collect past spark.driver.maxResultSize fails") {
     Federation.install(spark)
     // 50k md5 rows on DuckDB, 2048 rows of 1000 chars on Derby: each over

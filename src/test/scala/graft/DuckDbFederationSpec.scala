@@ -462,7 +462,7 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.read.parquet(s"$dir/region.parquet").count())
   }
 
-  test("parquet-staged ingest + DELETE/UPDATE pushdown round-trip") {
+  test("Arrow-staged ingest + DELETE/UPDATE pushdown round-trip") {
     Federation.install(spark)
     val e = ex
     val ref = RemoteTableRef.parse("nation_rt")
@@ -515,9 +515,34 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the fence rode the SAME transaction as the rows
     val log = e.dmlLog.synchronized(e.dmlLog.toVector)
     val begin = log.lastIndexOf("BEGIN")
-    assert(begin >= 0 && log(begin + 1).contains("read_parquet") &&
+    assert(begin >= 0 && log(begin + 1) ==
+        "INSERT INTO epoch_target (k, v) SELECT k, v FROM __ingest" &&
       log(begin + 2).contains("__epochs") && log(begin + 3) == "COMMIT",
       log.takeRight(6).mkString("\n"))
+  }
+
+  test("epoch-fenced ingest of a zero-row microbatch commits its epoch") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    Federation.install(spark)
+    val e = ex
+    val ref = RemoteTableRef.parse("epoch_empty")
+    val schema = StructType(Seq(
+      StructField("k", LongType), StructField("v", StringType)))
+    e.createTable(ref, schema)
+    e.ensureEpochTable(ref)
+    // no partitions at all: the ingest still runs one empty stream
+    val empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema)
+    assert(e.insertIntoEpoch(ref, empty, epochId = 3L))
+    def epochs = e.runQuery("SELECT COUNT(*) FROM \"epoch_empty__epochs\" " +
+      "WHERE batch_id = 3").head.getLong(0)
+    assert(epochs == 1L)
+    // re-delivery of the committed epoch is a no-op
+    assert(!e.insertIntoEpoch(ref, empty, epochId = 3L))
+    assert(epochs == 1L)
+    assert(e.runQuery("SELECT COUNT(*) FROM \"epoch_empty\"")
+      .head.getLong(0) == 0L)
   }
 
   test("DML gates ship ONE DELETE / ONE UPDATE with the unparsed predicate") {
@@ -1010,8 +1035,7 @@ class DuckDbFederationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(1).isNullAt(1))
   }
 
-  test("insertInto stages nested types through parquet: " +
-      "array / struct / map write round-trip") {
+  test("insertInto round-trips array / struct / map through Arrow") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     Federation.install(spark)
